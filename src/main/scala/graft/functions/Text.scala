@@ -22,11 +22,6 @@ object Text {
     transform(sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
       i => concat_ws(" ", slice(toks, i, lit(k))))
 
-  /** Character k-gram rolling hashes (xxhash64 of each substring). */
-  def charShingleHashes(text: Column, k: Int): Column =
-    transform(sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => xxhash64(substring(text, i, lit(k))))
-
   /** Winnowing fingerprints (Schleimer et al., SIGMOD 2003): the
     * distinct per-window minima of the rolling k-gram hashes. Robust
     * document fingerprint for near-dup detection / provenance.

@@ -37,29 +37,28 @@ object Ann {
     * the entire O(|stream| × |broadcast|) cosine space would execute
     * in a single task while every other core idles, at ANY scale
     * until the file outgrows the split size. One round-robin exchange
-    * of the (small) streamed side buys full-width compute; it is a
-    * no-op once the scan already carries at least the session's
-    * parallelism (production multi-split layouts), so no corpus-sized
-    * frame is ever re-shuffled just to spread. Row placement does not
-    * affect any result downstream (pair joins are aggregated or
-    * window-ranked on key columns).
+    * of the (small) streamed side buys full-width compute. It fires
+    * only when the frame has fewer splits than the session has cores
+    * (`defaultParallelism`): a frame with a split per core already
+    * keeps every core busy, so a 100-split fact table is never
+    * re-shuffled just because `spark.sql.shuffle.partitions` is 200.
+    * Row placement does not affect any result downstream (pair joins
+    * are aggregated or window-ranked on key columns).
     *
     * Cost note: the partition-count probe pays one physical planning
     * pass (`queryExecution.toRdd`) per call — driver-side only, and the
     * callers apply it to small scan-rooted frames where that is
-    * microseconds against the task they unblock. The target is
-    * max(defaultParallelism, shuffle partitions): under dynamic
-    * allocation `defaultParallelism` can be read before executors
-    * register (a handful), which would have made the spread a silent
-    * no-op exactly when the single-split pass would idle the cluster —
-    * the session's shuffle-partition conf is the stable floor.
+    * microseconds against the task they unblock. When it fires, the
+    * target is max(defaultParallelism, shuffle partitions): under
+    * dynamic allocation `defaultParallelism` can be read before
+    * executors register (a handful), so the session's shuffle-partition
+    * conf is the stable floor for the width it spreads to.
     */
   private[graft] def spreadForCompute(df: DataFrame): DataFrame = {
-    val target = math.max(
-      df.sparkSession.sparkContext.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.queryExecution.toRdd.getNumPartitions < cores)
+      df.repartition(math.max(cores,
+        df.sparkSession.sessionState.conf.numShufflePartitions))
     else df
   }
 

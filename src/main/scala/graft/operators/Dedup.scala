@@ -362,7 +362,7 @@ object Dedup {
     * constant-fold away, leaving the plain batch tier.
     */
   private def collapseExpand(docs: DataFrame, textCol: String,
-                             idCol: String, score: String,
+                             idCol: String,
                              isDelta: Option[Column] = None)
                             (repPairs: DataFrame => DataFrame): DataFrame = {
     val keyed = docs.select(md5(col(textCol)).as("__h"),
@@ -385,13 +385,13 @@ object Dedup {
         col("__isd").as("__db")), Seq("doc_b"))
       .filter(col("__da") || col("__db"))
       .select(least(col("__ia"), col("__ib")).as("doc_a"),
-        greatest(col("__ia"), col("__ib")).as("doc_b"), col(score))
+        greatest(col("__ia"), col("__ib")).as("doc_b"), col("jaccard"))
     val intra = members.as("x")
       .join(members.as("y"), col("x.__rep") === col("y.__rep") &&
         col("x.__id") < col("y.__id") &&
         (col("x.__isd") || col("y.__isd")))
       .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"),
-        lit(1.0).as(score))
+        lit(1.0).as("jaccard"))
     cross.unionByName(intra)
   }
 
@@ -404,18 +404,8 @@ object Dedup {
                                  idCol: String = "doc_id", n: Int = 2,
                                  maxDf: Int = 50,
                                  threshold: Double = 0.2): DataFrame =
-    collapseExpand(docs, textCol, idCol, "jaccard")(reps =>
+    collapseExpand(docs, textCol, idCol)(reps =>
       ngramJaccardPairs(reps, textCol, idCol, n, maxDf, threshold))
-
-  /** [[containmentPairs]] behind the exact-hash pre-collapse; same
-    * saturation rationale as [[ngramJaccardPairsSaturated]].
-    */
-  def containmentPairsSaturated(docs: DataFrame, textCol: String = "text",
-                                idCol: String = "doc_id", n: Int = 2,
-                                maxDf: Int = 50,
-                                threshold: Double = 0.6): DataFrame =
-    collapseExpand(docs, textCol, idCol, "containment")(reps =>
-      containmentPairs(reps, textCol, idCol, n, maxDf, threshold))
 
   /** Incremental variant of the saturation tier, for streaming ingest
     * ([[graft.streaming.Streams.dedupIngestSaturatedSink]]): the
@@ -433,7 +423,7 @@ object Dedup {
       isDelta: org.apache.spark.sql.Column, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 2, maxDf: Int = 50,
       threshold: Double = 0.2): DataFrame =
-    collapseExpand(docs, textCol, idCol, "jaccard", Some(isDelta))(reps =>
+    collapseExpand(docs, textCol, idCol, Some(isDelta))(reps =>
       ngramJaccardPairsIncremental(reps, col("__repd"), textCol, idCol,
         n, maxDf, threshold))
 
@@ -750,9 +740,9 @@ object Dedup {
     // single task feeding the gram exchange while 31 cores idled.
     // Round-robin-spreading the doc rows first costs one doc-sized
     // exchange (~1.5 MB here vs the 39 MB gram exchange) and buys
-    // full-width gram hashing; a multi-split production corpus is
-    // left untouched (the repartition is conditional on the plan
-    // arriving UNDER the session parallelism).
+    // full-width gram hashing; a corpus with a split per core is left
+    // untouched (the repartition is conditional on the plan arriving
+    // with fewer splits than the session has cores).
     val grams = Ann.spreadForCompute(docs
       .filter(length(col(textCol)) >= k)
       .select(col(idCol).as("doc_id"), col(textCol).as("__t")))

@@ -221,6 +221,42 @@ object Graph {
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
       org.apache.spark.sql.SparkSession]
 
+  /** Parent confs that change a result or size plan nodes without an
+    * explicit count: re-synced into the sibling on every call, so a
+    * change the parent makes after first use never leaves the sibling
+    * computing with stale semantics.
+    */
+  private val layoutSyncedConfs = Seq("spark.sql.session.timeZone",
+    "spark.sql.ansi.enabled", "spark.sql.shuffle.partitions")
+
+  /** The AQE-off sibling of `spark`, in sync with it. The sibling copies
+    * every parent conf a session may set at first use (static and core
+    * confs reject the set and stay shared through the SparkContext);
+    * each call then re-syncs [[layoutSyncedConfs]] and carries over any
+    * planner strategy the parent gained since (e.g. from
+    * `GraftPlanBridge.ensureStrategy`), idempotently.
+    */
+  private[graft] def layoutSession(
+      spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = {
+    val ns = layoutSessions.synchronized {
+      Option(layoutSessions.get(spark)).getOrElse {
+        val ns = spark.newSession()
+        spark.conf.getAll.foreach { case (k, v) =>
+          try ns.conf.set(k, v)
+          catch { case _: org.apache.spark.sql.AnalysisException => () }
+        }
+        ns.conf.set("spark.sql.adaptive.enabled", "false")
+        layoutSessions.put(spark, ns)
+        ns
+      }
+    }
+    layoutSyncedConfs.foreach(k => ns.conf.set(k, spark.conf.get(k)))
+    spark.experimental.extraStrategies
+      .foreach(org.apache.spark.sql.GraftPlanBridge.ensureStrategy(ns, _))
+    ns
+  }
+
   /** Eager localCheckpoint that RETAINS the frame's physical layout.
     * Under AQE, `Dataset.localCheckpoint` materializes through an
     * AdaptiveSparkPlanExec and the resulting LogicalRDD records
@@ -237,26 +273,11 @@ object Graph {
     * ClusteredDistributions from the checkpoint blocks exactly as
     * before; joins inside the materialized subtree must carry explicit
     * broadcast/merge hints since AQE's runtime conversion is off for
-    * that one job. The sibling inherits the parent's session confs at
-    * first use; the partition-count conf is re-synced per call (the
-    * one conf that sizes plan nodes without explicit counts).
+    * that one job. The sibling session is [[layoutSession]].
     */
   private[graft] def checkpointKeepLayout(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val aqeOff = layoutSessions.synchronized {
-      Option(layoutSessions.get(spark)).getOrElse {
-        val ns = spark.newSession()
-        spark.conf.getAll.foreach { case (k, v) =>
-          try ns.conf.set(k, v)
-          catch { case _: Throwable => () } // static confs reject sets
-        }
-        ns.conf.set("spark.sql.adaptive.enabled", "false")
-        layoutSessions.put(spark, ns)
-        ns
-      }
-    }
-    aqeOff.conf.set("spark.sql.shuffle.partitions",
-      spark.sessionState.conf.numShufflePartitions)
+    val aqeOff = layoutSession(spark)
     val ck = org.apache.spark.sql.GraftPlanBridge
       .ofRows(aqeOff, org.apache.spark.sql.GraftPlanBridge.analyzed(df))
       .localCheckpoint(eager = true)

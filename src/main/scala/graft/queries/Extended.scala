@@ -250,8 +250,8 @@ object Extended {
     // The fact side is spread first (discovery-4, r16): at bench scale
     // lineitem reads as one parquet split, and with the dim broadcast
     // the whole probe + decimal rollup chain ran in that single task
-    // (r17 QBench: wall 1.45 s ≈ CPU 1.1 s); no-op on multi-split
-    // production layouts.
+    // (r17 QBench: wall 1.45 s ≈ CPU 1.1 s); no-op once the scan has a
+    // split per core.
     graft.operators.Skew.saltedJoin(
         graft.operators.Ann.spreadForCompute(Tables.lineitem(spark, dir)),
         Tables.orders(spark, dir).select($"o_orderkey", $"o_orderpriority"),

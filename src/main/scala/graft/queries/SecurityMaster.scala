@@ -910,7 +910,8 @@ object SecurityMaster {
     // compute-dense here (each trade range-scans its currency's whole
     // rate curve — only 4 keys), and the purchase slice arrives as one
     // parquet split, serializing that compute into a single task
-    // (see Ann.spreadForCompute — no-op on multi-split layouts)
+    // (see Ann.spreadForCompute — no-op once the slice has a split
+    // per core)
     val trades = graft.operators.Ann.spreadForCompute(
       ev.filter($"event_type" === "purchase")
         .select($"event_id", $"ccy", $"ts", $"value".as("amount")))

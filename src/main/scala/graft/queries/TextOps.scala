@@ -704,8 +704,8 @@ object TextOps {
     // arrives as ONE split at bench scale, so the tokenize+posexplode
     // below it ran as a single task feeding the doc_id window exchange
     // (r17 QBench: warm 1.46 s ≈ the serial tokenize). One doc-sized
-    // round-robin exchange buys full-width tokenization; no-op on
-    // multi-split production corpora.
+    // round-robin exchange buys full-width tokenization; no-op once the
+    // scan has a split per core.
     val bi = docBigrams(graft.operators.Ann.spreadForCompute(
       Tables.documents(spark, dir)))
     val uniCnt = bi.groupBy($"w1").agg(count(lit(1)).as("c1"))
@@ -907,8 +907,8 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     // spread the single-split doc scan before the shingle explode
     // (discovery-4, r16): the whole shingling pass otherwise runs as
-    // one task under the (source, gram) window exchange — no-op on
-    // multi-split production corpora
+    // one task under the (source, gram) window exchange — no-op once
+    // the scan has a split per core
     val grams = graft.operators.Ann.spreadForCompute(docs)
       .select($"doc_id", $"source",
         graft.functions.TextExpressions.shingleSet($"text", 2).as("g"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -16,8 +16,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
+  /** What the ordered replay ([[replayByUser]]) keys and sorts by;
+    * every event case class below carries these three fields.
+    */
+  sealed trait KeyedEvent {
+    def user_id: Long
+    def ts: java.sql.Timestamp
+    def event_id: Long
+  }
+
   case class SessionEvent(user_id: Long, ts: java.sql.Timestamp,
-                          value: Double, event_id: Long)
+                          value: Double, event_id: Long) extends KeyedEvent
   case class Session(user_id: Long, session_start: java.sql.Timestamp,
                      session_end: java.sql.Timestamp, n_events: Long,
                      session_value: Double)
@@ -71,6 +80,41 @@ object Streams {
     t.setNanos(((us % 1000000) * 1000).toInt)
     t
   }
+
+  /** The ordered per-user replay every order-dependent twin runs on:
+    * group the micro-batch by `user_id`, sort each user's events by
+    * (µs `ts`, `event_id`) — the batch twins' window order — restore
+    * the user's state, run the twin's `fold` over the sorted events,
+    * and save the state it returns (`None` leaves the stored state as
+    * it was). Update mode with no timeout: only users with events in
+    * the batch are visited, and each emits the rows its fold returns.
+    * A twin supplies its event type, state type, fold and emissions.
+    *
+    * In-order-per-key delivery caveat: the sort orders events WITHIN
+    * one micro-batch. Across batches the fold sees them in arrival
+    * order, so a twin converges to its batch query only when no event
+    * arrives in a later micro-batch than a successor of the same user.
+    * For an order-dependent recurrence (EWMA, drawdown, tick signs,
+    * cohort pins) such a late event is folded out of place — e.g. a
+    * late print understates a drawdown its successor already
+    * advanced — so a production deployment feeds these twins from a
+    * per-key-ordered source (e.g. compacted kafka partitions keyed by
+    * user) or buffers by watermark before the fold.
+    */
+  private def replayByUser[E <: KeyedEvent, S: Encoder, O: Encoder](
+      events: Dataset[E])(
+      fold: (Long, Seq[E], Option[S]) => (Option[S], Iterator[O]))
+      : Dataset[O] =
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (user: Long, evs: Iterator[E], state: GroupState[S]) =>
+          val (next, out) = fold(user,
+            evs.toSeq.sortBy(e => (micros(e.ts), e.event_id)),
+            state.getOption)
+          next.foreach(state.update)
+          out
+      }
 
   /** Stream-stream interval join (conversion attribution): each click
     * joined to the same user's purchases within the following hour.
@@ -312,8 +356,8 @@ object Streams {
         (dim("valid_to").isNull || trades("ts") < dim("valid_to")))
       .select(trades("user_id"), trades("ts"), trades("value"), dim("symbol"))
 
-  /** Streaming EWMA per user via mapGroupsWithState: state is ONE
-    * double per user regardless of stream length; each batch folds its
+  /** Streaming EWMA per user on [[replayByUser]]: state is ONE double
+    * per user regardless of stream length; each batch folds its
     * (sorted) events into the smoothed value and emits the user's
     * current EWMA — the incremental twin of the batch
     * [[graft.queries.TimeSeries.ewma]] (same fold order → identical
@@ -322,52 +366,15 @@ object Streams {
   def ewmaState(spark: SparkSession, events: DataFrame,
                 alpha: Double): Dataset[(Long, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[Double, (Long, Double)](GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[Double]) =>
-          var s = state.getOption.getOrElse(Double.NaN)
-          evs.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            s = if (s.isNaN) e.value else alpha * e.value + (1 - alpha) * s
-          }
-          state.update(s)
-          (user, graft.queries.TimeSeries.ewmaRound(s))
+    replayByUser[SessionEvent, Double, (Long, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var s = restored.getOrElse(Double.NaN)
+      sorted.foreach { e =>
+        s = if (s.isNaN) e.value else alpha * e.value + (1 - alpha) * s
       }
-  }
-
-  /** Streaming running-peak drawdown per user via mapGroupsWithState:
-    * state is (peak, maxDrawdown) — two doubles per user regardless of
-    * stream length. Each batch folds its events in (ts, event_id)
-    * order with the SAME single-FP-op steps as the batch
-    * [[graft.queries.Analytics.q73Drawdown]] (peak = max(peak, v);
-    * dd = peak - v), so with in-order delivery ACROSS batches the
-    * converged state is bit-identical to the batch result. Unlike peak
-    * (an order-insensitive max), drawdown is order-dependent: events
-    * arriving in a LATER micro-batch than a successor understate it,
-    * so a production deployment must feed this from a per-key-ordered
-    * source (e.g. compacted kafka partitions keyed by user) or buffer
-    * by watermark before the fold — same caveat as [[ewmaState]].
-    */
-  def drawdownState(spark: SparkSession,
-                    events: DataFrame): Dataset[(Long, Double, Double)] = {
-    import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[(Double, Double), (Long, Double, Double)](
-        GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Double)]) =>
-          var (peak, maxDd) = state.getOption
-            .getOrElse((Double.NegativeInfinity, 0.0))
-          evs.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            peak = math.max(peak, e.value)
-            maxDd = math.max(maxDd, peak - e.value)
-          }
-          state.update((peak, maxDd))
-          (user, maxDd, peak)
-      }
+      (Some(s), Iterator((user, graft.queries.TimeSeries.ewmaRound(s))))
+    }
   }
 
   /** Streaming ingest dedup — the streaming twin of q87's incremental
@@ -585,8 +592,9 @@ object Streams {
 
   case class PrintEvent(user_id: Long, ts: java.sql.Timestamp,
                         value: Double, event_id: Long, event_type: String)
+      extends KeyedEvent
 
-  /** s47 — streaming event study via flatMapGroupsWithState: the
+  /** s47 — streaming event study on [[replayByUser]]: the
     * incremental twin of batch q181. Per-instrument state is (last
     * price, running return moments (Σret, n), and the OPEN signup
     * frames) — the frame list is bounded at 3 entries by construction:
@@ -607,62 +615,54 @@ object Streams {
     * and the batch-identical partial sum for tape-end anchors. Return
     * sums fold in tape order on both engines — bit-identical before
     * the 6dp round. Same in-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def eventStudyStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double, Int, Boolean, Double, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        col("event_type"))
-      .as[PrintEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[
-        (Double, Double, Long, List[(Long, Double, Int, Boolean)]),
-        (Long, Long, Double, Int, Boolean, Double, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[PrintEvent],
-         state: GroupState[(Double, Double, Long,
-           List[(Long, Double, Int, Boolean)])]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (lastPx, sumRet, nRet, pend) =
-            state.getOption.getOrElse(
-              (Double.NaN, 0.0, 0L,
-                List.empty[(Long, Double, Int, Boolean)]))
-          val closed = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Double, Int, Boolean)]
-          sorted.foreach { e =>
-            val ret =
-              if (!lastPx.isNaN && e.value > 0.0 && lastPx > 0.0)
-                Some(e.value / lastPx - 1.0)
-              else None
-            // every print is a frame row for every open anchor
-            pend = pend.map { case (id, car, n, saw) =>
-              ret match {
-                case Some(r) => (id, car + r, n + 1, true)
-                case None    => (id, car, n + 1, saw)
-              }
-            }
-            val (done, open) = pend.partition(_._3 >= 3)
-            closed ++= done
-            pend = open
-            ret.foreach { r => sumRet += r; nRet += 1L }
-            if (e.event_type == "signup")
-              pend = pend :+ ((e.event_id, 0.0, 0, false))
-            lastPx = e.value
+    replayByUser[PrintEvent,
+      (Double, Double, Long, List[(Long, Double, Int, Boolean)]),
+      (Long, Long, Double, Int, Boolean, Double, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          col("event_type"))
+        .as[PrintEvent]) { (user, sorted, restored) =>
+      var (lastPx, sumRet, nRet, pend) = restored.getOrElse(
+        (Double.NaN, 0.0, 0L, List.empty[(Long, Double, Int, Boolean)]))
+      val closed = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Double, Int, Boolean)]
+      sorted.foreach { e =>
+        val ret =
+          if (!lastPx.isNaN && e.value > 0.0 && lastPx > 0.0)
+            Some(e.value / lastPx - 1.0)
+          else None
+        // every print is a frame row for every open anchor
+        pend = pend.map { case (id, car, n, saw) =>
+          ret match {
+            case Some(r) => (id, car + r, n + 1, true)
+            case None    => (id, car, n + 1, saw)
           }
-          state.update((lastPx, sumRet, nRet, pend))
-          // moments sentinel (event_id = -1): the benchmark mean uses
-          // the WHOLE tape, so every batch that advanced the moments
-          // must publish them even when no frame is open — otherwise a
-          // user whose last frame closed early would serve stale means
-          val sentinel =
-            if (sorted.nonEmpty)
-              Iterator((user, -1L, 0.0, 0, false, sumRet, nRet))
-            else Iterator.empty
-          (closed.iterator ++ pend.iterator).map {
-            case (id, car, n, saw) => (user, id, car, n, saw, sumRet, nRet)
-          } ++ sentinel
+        }
+        val (done, open) = pend.partition(_._3 >= 3)
+        closed ++= done
+        pend = open
+        ret.foreach { r => sumRet += r; nRet += 1L }
+        if (e.event_type == "signup")
+          pend = pend :+ ((e.event_id, 0.0, 0, false))
+        lastPx = e.value
       }
+      // moments sentinel (event_id = -1): the benchmark mean uses the
+      // WHOLE tape, so every batch that advanced the moments must
+      // publish them even when no frame is open — otherwise a user
+      // whose last frame closed early would serve stale means
+      val sentinel =
+        if (sorted.nonEmpty)
+          Iterator((user, -1L, 0.0, 0, false, sumRet, nRet))
+        else Iterator.empty
+      (Some((lastPx, sumRet, nRet, pend)),
+        (closed.iterator ++ pend.iterator).map {
+          case (id, car, n, saw) => (user, id, car, n, saw, sumRet, nRet)
+        } ++ sentinel)
+    }
   }
 
   /** s46 — streaming perplexity scoring against the corpus-so-far LM:
@@ -931,7 +931,7 @@ object Streams {
       .start()
 
   /** s33 — streaming quote conflation census via
-    * flatMapGroupsWithState: the incremental twin of batch q160. State
+    * [[replayByUser]]: the incremental twin of batch q160. State
     * is ONE (last price, last ts) per instrument; each micro-batch
     * folds its prints in (ts, event_id) order and emits that batch's
     * (n_events, n_suppressed) INCREMENTS — summing all emitted rows
@@ -941,36 +941,30 @@ object Streams {
     * micro-batch boundary, which the carried state stitches. This is
     * the live shape of the audit: a feed handler sizes conflation
     * buffers from the running census, not a nightly batch. Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def conflateStream(spark: SparkSession, events: DataFrame,
                      windowSec: Long = 5L): Dataset[(Long, Long, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Long), (Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var prev = state.getOption
-          var n = 0L
-          var sup = 0L
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            n += 1L
-            prev.foreach { case (pv, pt) =>
-              if (e.value == pv && t - pt <= windowSec * 1000000L) sup += 1L
-            }
-            prev = Some((e.value, t))
-          }
-          prev.foreach(state.update)
-          if (n == 0L) Iterator.empty else Iterator((user, n, sup))
+    replayByUser[SessionEvent, (Double, Long), (Long, Long, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var prev = restored
+      var n = 0L
+      var sup = 0L
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        n += 1L
+        prev.foreach { case (pv, pt) =>
+          if (e.value == pv && t - pt <= windowSec * 1000000L) sup += 1L
+        }
+        prev = Some((e.value, t))
       }
+      (prev, if (n == 0L) Iterator.empty else Iterator((user, n, sup)))
+    }
   }
 
-  /** s34 — streaming order-flow imbalance via flatMapGroupsWithState:
+  /** s34 — streaming order-flow imbalance on [[replayByUser]]:
     * the incremental twin of batch q156. State is (last price, last
     * nonzero tick sign) per instrument — the tick test and its
     * zero-tick carry-forward need nothing else — and each micro-batch
@@ -986,46 +980,38 @@ object Streams {
   def ofiStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Double, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Double),
-        (Long, java.sql.Timestamp, Long, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Double)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state tuple: (last price, last nonzero sign; 0.0 = none yet)
-          var lastPx = state.getOption.map(_._1)
-          var lastSign = state.getOption.map(_._2).filter(_ != 0.0)
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Double, Double)]
-          sorted.foreach { e =>
-            val raw = lastPx.map(p => math.signum(e.value - p))
-            val sign = raw match {
-              case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
-              case Some(_) => lastSign // zero-tick: carry
-              case None => None // first print ever: unsigned
-            }
-            sign.foreach { s =>
-              val day = micros(e.ts) - Math.floorMod(micros(e.ts),
-                86400L * 1000000L)
-              val (n, num, den) = acc.getOrElse(day, (0L, 0.0, 0.0))
-              acc(day) = (n + 1L, num + s * e.value, den + e.value)
-            }
-            lastPx = Some(e.value)
-          }
-          lastPx.foreach(p => state.update((p, lastSign.getOrElse(0.0))))
-          acc.iterator.map { case (day, (n, num, den)) =>
-            (user, tsFromMicros(day), n, num, den)
-          }
+    replayByUser[SessionEvent, (Double, Double),
+      (Long, java.sql.Timestamp, Long, Double, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      // state tuple: (last price, last nonzero sign; 0.0 = none yet)
+      var lastPx = restored.map(_._1)
+      var lastSign = restored.map(_._2).filter(_ != 0.0)
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Double, Double)]
+      sorted.foreach { e =>
+        val raw = lastPx.map(p => math.signum(e.value - p))
+        val sign = raw match {
+          case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
+          case Some(_) => lastSign // zero-tick: carry
+          case None => None // first print ever: unsigned
+        }
+        sign.foreach { s =>
+          val day = micros(e.ts) - Math.floorMod(micros(e.ts),
+            86400L * 1000000L)
+          val (n, num, den) = acc.getOrElse(day, (0L, 0.0, 0.0))
+          acc(day) = (n + 1L, num + s * e.value, den + e.value)
+        }
+        lastPx = Some(e.value)
       }
+      (lastPx.map(p => (p, lastSign.getOrElse(0.0))),
+        acc.iterator.map { case (day, (n, num, den)) =>
+          (user, tsFromMicros(day), n, num, den)
+        })
+    }
   }
 
-  case class MarkoutEvent(user_id: Long, ts: java.sql.Timestamp,
-                          value: Double, event_id: Long, event_type: String)
-
-  /** s35 — streaming multi-horizon markout via flatMapGroupsWithState:
+  /** s35 — streaming multi-horizon markout on [[replayByUser]]:
     * the live twin of batch q155 — execution quality measured AS the
     * tape arrives instead of in a nightly as-of join. State per
     * instrument is the PENDING-TRADE book: each purchase print posts
@@ -1042,56 +1028,51 @@ object Streams {
     * batch q155 up to FP summation order (absorbed by the 4dp round).
     * Deadlines straddling micro-batch boundaries settle on the first
     * tick of a later batch via the carried book. Same in-order-per-key
-    * delivery caveat as [[ewmaState]].
+    * delivery caveat as [[replayByUser]].
     */
   def markoutStream(spark: SparkSession, events: DataFrame,
                     horizonsSec: Seq[Long] = Seq(60L, 300L, 900L),
                     toleranceSec: Long = 86400L)
       : Dataset[(Long, Long, Long, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        col("event_type"))
-      .as[MarkoutEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Seq[(Long, Long, Double)],
-        (Long, Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[MarkoutEvent],
-         state: GroupState[Seq[(Long, Long, Double)]]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id)).toArray
-          var pending = state.getOption.getOrElse(Seq.empty).toList
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Double)]
-          var i = 0
-          while (i < sorted.length) {
-            val t = micros(sorted(i).ts)
-            // the whole same-µs tick group settles together: the
-            // matching price for any deadline <= t is the group max
-            var j = i
-            var px = Double.NegativeInfinity
-            while (j < sorted.length && micros(sorted(j).ts) == t) {
-              if (sorted(j).value > px) px = sorted(j).value
-              j += 1
-            }
-            val (due, rest) = pending.partition(_._1 <= t)
-            pending = rest
-            due.foreach { case (dl, h, px0) =>
-              if (t - dl <= toleranceSec * 1000000L) {
-                val (n, s) = acc.getOrElse(h, (0L, 0.0))
-                acc(h) = (n + 1L, s + (px - px0))
-              } // else: expired unfilled — batch inner as-of drops it too
-            }
-            (i until j).foreach { k =>
-              val e = sorted(k)
-              if (e.event_type == "purchase")
-                horizonsSec.foreach(h =>
-                  pending ::= ((t + h * 1000000L, h, e.value)))
-            }
-            i = j
-          }
-          state.update(pending)
-          acc.iterator.map { case (h, (n, s)) => (user, h, n, s) }
+    replayByUser[PrintEvent, Seq[(Long, Long, Double)],
+      (Long, Long, Long, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          col("event_type"))
+        .as[PrintEvent]) { (user, sorted, restored) =>
+      val tape = sorted.toArray
+      var pending = restored.getOrElse(Seq.empty).toList
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Double)]
+      var i = 0
+      while (i < tape.length) {
+        val t = micros(tape(i).ts)
+        // the whole same-µs tick group settles together: the matching
+        // price for any deadline <= t is the group max
+        var j = i
+        var px = Double.NegativeInfinity
+        while (j < tape.length && micros(tape(j).ts) == t) {
+          if (tape(j).value > px) px = tape(j).value
+          j += 1
+        }
+        val (due, rest) = pending.partition(_._1 <= t)
+        pending = rest
+        due.foreach { case (dl, h, px0) =>
+          if (t - dl <= toleranceSec * 1000000L) {
+            val (n, s) = acc.getOrElse(h, (0L, 0.0))
+            acc(h) = (n + 1L, s + (px - px0))
+          } // else: expired unfilled — batch inner as-of drops it too
+        }
+        (i until j).foreach { k =>
+          val e = tape(k)
+          if (e.event_type == "purchase")
+            horizonsSec.foreach(h =>
+              pending ::= ((t + h * 1000000L, h, e.value)))
+        }
+        i = j
       }
+      (Some(pending), acc.iterator.map { case (h, (n, s)) => (user, h, n, s) })
+    }
   }
 
   /** s9 — streaming corpus-prep gate: ingest-time quality screen +
@@ -1152,10 +1133,10 @@ object Streams {
         col("close"), col("volume"), col("n_trades"))
 
   case class TypedEvent(user_id: Long, ts: java.sql.Timestamp,
-                        event_id: Long, event_type: String)
+                        event_id: Long, event_type: String) extends KeyedEvent
 
   /** s13 — streaming Markov transition counts per user via
-    * flatMapGroupsWithState: the incremental twin of batch q107. State
+    * [[replayByUser]]: the incremental twin of batch q107. State
     * is ONE string per user (the last seen event type) regardless of
     * stream length; each micro-batch folds its events in (ts, event_id)
     * order and emits that batch's (prev, next) transition INCREMENTS —
@@ -1163,80 +1144,70 @@ object Streams {
     * exactly (pure integer counts, no FP caveat), including transitions
     * that straddle a micro-batch boundary, which the carried last-type
     * state stitches together. Same in-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def transitionStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, String, String, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"))
-      .as[TypedEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[String, (Long, String, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[TypedEvent], state: GroupState[String]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val counts = scala.collection.mutable.LinkedHashMap
-            .empty[(String, String), Long]
-          var prev = state.getOption
-          sorted.foreach { e =>
-            prev.foreach { p =>
-              counts((p, e.event_type)) =
-                counts.getOrElse((p, e.event_type), 0L) + 1L
-            }
-            prev = Some(e.event_type)
-          }
-          prev.foreach(state.update)
-          counts.iterator.map { case ((a, b), n) => (user, a, b, n) }
+    replayByUser[TypedEvent, String, (Long, String, String, Long)](
+      events.select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+        .as[TypedEvent]) { (user, sorted, restored) =>
+      val counts = scala.collection.mutable.LinkedHashMap
+        .empty[(String, String), Long]
+      var prev = restored
+      sorted.foreach { e =>
+        prev.foreach { p =>
+          counts((p, e.event_type)) =
+            counts.getOrElse((p, e.event_type), 0L) + 1L
+        }
+        prev = Some(e.event_type)
       }
+      (prev, counts.iterator.map { case ((a, b), n) => (user, a, b, n) })
+    }
   }
 
-  /** s14 — streaming gap detection per user via flatMapGroupsWithState:
+  /** s14 — streaming gap detection per user on [[replayByUser]]:
     * the incremental twin of batch q26. State is ONE timestamp per user
     * (the last seen event time); each micro-batch folds its events in
     * (ts, event_id) order and emits every inter-event gap above the
     * threshold — including gaps straddling a micro-batch boundary,
     * which the carried last-ts state stitches. The data-quality monitor
     * a feed-ingest pipeline runs live rather than in nightly batch.
-    * Same in-order-per-key delivery caveat as [[ewmaState]].
+    * Same in-order-per-key delivery caveat as [[replayByUser]].
     */
   def gapDetectStream(spark: SparkSession, events: DataFrame,
                       thresholdSec: Long = 4 * 3600)
       : Dataset[(Long, java.sql.Timestamp, java.sql.Timestamp, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long,
-        (Long, java.sql.Timestamp, java.sql.Timestamp, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[Long]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, java.sql.Timestamp, java.sql.Timestamp, Double)]
-          var prev = state.getOption
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            prev.foreach { p =>
-              // same µs-exact arithmetic + rounding as batch q26:
-              // Spark's round() is BigDecimal HALF_UP — math.rint
-              // (HALF_EVEN) would diverge on exact .0005 µs boundaries
-              val gapSec = java.math.BigDecimal.valueOf((t - p) / 1e6)
-                .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
-              if (gapSec > thresholdSec)
-                out += ((user, tsFromMicros(p), tsFromMicros(t), gapSec))
-            }
-            prev = Some(t)
-          }
-          prev.foreach(state.update)
-          out.iterator
+    replayByUser[SessionEvent, Long,
+      (Long, java.sql.Timestamp, java.sql.Timestamp, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, java.sql.Timestamp, java.sql.Timestamp, Double)]
+      var prev = restored
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        prev.foreach { p =>
+          // same µs-exact arithmetic + rounding as batch q26: Spark's
+          // round() is BigDecimal HALF_UP — math.rint (HALF_EVEN)
+          // would diverge on exact .0005 µs boundaries
+          val gapSec = java.math.BigDecimal.valueOf((t - p) / 1e6)
+            .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
+          if (gapSec > thresholdSec)
+            out += ((user, tsFromMicros(p), tsFromMicros(t), gapSec))
+        }
+        prev = Some(t)
       }
+      (prev, out.iterator)
+    }
   }
 
   case class BollState(recent: Seq[Double], n: Long)
 
   /** s15 — streaming Bollinger band breaks per user via
-    * flatMapGroupsWithState: the incremental twin of batch q124. State
+    * [[replayByUser]]: the incremental twin of batch q124. State
     * is the last ≤19 values plus the row count — bounded per user
     * regardless of stream length. Each full 20-row window re-folds the
     * SAME FP recurrences Spark's sliding window frame runs in batch
@@ -1246,48 +1217,43 @@ object Streams {
     * rounding of `Num.decRound`, so a streamed break decision equals
     * the batch one bit-for-bit, including windows straddling a
     * micro-batch boundary stitched by the carried tail. Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def bollingerStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Int, Int)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BollState,
-        (Long, java.sql.Timestamp, Long, Int, Int)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[BollState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, java.sql.Timestamp, Long, Int, Int)]
-          var st = state.getOption.getOrElse(BollState(Nil, 0L))
-          sorted.foreach { e =>
-            val win = (st.recent :+ e.value).takeRight(20)
-            val rn = st.n + 1
-            if (rn >= 20) {
-              var s = 0.0
-              win.foreach(s += _)
-              val m = s / 20
-              var n = 0.0; var avg = 0.0; var m2 = 0.0
-              win.foreach { x =>
-                n += 1
-                val delta = x - avg
-                val deltaN = delta / n
-                avg += deltaN
-                m2 += delta * (delta - deltaN)
-              }
-              val sd = math.sqrt(m2 / 19.0)
-              val ub = bandRound(m + 2.0 * sd)
-              val lb = bandRound(m - 2.0 * sd)
-              out += ((user, e.ts, e.event_id,
-                if (e.value > ub) 1 else 0, if (e.value < lb) 1 else 0))
-            }
-            st = BollState(win.takeRight(19), rn)
+    replayByUser[SessionEvent, BollState,
+      (Long, java.sql.Timestamp, Long, Int, Int)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, java.sql.Timestamp, Long, Int, Int)]
+      var st = restored.getOrElse(BollState(Nil, 0L))
+      sorted.foreach { e =>
+        val win = (st.recent :+ e.value).takeRight(20)
+        val rn = st.n + 1
+        if (rn >= 20) {
+          var s = 0.0
+          win.foreach(s += _)
+          val m = s / 20
+          var n = 0.0; var avg = 0.0; var m2 = 0.0
+          win.foreach { x =>
+            n += 1
+            val delta = x - avg
+            val deltaN = delta / n
+            avg += deltaN
+            m2 += delta * (delta - deltaN)
           }
-          state.update(st)
-          out.iterator
+          val sd = math.sqrt(m2 / 19.0)
+          val ub = bandRound(m + 2.0 * sd)
+          val lb = bandRound(m - 2.0 * sd)
+          out += ((user, e.ts, e.event_id,
+            if (e.value > ub) 1 else 0, if (e.value < lb) 1 else 0))
+        }
+        st = BollState(win.takeRight(19), rn)
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** JVM mirror of `Num.decRound(c, 6)` — the double→DECIMAL(28,12)
@@ -1320,50 +1286,45 @@ object Streams {
     * same decimal(28,12)→4dp round. Emission starts at the 21st row
     * (the batch rn >= 21 gate); windows straddling a micro-batch
     * boundary are stitched by the carried return tail. Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def rollingVolStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Option[Double])] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[VolState, (Long, Long, Option[Double])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[VolState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Option[Double])]
-          var st = state.getOption.getOrElse(VolState(0.0, false, Nil, 0L))
-          sorted.foreach { e =>
-            val ret =
-              if (!st.hasLast || st.last == 0.0) Double.NaN
-              else e.value / st.last - 1.0
-            val win = (st.rets :+ ret).takeRight(20)
-            val rn = st.n + 1
-            if (rn >= 21) {
-              var n = 0.0; var avg = 0.0; var m2 = 0.0
-              win.foreach { x =>
-                if (!x.isNaN) {
-                  n += 1
-                  val delta = x - avg
-                  val deltaN = delta / n
-                  avg += deltaN
-                  m2 += delta * (delta - deltaN)
-                }
-              }
-              val v =
-                if (n == 0) None
-                else if (n == 1) Some(Double.NaN)
-                else Some(math.sqrt(m2 / (n - 1.0)))
-              out += ((user, e.event_id,
-                v.map(x => if (x.isNaN) x else decRoundJvm(x, 4))))
+    replayByUser[SessionEvent, VolState, (Long, Long, Option[Double])](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Option[Double])]
+      var st = restored.getOrElse(VolState(0.0, false, Nil, 0L))
+      sorted.foreach { e =>
+        val ret =
+          if (!st.hasLast || st.last == 0.0) Double.NaN
+          else e.value / st.last - 1.0
+        val win = (st.rets :+ ret).takeRight(20)
+        val rn = st.n + 1
+        if (rn >= 21) {
+          var n = 0.0; var avg = 0.0; var m2 = 0.0
+          win.foreach { x =>
+            if (!x.isNaN) {
+              n += 1
+              val delta = x - avg
+              val deltaN = delta / n
+              avg += deltaN
+              m2 += delta * (delta - deltaN)
             }
-            st = VolState(e.value, true, win.takeRight(19), rn)
           }
-          state.update(st)
-          out.iterator
+          val v =
+            if (n == 0) None
+            else if (n == 1) Some(Double.NaN)
+            else Some(math.sqrt(m2 / (n - 1.0)))
+          out += ((user, e.event_id,
+            v.map(x => if (x.isNaN) x else decRoundJvm(x, 4))))
+        }
+        st = VolState(e.value, true, win.takeRight(19), rn)
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-user state for s19: previous value, the last ≤13 clipped
@@ -1385,40 +1346,35 @@ object Streams {
   def rsiStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RsiState, (Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[RsiState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Double)]
-          var st = state.getOption.getOrElse(RsiState(0.0, false, Nil, Nil, 0L))
-          sorted.foreach { e =>
-            val (g, l) =
-              if (!st.hasLast) (0.0, 0.0)
-              else {
-                val d = e.value - st.last
-                (if (d > 0) d else 0.0, if (d < 0) -d else 0.0)
-              }
-            val gwin = (st.gains :+ g).takeRight(14)
-            val lwin = (st.losses :+ l).takeRight(14)
-            val rn = st.n + 1
-            if (rn >= 15) {
-              var gs = 0.0; gwin.foreach(gs += _)
-              var ls = 0.0; lwin.foreach(ls += _)
-              val avgGain = gs / 14.0
-              val avgLoss = ls / 14.0
-              val denom = avgGain + avgLoss
-              val rsi = if (denom == 0.0) 50.0 else 100.0 * avgGain / denom
-              out += ((user, e.event_id, decRoundJvm(rsi, 4)))
-            }
-            st = RsiState(e.value, true, gwin.takeRight(13), lwin.takeRight(13), rn)
+    replayByUser[SessionEvent, RsiState, (Long, Long, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Double)]
+      var st = restored.getOrElse(RsiState(0.0, false, Nil, Nil, 0L))
+      sorted.foreach { e =>
+        val (g, l) =
+          if (!st.hasLast) (0.0, 0.0)
+          else {
+            val d = e.value - st.last
+            (if (d > 0) d else 0.0, if (d < 0) -d else 0.0)
           }
-          state.update(st)
-          out.iterator
+        val gwin = (st.gains :+ g).takeRight(14)
+        val lwin = (st.losses :+ l).takeRight(14)
+        val rn = st.n + 1
+        if (rn >= 15) {
+          var gs = 0.0; gwin.foreach(gs += _)
+          var ls = 0.0; lwin.foreach(ls += _)
+          val avgGain = gs / 14.0
+          val avgLoss = ls / 14.0
+          val denom = avgGain + avgLoss
+          val rsi = if (denom == 0.0) 50.0 else 100.0 * avgGain / denom
+          out += ((user, e.event_id, decRoundJvm(rsi, 4)))
+        }
+        st = RsiState(e.value, true, gwin.takeRight(13), lwin.takeRight(13), rn)
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** s22 — stream-stream interval join, the trade–quote shape: each
@@ -1467,7 +1423,7 @@ object Streams {
     * HALF_UP, Spark's Round on doubles. n = 1 yields a NULL stddev
     * (modern statisticalAggregate semantics, what the batch gate
     * proves); an all-null frame yields NULL for both. Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def movingStatsStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Option[Double], Option[Double])] = {
@@ -1475,38 +1431,33 @@ object Streams {
     def round4(x: Double): Double =
       java.math.BigDecimal.valueOf(x)
         .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[MaState,
-          (Long, Long, Option[Double], Option[Double])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[MaState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Option[Double], Option[Double])]
-          var st = state.getOption.getOrElse(MaState(Nil))
-          sorted.foreach { e =>
-            val win = (st.vals :+ e.value).takeRight(7)
-            var n = 0.0; var s = 0.0; var avg = 0.0; var m2 = 0.0
-            win.foreach { x =>
-              if (!x.isNaN) {
-                n += 1; s += x
-                val delta = x - avg
-                val deltaN = delta / n
-                avg += deltaN
-                m2 += delta * (delta - deltaN)
-              }
-            }
-            val ma = if (n == 0) None else Some(round4(s / n))
-            val vol = if (n < 2) None
-                      else Some(round4(math.sqrt(m2 / (n - 1.0))))
-            out += ((user, e.event_id, ma, vol))
-            st = MaState(win.takeRight(6))
+    replayByUser[SessionEvent, MaState,
+      (Long, Long, Option[Double], Option[Double])](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Option[Double], Option[Double])]
+      var st = restored.getOrElse(MaState(Nil))
+      sorted.foreach { e =>
+        val win = (st.vals :+ e.value).takeRight(7)
+        var n = 0.0; var s = 0.0; var avg = 0.0; var m2 = 0.0
+        win.foreach { x =>
+          if (!x.isNaN) {
+            n += 1; s += x
+            val delta = x - avg
+            val deltaN = delta / n
+            avg += deltaN
+            m2 += delta * (delta - deltaN)
           }
-          state.update(st)
-          out.iterator
+        }
+        val ma = if (n == 0) None else Some(round4(s / n))
+        val vol = if (n < 2) None
+                  else Some(round4(math.sqrt(m2 / (n - 1.0))))
+        out += ((user, e.event_id, ma, vol))
+        st = MaState(win.takeRight(6))
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-user state for s20: the running peak and running max drawdown
@@ -1524,32 +1475,26 @@ object Streams {
     * because both series are nondecreasing, so does the max over all
     * emissions — which is what the differential spec checks; raw
     * doubles, no rounding needed, max is order-stable). Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def drawdownStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DrawdownState, (Long, Long, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[DrawdownState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Double, Double)]
-          var st = state.getOption.getOrElse(DrawdownState(0.0, 0.0, false))
-          sorted.foreach { e =>
-            val peak = if (st.started) math.max(st.peak, e.value) else e.value
-            val dd = if (st.started) math.max(st.dd, peak - e.value)
-                     else peak - e.value
-            st = DrawdownState(peak, dd, started = true)
-            out += ((user, e.event_id, dd, peak))
-          }
-          state.update(st)
-          out.iterator
+    replayByUser[SessionEvent, DrawdownState, (Long, Long, Double, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Double, Double)]
+      var st = restored.getOrElse(DrawdownState(0.0, 0.0, false))
+      sorted.foreach { e =>
+        val peak = if (st.started) math.max(st.peak, e.value) else e.value
+        val dd = if (st.started) math.max(st.dd, peak - e.value)
+                 else peak - e.value
+        st = DrawdownState(peak, dd, started = true)
+        out += ((user, e.event_id, dd, peak))
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-(flag, month) state for s23: exact decimal running sums of
@@ -1624,7 +1569,7 @@ object Streams {
     * count(DISTINCT user_id) per (cohort_week, weeks_since) is a
     * stateless count of marks downstream — same stream-rebuilds-the-
     * batch-rollup convention as s22. In-order-per-key delivery caveat
-    * as [[ewmaState]] (a late out-of-order first week would mispin the
+    * as [[replayByUser]] (a late out-of-order first week would mispin the
     * cohort; batch min() has no order sensitivity).
     */
   def retentionMarksStream(spark: SparkSession, events: DataFrame)
@@ -1671,38 +1616,33 @@ object Streams {
     * selections of input doubles and the spread is the same single
     * subtraction, so every emission is bit-identical to the batch
     * window row for that event. In-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def bboStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Option[Double], Option[Double],
                  Option[Double], Option[Int])] = {
     import spark.implicits._
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BboState,
-          (Long, Long, Option[Double], Option[Double],
-           Option[Double], Option[Int])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[BboState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Option[Double], Option[Double],
-                    Option[Double], Option[Int])]
-          var st = state.getOption.getOrElse(BboState(0.0, false, 0.0, false))
-          sorted.foreach { e =>
-            st = if (e.event_id % 2 == 0) st.copy(bb = e.value, hasBb = true)
-                 else st.copy(ba = e.value, hasBa = true)
-            val bb = if (st.hasBb) Some(st.bb) else None
-            val ba = if (st.hasBa) Some(st.ba) else None
-            val spread = for (b <- bb; a <- ba) yield a - b
-            val crossed = for (b <- bb; a <- ba) yield if (b >= a) 1 else 0
-            out += ((user, e.event_id, bb, ba, spread, crossed))
-          }
-          state.update(st)
-          out.iterator
+    replayByUser[SessionEvent, BboState,
+      (Long, Long, Option[Double], Option[Double],
+       Option[Double], Option[Int])](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Option[Double], Option[Double],
+                Option[Double], Option[Int])]
+      var st = restored.getOrElse(BboState(0.0, false, 0.0, false))
+      sorted.foreach { e =>
+        st = if (e.event_id % 2 == 0) st.copy(bb = e.value, hasBb = true)
+             else st.copy(ba = e.value, hasBa = true)
+        val bb = if (st.hasBb) Some(st.bb) else None
+        val ba = if (st.hasBa) Some(st.ba) else None
+        val spread = for (b <- bb; a <- ba) yield a - b
+        val crossed = for (b <- bb; a <- ba) yield if (b >= a) 1 else 0
+        out += ((user, e.event_id, bb, ba, spread, crossed))
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-instrument state for s26: the trailing ≤50 quotes as
@@ -1717,43 +1657,38 @@ object Streams {
     * quote events), so sorting its side-filtered prices and slicing
     * top-3 reproduces the batch ladder bit-for-bit — picked doubles,
     * no arithmetic at all. In-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def depthStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Option[Double], Option[Double], Option[Double],
                  Option[Double], Option[Double], Option[Double], Int, Int)] = {
     import spark.implicits._
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DepthState,
-          (Long, Long, Option[Double], Option[Double], Option[Double],
-           Option[Double], Option[Double], Option[Double], Int, Int)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent], state: GroupState[DepthState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Option[Double], Option[Double], Option[Double],
-                    Option[Double], Option[Double], Option[Double], Int, Int)]
-          var st = state.getOption.getOrElse(DepthState(Nil, Nil))
-          sorted.foreach { e =>
-            val sides = (st.sides :+ (e.event_id % 2 == 0)).takeRight(50)
-            val pxs = (st.pxs :+ e.value).takeRight(50)
-            st = DepthState(sides, pxs)
-            val bids = sides.zip(pxs).collect { case (true, p) => p }
-              .sorted(Ordering[Double].reverse)
-            val asks = sides.zip(pxs).collect { case (false, p) => p }.sorted
-            def lvl(xs: Seq[Double], i: Int) =
-              if (xs.lengthCompare(i) > 0) Some(xs(i)) else None
-            out += ((user, e.event_id,
-              lvl(bids, 0), lvl(bids, 1), lvl(bids, 2),
-              lvl(asks, 0), lvl(asks, 1), lvl(asks, 2),
-              bids.size, asks.size))
-          }
-          state.update(st)
-          out.iterator
+    replayByUser[SessionEvent, DepthState,
+      (Long, Long, Option[Double], Option[Double], Option[Double],
+       Option[Double], Option[Double], Option[Double], Int, Int)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Option[Double], Option[Double], Option[Double],
+                Option[Double], Option[Double], Option[Double], Int, Int)]
+      var st = restored.getOrElse(DepthState(Nil, Nil))
+      sorted.foreach { e =>
+        val sides = (st.sides :+ (e.event_id % 2 == 0)).takeRight(50)
+        val pxs = (st.pxs :+ e.value).takeRight(50)
+        st = DepthState(sides, pxs)
+        val bids = sides.zip(pxs).collect { case (true, p) => p }
+          .sorted(Ordering[Double].reverse)
+        val asks = sides.zip(pxs).collect { case (false, p) => p }.sorted
+        def lvl(xs: Seq[Double], i: Int) =
+          if (xs.lengthCompare(i) > 0) Some(xs(i)) else None
+        out += ((user, e.event_id,
+          lvl(bids, 0), lvl(bids, 1), lvl(bids, 2),
+          lvl(asks, 0), lvl(asks, 1), lvl(asks, 2),
+          bids.size, asks.size))
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-instrument state for s27: the BBO book (s25's two doubles),
@@ -1774,7 +1709,7 @@ object Streams {
     * trade's own microsecond); the comparisons and the midpoint
     * average are the same double arithmetic as the batch columns, so
     * signs are bit-identical. In-order-per-key delivery caveat as
-    * [[ewmaState]] — here it extends to same-µs quotes landing in a
+    * [[replayByUser]] — here it extends to same-µs quotes landing in a
     * later micro-batch than the trade.
     */
   def tradeSignStream(spark: SparkSession, events: DataFrame)
@@ -1860,7 +1795,7 @@ object Streams {
       }
   }
 
-  /** s38 — streaming realized variance via flatMapGroupsWithState: the
+  /** s38 — streaming realized variance on [[replayByUser]]: the
     * incremental twin of batch q157. State is ONE (day, last price)
     * per instrument — the same-day lag needs nothing else, and a day
     * rollover resets it exactly like q157's (user, day) window
@@ -1875,50 +1810,44 @@ object Streams {
     * to FP summation order on Σ ln² (absorbed by the 6dp round);
     * day boundaries and batch boundaries both stitch through the
     * carried state. Same in-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def rvStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Double)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Double),
-        (Long, java.sql.Timestamp, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Long, Double)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state: (current day in µs, last price that day)
-          var prev = state.getOption
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Double)]
-          sorted.foreach { e =>
-            val day = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
-            // always touch the day so no-return days still emit a
-            // (0, 0.0) increment — batch q157 keeps those rows with
-            // n_rets=0 / NULL rv, and the reducer rebuilds the NULL
-            // from n=0, so the row sets stay identical
-            val (n, ss) = acc.getOrElse(day, (0L, 0.0))
-            acc(day) = prev match {
-              case Some((d, p))
-                  if d == day && e.value > 0.0 && p != 0.0 &&
-                    e.value / p > 0.0 =>
-                val r = math.log(e.value / p)
-                (n + 1L, ss + r * r)
-              case _ => (n, ss)
-            }
-            prev = Some((day, e.value))
-          }
-          prev.foreach(state.update)
-          acc.iterator.map { case (day, (n, ss)) =>
-            (user, tsFromMicros(day), n, ss)
-          }
+    replayByUser[SessionEvent, (Long, Double),
+      (Long, java.sql.Timestamp, Long, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      // state: (current day in µs, last price that day)
+      var prev = restored
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Double)]
+      sorted.foreach { e =>
+        val day = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
+        // always touch the day so no-return days still emit a (0, 0.0)
+        // increment — batch q157 keeps those rows with n_rets=0 / NULL
+        // rv, and the reducer rebuilds the NULL from n=0, so the row
+        // sets stay identical
+        val (n, ss) = acc.getOrElse(day, (0L, 0.0))
+        acc(day) = prev match {
+          case Some((d, p))
+              if d == day && e.value > 0.0 && p != 0.0 &&
+                e.value / p > 0.0 =>
+            val r = math.log(e.value / p)
+            (n + 1L, ss + r * r)
+          case _ => (n, ss)
+        }
+        prev = Some((day, e.value))
       }
+      (prev, acc.iterator.map { case (day, (n, ss)) =>
+        (user, tsFromMicros(day), n, ss)
+      })
+    }
   }
 
-  /** s48 — streaming realized MOMENTS via flatMapGroupsWithState: the
+  /** s48 — streaming realized MOMENTS on [[replayByUser]]: the
     * incremental twin of batch q188, one power step past [[rvStream]].
     * State is ONE last price per instrument (the whole-tape lag needs
     * nothing else — q188's window does not reset per day). Each batch
@@ -1928,40 +1857,35 @@ object Streams {
     * the consumer forms rskew/rkurt from the REDUCED sums once,
     * reproducing batch q188 at the 6dp round. Return tri-state is
     * q157/q188's `when(value>0, log(value/nullif(prev,0)))` exactly.
-    * Same in-order-per-key delivery caveat as [[ewmaState]].
+    * Same in-order-per-key delivery caveat as [[replayByUser]].
     */
   def momentsStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double, Double, Double, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Double,
-        (Long, Long, Double, Double, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[Double]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var prev = state.getOption.getOrElse(Double.NaN)
-          var n = 0L
-          var s2, s3, s4, sv = 0.0
-          sorted.foreach { e =>
-            if (e.value > 0.0 && !prev.isNaN && prev != 0.0 &&
-                e.value / prev > 0.0) {
-              val r = math.log(e.value / prev)
-              n += 1L
-              s2 += r * r; s3 += r * r * r; s4 += r * r * r * r
-              if (r < 0.0) sv += r * r
-            }
-            prev = e.value
-          }
-          if (!prev.isNaN) state.update(prev)
-          if (n == 0L) Iterator.empty
-          else Iterator((user, n, s2, s3, s4, sv))
+    replayByUser[SessionEvent, Double,
+      (Long, Long, Double, Double, Double, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var prev = restored.getOrElse(Double.NaN)
+      var n = 0L
+      var s2, s3, s4, sv = 0.0
+      sorted.foreach { e =>
+        if (e.value > 0.0 && !prev.isNaN && prev != 0.0 &&
+            e.value / prev > 0.0) {
+          val r = math.log(e.value / prev)
+          n += 1L
+          s2 += r * r; s3 += r * r * r; s4 += r * r * r * r
+          if (r < 0.0) sv += r * r
+        }
+        prev = e.value
       }
+      (Some(prev).filter(!_.isNaN),
+        if (n == 0L) Iterator.empty
+        else Iterator((user, n, s2, s3, s4, sv)))
+    }
   }
 
-  /** s49 — streaming effective spread via flatMapGroupsWithState: the
+  /** s49 — streaming effective spread on [[replayByUser]]: the
     * incremental twin of batch q191, the trade-pricing complement to
     * the s41 time-weighted quote spread. State per instrument is the
     * running (best bid, best ask) book — the q151/s25 even/odd
@@ -1972,52 +1896,45 @@ object Streams {
     * instant from the carried recurrence, so a trade whose quotes
     * arrived in an earlier batch prices identically to batch q191;
     * sums reduce, the consumer averages the reduced sums once. Same
-    * in-order-per-key delivery caveat as [[ewmaState]].
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def effSpreadStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Double, Double, Long)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        col("event_type"))
-      .as[PrintEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Double),
-        (Long, java.sql.Timestamp, Long, Double, Double, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[PrintEvent],
-         state: GroupState[(Double, Double)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (bid, ask) = state.getOption.getOrElse((Double.NaN, Double.NaN))
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Double, Double, Long)]
-          sorted.foreach { e =>
-            if (e.event_type == "purchase") {
-              if (!bid.isNaN && !ask.isNaN && bid < ask) {
-                val day = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
-                val mid = (bid + ask) / 2.0
-                val eff = 2.0 * math.abs(e.value - mid) / mid
-                val qs = (ask - bid) / mid
-                val imp = if (2.0 * math.abs(e.value - mid) < ask - bid) 1L
-                          else 0L
-                val (n, se, sq, si) =
-                  acc.getOrElse(day, (0L, 0.0, 0.0, 0L))
-                acc(day) = (n + 1L, se + eff, sq + qs, si + imp)
-              }
-            } else {
-              if (e.event_id % 2 == 0) bid = e.value else ask = e.value
-            }
+    replayByUser[PrintEvent, (Double, Double),
+      (Long, java.sql.Timestamp, Long, Double, Double, Long)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          col("event_type"))
+        .as[PrintEvent]) { (user, sorted, restored) =>
+      var (bid, ask) = restored.getOrElse((Double.NaN, Double.NaN))
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Double, Double, Long)]
+      sorted.foreach { e =>
+        if (e.event_type == "purchase") {
+          if (!bid.isNaN && !ask.isNaN && bid < ask) {
+            val day = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
+            val mid = (bid + ask) / 2.0
+            val eff = 2.0 * math.abs(e.value - mid) / mid
+            val qs = (ask - bid) / mid
+            val imp = if (2.0 * math.abs(e.value - mid) < ask - bid) 1L
+                      else 0L
+            val (n, se, sq, si) = acc.getOrElse(day, (0L, 0.0, 0.0, 0L))
+            acc(day) = (n + 1L, se + eff, sq + qs, si + imp)
           }
-          state.update((bid, ask))
-          acc.iterator.map { case (day, (n, se, sq, si)) =>
-            (user, tsFromMicros(day), n, se, sq, si)
-          }
+        } else {
+          if (e.event_id % 2 == 0) bid = e.value else ask = e.value
+        }
       }
+      (Some((bid, ask)), acc.iterator.map { case (day, (n, se, sq, si)) =>
+        (user, tsFromMicros(day), n, se, sq, si)
+      })
+    }
   }
 
   /** s50 — streaming variance-of-aggregates ledger via
-    * flatMapGroupsWithState: the incremental twin of batch q193's
+    * [[replayByUser]]: the incremental twin of batch q193's
     * Hurst input. State per instrument is (last price, for each
     * k ∈ {1,2,4,8} the OPEN bucket's partial sum and count) — the
     * return lattice is carried as INTEGER picounits (the 12dp decimal
@@ -2028,48 +1945,42 @@ object Streams {
     * decimal (the true value is a 12dp lattice point, so the
     * double·1e−12 → round-12 roundtrip is exact), then runs the
     * batch's own moment/variance/slope tail on identical inputs.
-    * Same in-order-per-key delivery caveat as [[ewmaState]].
+    * Same in-order-per-key delivery caveat as [[replayByUser]].
     */
   def hurstLedgerStream(spark: SparkSession, events: DataFrame,
                         ks: Seq[Int] = Seq(1, 2, 4, 8))
       : Dataset[(Long, Int, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Seq[(Int, Long, Int)]),
-        (Long, Int, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Seq[(Int, Long, Int)])]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (prev, partials) = state.getOption.getOrElse(
-            (Double.NaN, ks.map(k => (k, 0L, 0))))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Int, Long)]
-          sorted.foreach { e =>
-            if (e.value > 0.0 && !prev.isNaN && prev != 0.0 &&
-                e.value / prev > 0.0) {
-              // 12dp HALF_UP lattice in integer picounits — exactly
-              // Num.decRound(ret, 12) scaled by 10^12
-              val r12 = BigDecimal(math.log(e.value / prev))
-                .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-                .*(BigDecimal(1000000000000L)).toLongExact
-              partials = partials.map { case (k, s, c) =>
-                val (s2, c2) = (s + r12, c + 1)
-                if (c2 == k) { out += ((user, k, s2)); (k, 0L, 0) }
-                else (k, s2, c2)
-              }
-            }
-            prev = e.value
+    replayByUser[SessionEvent, (Double, Seq[(Int, Long, Int)]),
+      (Long, Int, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var (prev, partials) = restored.getOrElse(
+        (Double.NaN, ks.map(k => (k, 0L, 0))))
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Int, Long)]
+      sorted.foreach { e =>
+        if (e.value > 0.0 && !prev.isNaN && prev != 0.0 &&
+            e.value / prev > 0.0) {
+          // 12dp HALF_UP lattice in integer picounits — exactly
+          // Num.decRound(ret, 12) scaled by 10^12
+          val r12 = BigDecimal(math.log(e.value / prev))
+            .setScale(12, BigDecimal.RoundingMode.HALF_UP)
+            .*(BigDecimal(1000000000000L)).toLongExact
+          partials = partials.map { case (k, s, c) =>
+            val (s2, c2) = (s + r12, c + 1)
+            if (c2 == k) { out += ((user, k, s2)); (k, 0L, 0) }
+            else (k, s2, c2)
           }
-          if (!prev.isNaN) state.update((prev, partials))
-          out.iterator
+        }
+        prev = e.value
       }
+      (Some((prev, partials)).filter(!_._1.isNaN), out.iterator)
+    }
   }
 
   /** s51 — streaming underwater-spell tracker via
-    * flatMapGroupsWithState: the incremental twin of batch q196.
+    * [[replayByUser]]: the incremental twin of batch q196.
     * State per instrument is five scalars — running peak, the at-peak
     * print counter (the batch's run-group id), and the OPEN spell's
     * (prints, start µs, last µs). An at-peak print closes the open
@@ -2079,45 +1990,39 @@ object Streams {
     * (instrument, group), exactly the s47 partial-horizon convention.
     * Peak comparison picks doubles, lengths are integers — the
     * reduced rows rebuild q196 bit-for-bit, no rounding anywhere.
-    * Same in-order-per-key delivery caveat as [[ewmaState]].
+    * Same in-order-per-key delivery caveat as [[replayByUser]].
     */
   def underwaterStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Long, Long, Long, Long),
-        (Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Long, Long, Long, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (peak, grp, len, startUs, lastUs) =
-            state.getOption.getOrElse((Double.NaN, 0L, 0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Long)]
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            if (!peak.isNaN && e.value < peak) {
-              if (len == 0L) { startUs = t }
-              len += 1L; lastUs = t
-            } else {
-              if (len > 0L) { // spell closes at this at-peak print
-                out += ((user, grp, len, lastUs - startUs))
-                len = 0L
-              }
-              grp += 1L
-              peak = if (peak.isNaN) e.value else math.max(peak, e.value)
-            }
+    replayByUser[SessionEvent, (Double, Long, Long, Long, Long),
+      (Long, Long, Long, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var (peak, grp, len, startUs, lastUs) =
+        restored.getOrElse((Double.NaN, 0L, 0L, 0L, 0L))
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long, Long)]
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        if (!peak.isNaN && e.value < peak) {
+          if (len == 0L) { startUs = t }
+          len += 1L; lastUs = t
+        } else {
+          if (len > 0L) { // spell closes at this at-peak print
+            out += ((user, grp, len, lastUs - startUs))
+            len = 0L
           }
-          state.update((peak, grp, len, startUs, lastUs))
-          if (len > 0L) out += ((user, grp, len, lastUs - startUs))
-          out.iterator
+          grp += 1L
+          peak = if (peak.isNaN) e.value else math.max(peak, e.value)
+        }
       }
+      if (len > 0L) out += ((user, grp, len, lastUs - startUs))
+      (Some((peak, grp, len, startUs, lastUs)), out.iterator)
+    }
   }
 
-  /** s39 — streaming market-data staleness via flatMapGroupsWithState:
+  /** s39 — streaming market-data staleness on [[replayByUser]]:
     * the incremental twin of batch q166, and the live form the SLA is
     * actually monitored in (a feed watchdog wants the stale clock
     * ticking NOW, not in a nightly batch). State is (day, last ts µs)
@@ -2137,48 +2042,43 @@ object Streams {
       : Dataset[(Long, java.sql.Timestamp, Long, Option[Long], Long, Long)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long),
-        (Long, java.sql.Timestamp, Long, Option[Long], Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Long, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state: (current day µs, last print µs that day)
-          var prev = state.getOption
-          // day -> (stale excess inc, max gap or -1, min ts, max ts)
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long, Long, Long)]
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            val day = t - Math.floorMod(t, dayUs)
-            val (st, mg, lo, hi) =
-              acc.getOrElse(day, (0L, -1L, Long.MaxValue, Long.MinValue))
-            val gap = prev match {
-              case Some((d, pt)) if d == day => Some(t - pt)
-              case _ => None
-            }
-            acc(day) = (
-              st + gap.map(g => math.max(0L, g - thresholdSec * 1000000L))
-                .getOrElse(0L),
-              gap.map(math.max(mg, _)).getOrElse(mg),
-              math.min(lo, t), math.max(hi, t))
-            prev = Some((day, t))
-          }
-          prev.foreach(state.update)
-          acc.iterator.map { case (day, (st, mg, lo, hi)) =>
-            (user, tsFromMicros(day), st,
-              if (mg < 0L) None else Some(mg), lo, hi)
-          }
+    replayByUser[SessionEvent, (Long, Long),
+      (Long, java.sql.Timestamp, Long, Option[Long], Long, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      // state: (current day µs, last print µs that day)
+      var prev = restored
+      // day -> (stale excess inc, max gap or -1, min ts, max ts)
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long, Long, Long)]
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        val day = t - Math.floorMod(t, dayUs)
+        val (st, mg, lo, hi) =
+          acc.getOrElse(day, (0L, -1L, Long.MaxValue, Long.MinValue))
+        val gap = prev match {
+          case Some((d, pt)) if d == day => Some(t - pt)
+          case _ => None
+        }
+        acc(day) = (
+          st + gap.map(g => math.max(0L, g - thresholdSec * 1000000L))
+            .getOrElse(0L),
+          gap.map(math.max(mg, _)).getOrElse(mg),
+          math.min(lo, t), math.max(hi, t))
+        prev = Some((day, t))
       }
+      (prev, acc.iterator.map { case (day, (st, mg, lo, hi)) =>
+        (user, tsFromMicros(day), st,
+          if (mg < 0L) None else Some(mg), lo, hi)
+      })
+    }
   }
 
   case class KyleEvent(user_id: Long, ts: java.sql.Timestamp,
                        value: Double, event_id: Long, size: Option[Long])
+      extends KeyedEvent
 
-  /** s40 — streaming Kyle lambda via flatMapGroupsWithState: the
+  /** s40 — streaming Kyle lambda on [[replayByUser]]: the
     * incremental twin of batch q170. State is (last price, last
     * nonzero tick sign) per instrument — identical to s34, because the
     * tick-rule recurrence is the only sequential dependency; the
@@ -2192,51 +2092,46 @@ object Streams {
     * increments hit batch q170's rounded output exactly. Caller
     * pre-extracts `size` from the props JSON (the q62/q170
     * convention). Same in-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def kyleStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double, Double, Double, Double)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("size"))
-      .as[KyleEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Double),
-        (Long, Long, Double, Double, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[KyleEvent],
-         state: GroupState[(Double, Double)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var lastPx = state.getOption.map(_._1)
-          var lastSign = state.getOption.map(_._2).filter(_ != 0.0)
-          var n = 0L
-          var sdp, sq, sxy, sq2 = 0.0
-          sorted.foreach { e =>
-            val dp = lastPx.map(e.value - _)
-            val raw = dp.map(math.signum)
-            val sign = raw match {
-              case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
-              case Some(_) => lastSign
-              case None => None
-            }
-            // a NULL size (props lacks k / non-numeric) contributes no
-            // observation, matching batch covar_pop/var_pop null-skip;
-            // the tick state (lastPx, lastSign) still advances
-            for (s <- sign; d <- dp; sz <- e.size) {
-              val q = s * sz.toDouble
-              n += 1L
-              sdp += d; sq += q; sxy += d * q; sq2 += q * q
-            }
-            lastPx = Some(e.value)
-          }
-          lastPx.foreach(p => state.update((p, lastSign.getOrElse(0.0))))
-          if (n == 0L) Iterator.empty
-          else Iterator((user, n, sdp, sq, sxy, sq2))
+    replayByUser[KyleEvent, (Double, Double),
+      (Long, Long, Double, Double, Double, Double)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          get_json_object(col("props"), "$.k").cast("long").as("size"))
+        .as[KyleEvent]) { (user, sorted, restored) =>
+      var lastPx = restored.map(_._1)
+      var lastSign = restored.map(_._2).filter(_ != 0.0)
+      var n = 0L
+      var sdp, sq, sxy, sq2 = 0.0
+      sorted.foreach { e =>
+        val dp = lastPx.map(e.value - _)
+        val raw = dp.map(math.signum)
+        val sign = raw match {
+          case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
+          case Some(_) => lastSign
+          case None => None
+        }
+        // a NULL size (props lacks k / non-numeric) contributes no
+        // observation, matching batch covar_pop/var_pop null-skip; the
+        // tick state (lastPx, lastSign) still advances
+        for (s <- sign; d <- dp; sz <- e.size) {
+          val q = s * sz.toDouble
+          n += 1L
+          sdp += d; sq += q; sxy += d * q; sq2 += q * q
+        }
+        lastPx = Some(e.value)
       }
+      (lastPx.map(p => (p, lastSign.getOrElse(0.0))),
+        if (n == 0L) Iterator.empty
+        else Iterator((user, n, sdp, sq, sxy, sq2)))
+    }
   }
 
   /** s41 — streaming time-weighted quoted spread via
-    * flatMapGroupsWithState: the incremental twin of batch q173, and
+    * [[replayByUser]]: the incremental twin of batch q173, and
     * the s25 BBO recurrence carried one step further into the
     * time-weighted domain. State per instrument is (best bid, best
     * ask, last print µs) — the interval OPEN at the batch boundary is
@@ -2254,48 +2149,41 @@ object Streams {
       : Dataset[(Long, java.sql.Timestamp, Long, Long, Double)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Double, Long),
-        (Long, java.sql.Timestamp, Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Double, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state: (best bid, best ask, last print µs); NaN = side unset
-          var (bid, ask, lastT) =
-            state.getOption.getOrElse((Double.NaN, Double.NaN, -1L))
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long, Double)]
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            if (lastT >= 0L) {
-              val day = lastT - Math.floorMod(lastT, dayUs)
-              // interval [lastT, t) belongs to lastT's day; it prices
-              // only if t is still the same day (the batch lead() is
-              // same-day partitioned) and the carried book is two-sided
-              // and uncrossed
-              if (t - Math.floorMod(t, dayUs) == day &&
-                  !bid.isNaN && !ask.isNaN && bid < ask) {
-                val w = t - lastT
-                val (n, qus, sw) = acc.getOrElse(day, (0L, 0L, 0.0))
-                acc(day) = (n + 1L, qus + w, sw + (ask - bid) * w.toDouble)
-              }
-            }
-            if (e.event_id % 2 == 0) bid = e.value else ask = e.value
-            lastT = t
+    replayByUser[SessionEvent, (Double, Double, Long),
+      (Long, java.sql.Timestamp, Long, Long, Double)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      // state: (best bid, best ask, last print µs); NaN = side unset
+      var (bid, ask, lastT) =
+        restored.getOrElse((Double.NaN, Double.NaN, -1L))
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long, Double)]
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        if (lastT >= 0L) {
+          val day = lastT - Math.floorMod(lastT, dayUs)
+          // interval [lastT, t) belongs to lastT's day; it prices only
+          // if t is still the same day (the batch lead() is same-day
+          // partitioned) and the carried book is two-sided and uncrossed
+          if (t - Math.floorMod(t, dayUs) == day &&
+              !bid.isNaN && !ask.isNaN && bid < ask) {
+            val w = t - lastT
+            val (n, qus, sw) = acc.getOrElse(day, (0L, 0L, 0.0))
+            acc(day) = (n + 1L, qus + w, sw + (ask - bid) * w.toDouble)
           }
-          state.update((bid, ask, lastT))
-          acc.iterator.map { case (day, (n, qus, sw)) =>
-            (user, tsFromMicros(day), n, qus, sw)
-          }
+        }
+        if (e.event_id % 2 == 0) bid = e.value else ask = e.value
+        lastT = t
       }
+      (Some((bid, ask, lastT)), acc.iterator.map { case (day, (n, qus, sw)) =>
+        (user, tsFromMicros(day), n, qus, sw)
+      })
+    }
   }
 
   /** s42 — streaming VPIN bucket maintenance via
-    * flatMapGroupsWithState: the incremental twin of batch q179.
+    * [[replayByUser]]: the incremental twin of batch q179.
     * State per instrument is (last price, last nonzero sign,
     * cumulative signed volume so far) — the carried cum is what keys
     * each print into its ABSOLUTE volume bucket, so bucket identity
@@ -2305,49 +2193,42 @@ object Streams {
     * bucket mean reproduce batch q179 at the 6dp round. A bucket
     * straddling a batch boundary accumulates from both sides into the
     * same bucket id via the carried cum. Same in-order-per-key
-    * delivery caveat as [[ewmaState]].
+    * delivery caveat as [[replayByUser]].
     */
   def vpinStream(spark: SparkSession, events: DataFrame,
                  bucketVol: Long = 500L)
       : Dataset[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("size"))
-      .as[KyleEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Double, Long),
-        (Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[KyleEvent],
-         state: GroupState[(Double, Double, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (lastPxRaw, lastSignRaw, cum) =
-            state.getOption.getOrElse((Double.NaN, 0.0, 0L))
-          var lastPx = if (lastPxRaw.isNaN) None else Some(lastPxRaw)
-          var lastSign = if (lastSignRaw == 0.0) None else Some(lastSignRaw)
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long)]
-          sorted.foreach { e =>
-            val raw = lastPx.map(p => math.signum(e.value - p))
-            val sign = raw match {
-              case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
-              case Some(_) => lastSign
-              case None => None
-            }
-            // NULL size adds no volume (batch sum null-skip); tick
-            // state still advances below
-            for (s <- sign; sz <- e.size) {
-              val bucket = cum / bucketVol // cum BEFORE this print
-              cum += sz
-              val (vol, net) = acc.getOrElse(bucket, (0L, 0L))
-              acc(bucket) = (vol + sz, net + s.toLong * sz)
-            }
-            lastPx = Some(e.value)
-          }
-          state.update((lastPx.getOrElse(Double.NaN),
-            lastSign.getOrElse(0.0), cum))
-          acc.iterator.map { case (b, (vol, net)) => (user, b, vol, net) }
+    replayByUser[KyleEvent, (Double, Double, Long), (Long, Long, Long, Long)](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          get_json_object(col("props"), "$.k").cast("long").as("size"))
+        .as[KyleEvent]) { (user, sorted, restored) =>
+      var (lastPxRaw, lastSignRaw, cum) =
+        restored.getOrElse((Double.NaN, 0.0, 0L))
+      var lastPx = if (lastPxRaw.isNaN) None else Some(lastPxRaw)
+      var lastSign = if (lastSignRaw == 0.0) None else Some(lastSignRaw)
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long)]
+      sorted.foreach { e =>
+        val raw = lastPx.map(p => math.signum(e.value - p))
+        val sign = raw match {
+          case Some(r) if r != 0.0 => lastSign = Some(r); Some(r)
+          case Some(_) => lastSign
+          case None => None
+        }
+        // NULL size adds no volume (batch sum null-skip); tick state
+        // still advances below
+        for (s <- sign; sz <- e.size) {
+          val bucket = cum / bucketVol // cum BEFORE this print
+          cum += sz
+          val (vol, net) = acc.getOrElse(bucket, (0L, 0L))
+          acc(bucket) = (vol + sz, net + s.toLong * sz)
+        }
+        lastPx = Some(e.value)
       }
+      (Some((lastPx.getOrElse(Double.NaN), lastSign.getOrElse(0.0), cum)),
+        acc.iterator.map { case (b, (vol, net)) => (user, b, vol, net) })
+    }
   }
 
   /** s45 — streaming PIT publish into a RELATIONAL store: the s5
@@ -2383,7 +2264,7 @@ object Streams {
       .start()
 
   /** s54 — streaming message-traffic surveillance via
-    * flatMapGroupsWithState: the incremental twin of batch q195. Day
+    * [[replayByUser]]: the incremental twin of batch q195. Day
     * totals are plain sum increments; the PEAK-minute statistic is the
     * recurrence — state per instrument is just (open minute µs, its
     * quote count): a print in a later minute CLOSES the open one,
@@ -2393,59 +2274,52 @@ object Streams {
     * q195's max over complete minutes — including the tape-end minute
     * that never closes (the s47 partial-horizon convention). All
     * integers; reduces bit-exactly. Same in-order-per-key delivery
-    * caveat as [[ewmaState]].
+    * caveat as [[replayByUser]].
     */
   def messageTrafficStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Long, Long, Long)] = {
     import spark.implicits._
     val minUs = 60L * 1000000L
     val dayUs = 86400L * 1000000L
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        col("event_type"))
-      .as[PrintEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long),
-        (Long, java.sql.Timestamp, Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[PrintEvent],
-         state: GroupState[(Long, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (curMin, curQ) = state.getOption.getOrElse((-1L, 0L))
-          // per-day batch increments: (dq, dt, closedPeak)
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long, Long)]
-          def bump(day: Long)(f: ((Long, Long, Long)) => (Long, Long, Long))
-              : Unit = acc(day) = f(acc.getOrElse(day, (0L, 0L, 0L)))
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            val m = t - Math.floorMod(t, minUs)
-            if (m != curMin) {
-              if (curMin >= 0L) {
-                val oldDay = curMin - Math.floorMod(curMin, dayUs)
-                bump(oldDay) { case (q, tr, p) =>
-                  (q, tr, math.max(p, curQ)) }
-              }
-              curMin = m; curQ = 0L
-            }
-            val day = t - Math.floorMod(t, dayUs)
-            if (e.event_type == "purchase")
-              bump(day) { case (q, tr, p) => (q, tr + 1L, p) }
-            else {
-              curQ += 1L
-              bump(day) { case (q, tr, p) => (q + 1L, tr, p) }
-            }
+    replayByUser[PrintEvent, (Long, Long),
+      (Long, java.sql.Timestamp, Long, Long, Long, Long)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          col("event_type"))
+        .as[PrintEvent]) { (user, sorted, restored) =>
+      var (curMin, curQ) = restored.getOrElse((-1L, 0L))
+      // per-day batch increments: (dq, dt, closedPeak)
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long, Long)]
+      def bump(day: Long)(f: ((Long, Long, Long)) => (Long, Long, Long))
+          : Unit = acc(day) = f(acc.getOrElse(day, (0L, 0L, 0L)))
+      sorted.foreach { e =>
+        val t = micros(e.ts)
+        val m = t - Math.floorMod(t, minUs)
+        if (m != curMin) {
+          if (curMin >= 0L) {
+            val oldDay = curMin - Math.floorMod(curMin, dayUs)
+            bump(oldDay) { case (q, tr, p) => (q, tr, math.max(p, curQ)) }
           }
-          state.update((curMin, curQ))
-          val openRow =
-            if (curMin >= 0L) {
-              val d = curMin - Math.floorMod(curMin, dayUs)
-              Iterator((user, tsFromMicros(d), 0L, 0L, 0L, curQ))
-            } else Iterator.empty
-          acc.iterator.map { case (d, (q, tr, p)) =>
-            (user, tsFromMicros(d), q, tr, p, 0L)
-          } ++ openRow
+          curMin = m; curQ = 0L
+        }
+        val day = t - Math.floorMod(t, dayUs)
+        if (e.event_type == "purchase")
+          bump(day) { case (q, tr, p) => (q, tr + 1L, p) }
+        else {
+          curQ += 1L
+          bump(day) { case (q, tr, p) => (q + 1L, tr, p) }
+        }
       }
+      val openRow =
+        if (curMin >= 0L) {
+          val d = curMin - Math.floorMod(curMin, dayUs)
+          Iterator((user, tsFromMicros(d), 0L, 0L, 0L, curQ))
+        } else Iterator.empty
+      (Some((curMin, curQ)), acc.iterator.map { case (d, (q, tr, p)) =>
+        (user, tsFromMicros(d), q, tr, p, 0L)
+      } ++ openRow)
+    }
   }
 
   /** s53 — streaming tokenizer-fertility census: batch q192's four
@@ -2588,7 +2462,7 @@ object Streams {
   }
 
   /** s55 — streaming AR(1) regression ledger via
-    * flatMapGroupsWithState: the incremental twin of batch q201.
+    * [[replayByUser]]: the incremental twin of batch q201.
     * State per instrument is ONE value — the last positive print's
     * 12dp log-price lattice in integer picounits (non-positive prints
     * are absent from batch q201's tape, so they neither pair nor break
@@ -2602,55 +2476,50 @@ object Streams {
     * Increments therefore reduce EXACTLY under any micro-batch split,
     * and the consumer runs batch q201's own slope/half-life tail on
     * identical operands. Same in-order-per-key delivery caveat as
-    * [[ewmaState]].
+    * [[replayByUser]].
     */
   def ar1Stream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, String, String, String, String)] = {
     import spark.implicits._
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long,
-        (Long, Long, String, String, String, String)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[Long]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var prev = state.getOption.getOrElse(Long.MinValue)
-          var n = 0L; var sx = 0L; var sy = 0L
-          var sxy = java.math.BigInteger.ZERO
-          var sxx = java.math.BigInteger.ZERO
-          sorted.foreach { e =>
-            // 12dp HALF_UP lattice in integer picounits — exactly
-            // Num.decRound(log(value), 12) scaled by 10^12
-            val x = BigDecimal(math.log(e.value))
-              .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-              .*(BigDecimal(1000000000000L)).toLongExact
-            if (prev != Long.MinValue) {
-              // addExact: a picounit linear sum overflows a long only
-              // past ~10⁵ prints/key/batch of |ln px| ≈ 10 — loud, not
-              // silent, if a deployment ever gets there
-              n += 1L
-              sx = Math.addExact(sx, prev); sy = Math.addExact(sy, x)
-              val p = java.math.BigInteger.valueOf(prev)
-              sxy = sxy.add(p.multiply(java.math.BigInteger.valueOf(x)))
-              sxx = sxx.add(p.multiply(p))
-            }
-            prev = x
-          }
-          if (prev != Long.MinValue) state.update(prev)
-          if (n == 0L) Iterator.empty
-          else Iterator((user, n,
-            java.math.BigDecimal.valueOf(sx, 12).toPlainString,
-            java.math.BigDecimal.valueOf(sy, 12).toPlainString,
-            new java.math.BigDecimal(sxy, 24).toPlainString,
-            new java.math.BigDecimal(sxx, 24).toPlainString))
+    replayByUser[SessionEvent, Long,
+      (Long, Long, String, String, String, String)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var prev = restored.getOrElse(Long.MinValue)
+      var n = 0L; var sx = 0L; var sy = 0L
+      var sxy = java.math.BigInteger.ZERO
+      var sxx = java.math.BigInteger.ZERO
+      sorted.foreach { e =>
+        // 12dp HALF_UP lattice in integer picounits — exactly
+        // Num.decRound(log(value), 12) scaled by 10^12
+        val x = BigDecimal(math.log(e.value))
+          .setScale(12, BigDecimal.RoundingMode.HALF_UP)
+          .*(BigDecimal(1000000000000L)).toLongExact
+        if (prev != Long.MinValue) {
+          // addExact: a picounit linear sum overflows a long only past
+          // ~10⁵ prints/key/batch of |ln px| ≈ 10 — loud, not silent,
+          // if a deployment ever gets there
+          n += 1L
+          sx = Math.addExact(sx, prev); sy = Math.addExact(sy, x)
+          val p = java.math.BigInteger.valueOf(prev)
+          sxy = sxy.add(p.multiply(java.math.BigInteger.valueOf(x)))
+          sxx = sxx.add(p.multiply(p))
+        }
+        prev = x
       }
+      (Some(prev).filter(_ != Long.MinValue),
+        if (n == 0L) Iterator.empty
+        else Iterator((user, n,
+          java.math.BigDecimal.valueOf(sx, 12).toPlainString,
+          java.math.BigDecimal.valueOf(sy, 12).toPlainString,
+          new java.math.BigDecimal(sxy, 24).toPlainString,
+          new java.math.BigDecimal(sxx, 24).toPlainString)))
+    }
   }
 
   /** s56 — streaming implementation-shortfall ledger via
-    * flatMapGroupsWithState: the incremental twin of batch q203.
+    * [[replayByUser]]: the incremental twin of batch q203.
     * State per instrument is (current day µs, that day's ARRIVAL
     * price) — the first positive print of the day, carried so a
     * purchase in a later micro-batch benchmarks against the arrival
@@ -2659,52 +2528,48 @@ object Streams {
     * Σ px6·k in micro-units) — ALL integer, so increments reduce
     * bit-exactly and the consumer's 10⁴·(notional−arr·qty)/(arr·qty)
     * equals batch q203 before its round. Same in-order-per-key
-    * delivery caveat as [[ewmaState]].
+    * delivery caveat as [[replayByUser]].
     */
   def shortfallStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, java.sql.Timestamp, Long, Long, Long, Long)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("size"))
-      .as[ShortfallEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long),
-        (Long, java.sql.Timestamp, Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[ShortfallEvent],
-         state: GroupState[(Long, Long)]) =>
-          def micro6(v: Double): Long =
-            BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-              .*(BigDecimal(1000000L)).toLongExact
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state: (day µs, arrival price in 6dp micro-units)
-          var (day, arr6) = state.getOption.getOrElse((Long.MinValue, 0L))
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long, Long, Long)]
-          sorted.foreach { e =>
-            val d = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
-            if (d != day) { day = d; arr6 = micro6(e.value) }
-            if (e.event_type == "purchase" && e.size.exists(_ > 0L)) {
-              val k = e.size.get
-              val (n, q, nt, a) = acc.getOrElse(day, (0L, 0L, 0L, arr6))
-              acc(day) = (n + 1L, q + k,
-                Math.addExact(nt, Math.multiplyExact(micro6(e.value), k)),
-                arr6)
-            }
-          }
-          if (day != Long.MinValue) state.update((day, arr6))
-          acc.iterator.map { case (d, (n, q, nt, a)) =>
-            (user, tsFromMicros(d), a, n, q, nt)
-          }
+    def micro6(v: Double): Long =
+      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        .*(BigDecimal(1000000L)).toLongExact
+    replayByUser[ShortfallEvent, (Long, Long),
+      (Long, java.sql.Timestamp, Long, Long, Long, Long)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"),
+          col("event_type"),
+          get_json_object(col("props"), "$.k").cast("long").as("size"))
+        .as[ShortfallEvent]) { (user, sorted, restored) =>
+      // state: (day µs, arrival price in 6dp micro-units)
+      var (day, arr6) = restored.getOrElse((Long.MinValue, 0L))
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long, Long, Long)]
+      sorted.foreach { e =>
+        val d = micros(e.ts) - Math.floorMod(micros(e.ts), dayUs)
+        if (d != day) { day = d; arr6 = micro6(e.value) }
+        if (e.event_type == "purchase" && e.size.exists(_ > 0L)) {
+          val k = e.size.get
+          val (n, q, nt, a) = acc.getOrElse(day, (0L, 0L, 0L, arr6))
+          acc(day) = (n + 1L, q + k,
+            Math.addExact(nt, Math.multiplyExact(micro6(e.value), k)),
+            arr6)
+        }
       }
+      (Some((day, arr6)).filter(_._1 != Long.MinValue),
+        acc.iterator.map { case (d, (n, q, nt, a)) =>
+          (user, tsFromMicros(d), a, n, q, nt)
+        })
+    }
   }
 
   case class ShortfallEvent(user_id: Long, ts: java.sql.Timestamp,
                             value: Double, event_id: Long,
                             event_type: String, size: Option[Long])
+      extends KeyedEvent
 
   /** s57 — streaming minute-bin census via NATIVE streaming
     * aggregation (the s53 convention): per (instrument, minute), the
@@ -2724,7 +2589,7 @@ object Streams {
       .groupBy(col("user_id"), col("minute"))
       .agg(count(lit(1)).as("c"))
 
-  /** s62 — streaming BNS jump ledger via flatMapGroupsWithState: the
+  /** s62 — streaming BNS jump ledger on [[replayByUser]]: the
     * incremental twin of batch q215. State per instrument is TWO
     * picounit lattices — the last log price and the last \|return\| —
     * because RV and bipower are both one-lag recurrences over the same
@@ -2733,105 +2598,92 @@ object Streams {
     * s55 convention); increments reduce bit-exactly under any split
     * and the consumer applies batch q215's (28,10) re-narrow + π/2 +
     * 6dp tail on identical operands. Same in-order-per-key delivery
-    * caveat as [[ewmaState]].
+    * caveat as [[replayByUser]].
     */
   def jumpStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, String, String, Long)] = {
     import spark.implicits._
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long),
-        (Long, Long, String, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Long, Long)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var (prev, prevAr) = state.getOption.getOrElse(
-            (Long.MinValue, Long.MinValue))
-          var n = 0L; var nBp = 0L
-          var rv = java.math.BigInteger.ZERO
-          var bp = java.math.BigInteger.ZERO
-          sorted.foreach { e =>
-            val x = BigDecimal(math.log(e.value))
-              .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-              .*(BigDecimal(1000000000000L)).toLongExact
-            if (prev != Long.MinValue) {
-              val r = x - prev
-              val ar = math.abs(r)
-              n += 1L
-              val rB = java.math.BigInteger.valueOf(r)
-              rv = rv.add(rB.multiply(rB))
-              if (prevAr != Long.MinValue) {
-                nBp += 1L
-                bp = bp.add(java.math.BigInteger.valueOf(ar)
-                  .multiply(java.math.BigInteger.valueOf(prevAr)))
-              }
-              prevAr = ar
-            }
-            prev = x
+    replayByUser[SessionEvent, (Long, Long),
+      (Long, Long, String, String, Long)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      var (prev, prevAr) = restored.getOrElse((Long.MinValue, Long.MinValue))
+      var n = 0L; var nBp = 0L
+      var rv = java.math.BigInteger.ZERO
+      var bp = java.math.BigInteger.ZERO
+      sorted.foreach { e =>
+        val x = BigDecimal(math.log(e.value))
+          .setScale(12, BigDecimal.RoundingMode.HALF_UP)
+          .*(BigDecimal(1000000000000L)).toLongExact
+        if (prev != Long.MinValue) {
+          val r = x - prev
+          val ar = math.abs(r)
+          n += 1L
+          val rB = java.math.BigInteger.valueOf(r)
+          rv = rv.add(rB.multiply(rB))
+          if (prevAr != Long.MinValue) {
+            nBp += 1L
+            bp = bp.add(java.math.BigInteger.valueOf(ar)
+              .multiply(java.math.BigInteger.valueOf(prevAr)))
           }
-          if (prev != Long.MinValue) state.update((prev, prevAr))
-          if (n == 0L) Iterator.empty
-          else Iterator((user, n,
-            new java.math.BigDecimal(rv, 24).toPlainString,
-            new java.math.BigDecimal(bp, 24).toPlainString, nBp))
+          prevAr = ar
+        }
+        prev = x
       }
+      (Some((prev, prevAr)).filter(_._1 != Long.MinValue),
+        if (n == 0L) Iterator.empty
+        else Iterator((user, n,
+          new java.math.BigDecimal(rv, 24).toPlainString,
+          new java.math.BigDecimal(bp, 24).toPlainString, nBp)))
+    }
   }
 
-  /** s63 — streaming trade-sign ACF ledger via flatMapGroupsWithState:
+  /** s63 — streaming trade-sign ACF ledger on [[replayByUser]]:
     * the incremental twin of batch q218. State per instrument is the
     * last price, the carried tick-rule sign, and the last THREE signs
     * (so lag-1/2/3 pairs straddle micro-batch boundaries); every
     * emitted increment is an INTEGER (signs are ±1 longs — counts and
     * moment sums per lag), so increments reduce bit-exactly and the
     * consumer runs batch q218's closed-form ρ on identical operands.
-    * Same in-order-per-key delivery caveat as [[ewmaState]].
+    * Same in-order-per-key delivery caveat as [[replayByUser]].
     */
   def signAcfStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Seq[Long])] = {
     import spark.implicits._
-    events
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Long, Seq[Long]),
-        (Long, Long, Seq[Long])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[SessionEvent],
-         state: GroupState[(Double, Long, Seq[Long])]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          // state: (last price, carried sign or 0, last <=3 signs)
-          var (lastPx, carried, recent) = state.getOption.getOrElse(
-            (Double.NaN, 0L, Seq.empty[Long]))
-          var n = 0L
-          // per lag: (n, sx, sy, sxy, sxx, syy) — syy = n and sxx = n
-          // on ±1 signs, but the GENERAL sums are emitted so the
-          // consumer mirrors the batch formula untouched
-          val mo = Array.fill(18)(0L)
-          sorted.foreach { e =>
-            if (!lastPx.isNaN) {
-              val d = e.value - lastPx
-              if (d != 0.0) carried = if (d > 0.0) 1L else -1L
-            }
-            lastPx = e.value
-            if (carried != 0L) {
-              val s = carried
-              n += 1L
-              for (k <- 1 to 3; if recent.size >= k) {
-                val sl = recent(recent.size - k)
-                val o = (k - 1) * 6
-                mo(o) += 1L; mo(o + 1) += s; mo(o + 2) += sl
-                mo(o + 3) += s * sl; mo(o + 4) += s * s; mo(o + 5) += sl * sl
-              }
-              recent = (recent :+ s).takeRight(3)
-            }
+    replayByUser[SessionEvent, (Double, Long, Seq[Long]),
+      (Long, Long, Seq[Long])](
+      events.select(col("user_id"), col("ts"), col("value"), col("event_id"))
+        .as[SessionEvent]) { (user, sorted, restored) =>
+      // state: (last price, carried sign or 0, last <=3 signs)
+      var (lastPx, carried, recent) =
+        restored.getOrElse((Double.NaN, 0L, Seq.empty[Long]))
+      var n = 0L
+      // per lag: (n, sx, sy, sxy, sxx, syy) — syy = n and sxx = n on ±1
+      // signs, but the GENERAL sums are emitted so the consumer mirrors
+      // the batch formula untouched
+      val mo = Array.fill(18)(0L)
+      sorted.foreach { e =>
+        if (!lastPx.isNaN) {
+          val d = e.value - lastPx
+          if (d != 0.0) carried = if (d > 0.0) 1L else -1L
+        }
+        lastPx = e.value
+        if (carried != 0L) {
+          val s = carried
+          n += 1L
+          for (k <- 1 to 3; if recent.size >= k) {
+            val sl = recent(recent.size - k)
+            val o = (k - 1) * 6
+            mo(o) += 1L; mo(o + 1) += s; mo(o + 2) += sl
+            mo(o + 3) += s * sl; mo(o + 4) += s * s; mo(o + 5) += sl * sl
           }
-          state.update((lastPx, carried, recent))
-          if (n == 0L) Iterator.empty
-          else Iterator((user, n, mo.toSeq))
+          recent = (recent :+ s).takeRight(3)
+        }
       }
+      (Some((lastPx, carried, recent)),
+        if (n == 0L) Iterator.empty else Iterator((user, n, mo.toSeq)))
+    }
   }
 
   /** s60/s61 — ONE streaming ledger, TWO batch twins: the native
@@ -2853,50 +2705,20 @@ object Streams {
       .groupBy(col("user_id"), col("day"))
       .agg(sum(col("k")).as("v"))
 
-  /** s65 — the (instrument, day) HIGH/LOW census ledger: day-high is a
-    * running max, day-low a running min, so every update-mode emission
-    * is monotone per cell (h only rises, l only falls) and the
-    * converged ledger (max h, min l per cell) equals the batch H/L
-    * frame EXACTLY under any micro-batch slicing. Batch q219's
-    * Corwin–Schultz estimator is a pure function of this frame
-    * ([[graft.queries.Microstructure.csSpreadFromDaily]]) — the s60
-    * one-ledger convention for the range-spread family. State is two
-    * doubles per open (instrument, day) cell.
-    */
-  def dailyHlStream(events: DataFrame): DataFrame =
-    events
-      .filter(col("value") > 0.0)
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(max(col("value")).as("h"), min(col("value")).as("l"))
-
-  /** s67 — the (instrument, day) CLOSE ledger: the day's last event as
-    * a running max over the (ts, event_id, value) struct —
-    * lexicographic struct max is monotone under accumulation and ties
-    * break on event_id, the same total order as the batch closes
-    * spine, so the converged ledger (max struct per cell) equals
-    * [[graft.queries.Quant.dailyCloses]] exactly under any slicing.
-    * BOTH pair-family batch twins (q202 cointegration, q208 lead-lag)
-    * are pure functions of this frame — one ledger, two tails. State
-    * is one struct per open (instrument, day) cell.
-    */
-  def dailyCloseStream(events: DataFrame): DataFrame =
-    events
-      .filter(col("value") > 0.0)
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(max(struct(col("ts"), col("event_id"), col("value")))
-        .as("last"))
-      .select(col("user_id"), col("day"), col("last.ts").as("ts"),
-        col("last.event_id").as("event_id"), col("last.value").as("close"))
-
   /** s68 — the full (instrument, day) OHLC ledger: open/close as
-    * lexicographic struct extremes (the s67 order), high/low as plain
-    * extremes — all four components monotone under accumulation, so
-    * the converged ledger equals
+    * lexicographic extremes of the (ts, event_id, value) struct — ties
+    * break on event_id, the same total order as the batch closes
+    * spine — and high/low as plain extremes. All four components are
+    * monotone under accumulation, so the converged ledger (min open
+    * struct, max close struct, max h, min l per cell) equals
     * [[graft.queries.Microstructure.dailyOhlc]] exactly under any
-    * slicing. The OHLC volatility family runs as shared batch tails
-    * on top (q220 Garman–Klass via gkFromDailyOhlc, q223 Parkinson
-    * via parkFromDailyHl on the H/L projection); state is two structs
-    * + two doubles per open cell.
+    * slicing. Every daily-bar family runs as a shared batch tail on a
+    * projection of it: the OHLC volatility family (q220 Garman–Klass
+    * via gkFromDailyOhlc, q223 Parkinson via parkFromDailyHl), q219
+    * Corwin–Schultz on (h, l) via csSpreadFromDaily, and the closes
+    * family (q202 cointegration, q208 lead-lag, q221 OBV, …) on the
+    * close struct, which converges to [[graft.queries.Quant.dailyCloses]].
+    * State is two structs + two doubles per open cell.
     */
   def dailyOhlcStream(events: DataFrame): DataFrame =
     events
@@ -2981,8 +2803,9 @@ object Streams {
 
   case class AttrEvent(user_id: Long, ts: java.sql.Timestamp,
                        event_id: Long, event_type: String, value: Double)
+      extends KeyedEvent
 
-  /** s70 — streaming last-touch attribution via flatMapGroupsWithState:
+  /** s70 — streaming last-touch attribution on [[replayByUser]]:
     * the live twin of batch q289. Unlike the ledger twins (whose
     * converged state is a monoid fold), attribution is ORDER-DEPENDENT
     * — each purchase must see the last non-purchase touch AS OF its
@@ -2995,37 +2818,31 @@ object Streams {
     * same shortest-repr conversion. Emits one attributed (channel,
     * cents) row per purchase; the spec folds per-channel sums and
     * they equal batch q289 exactly. Same in-order-per-key delivery
-    * caveat as [[ewmaState]].
+    * caveat as [[replayByUser]].
     */
   def attributionStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, String, Long)] = {
     import spark.implicits._
-    events.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[AttrEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, String), (Long, Long, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[AttrEvent],
-         state: GroupState[(Long, String)]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var lastNp = state.getOption
-          val out = Seq.newBuilder[(Long, Long, String, Long)]
-          sorted.foreach { e =>
-            if (e.event_type == "purchase") {
-              val channel = lastNp match {
-                case Some((npUs, npType))
-                    if micros(e.ts) - npUs <= 604800000000L => npType
-                case _ => "direct"
-              }
-              val cents = (BigDecimal(e.value)
-                .setScale(12, BigDecimal.RoundingMode.HALF_UP) * 100)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact
-              out += ((user, e.event_id, channel, cents))
-            } else lastNp = Some((micros(e.ts), e.event_type))
+    replayByUser[AttrEvent, (Long, String), (Long, Long, String, Long)](
+      events.select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+        .as[AttrEvent]) { (user, sorted, restored) =>
+      var lastNp = restored
+      val out = Seq.newBuilder[(Long, Long, String, Long)]
+      sorted.foreach { e =>
+        if (e.event_type == "purchase") {
+          val channel = lastNp match {
+            case Some((npUs, npType))
+                if micros(e.ts) - npUs <= 604800000000L => npType
+            case _ => "direct"
           }
-          lastNp.foreach(state.update)
-          out.result().iterator
+          val cents = (BigDecimal(e.value)
+            .setScale(12, BigDecimal.RoundingMode.HALF_UP) * 100)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact
+          out += ((user, e.event_id, channel, cents))
+        } else lastNp = Some((micros(e.ts), e.event_type))
       }
+      (lastNp, out.result().iterator)
+    }
   }
 }

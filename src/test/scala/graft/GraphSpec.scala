@@ -186,4 +186,40 @@ class GraphSpec extends SparkTestBase {
     assert(!plan.contains("Exchange hashpartitioning"),
       s"consumer re-shuffled a kept layout:\n$plan")
   }
+
+  test("checkpointKeepLayout's sibling session follows parent conf and strategy changes made after first use") {
+    val tz = "spark.sql.session.timeZone"
+    val ansi = "spark.sql.ansi.enabled"
+    val src = spark.range(0, 100).select(($"id" % 7).as("k"), $"id".as("v"))
+      .repartition(4, $"k")
+    operators.Graph.checkpointKeepLayout(src).count() // first use
+    val savedTz = spark.conf.get(tz)
+    val savedAnsi = spark.conf.get(ansi)
+    val savedStrategies = spark.experimental.extraStrategies
+    object NoopStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+          : Seq[org.apache.spark.sql.execution.SparkPlan] = Nil
+    }
+    try {
+      spark.conf.set(tz, "America/New_York")
+      spark.conf.set(ansi, (!savedAnsi.toBoolean).toString)
+      spark.experimental.extraStrategies = savedStrategies :+ NoopStrategy
+      val ck = operators.Graph.checkpointKeepLayout(src)
+      assert(ck.exceptAll(src).isEmpty && src.exceptAll(ck).isEmpty)
+      val sib = operators.Graph.layoutSession(spark)
+      assert(!(sib eq spark))
+      assert(sib.conf.get(tz) == "America/New_York")
+      assert(sib.conf.get(ansi) == spark.conf.get(ansi))
+      assert(sib.conf.get("spark.sql.adaptive.enabled") == "false")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      // copied once, however many calls
+      operators.Graph.layoutSession(spark)
+      assert(sib.experimental.extraStrategies.count(_ eq NoopStrategy) == 1)
+    } finally {
+      spark.conf.set(tz, savedTz)
+      spark.conf.set(ansi, savedAnsi)
+      spark.experimental.extraStrategies = savedStrategies
+    }
+    assert(operators.Graph.layoutSession(spark).conf.get(tz) == savedTz)
+  }
 }

@@ -346,6 +346,29 @@ class OperatorsSpec extends SparkTestBase {
       "wide input must be returned unchanged (no extra repartition node)")
   }
 
+  test("spreadForCompute keys on the core count, not spark.sql.shuffle.partitions") {
+    import spark.implicits._
+    val cores = spark.sparkContext.defaultParallelism
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try {
+      // a split per core keeps every core busy: no exchange, even though
+      // the frame is far under the 200 shuffle partitions
+      val perCore = (1 to 100).toDF("x").repartition(cores)
+      val kept = graft.operators.Ann.spreadForCompute(perCore)
+      assert(kept.queryExecution.logical eq perCore.queryExecution.logical,
+        "a frame with one split per core must not be re-shuffled")
+      assert(kept.rdd.getNumPartitions == cores)
+      // a single split still spreads, to the same max(cores, 200) width
+      val narrow = (1 to 100).toDF("x").coalesce(1)
+      val spread = graft.operators.Ann.spreadForCompute(narrow)
+      assert(!(spread.queryExecution.logical eq narrow.queryExecution.logical))
+      assert(spread.rdd.getNumPartitions == math.max(cores, 200))
+      assert(spread.collect().map(_.getInt(0)).sorted.toSeq == (1 to 100))
+    } finally spark.conf.set(key, saved)
+  }
+
   test("triangleStats counts a known graph exactly") {
     import spark.implicits._
     // K4 on {1,2,3,4} (4 triangles) + pendant 4-5 (0 triangles).

@@ -299,23 +299,6 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed.join(batch, Seq("user_id", "ewma"), "left_anti").count() == 0)
   }
 
-  test("streaming drawdown state equals the batch q73 result per user") {
-    val stream = Streams.eventsStream(spark, streamDir)
-    val q = Streams.drawdownState(spark, stream)
-      .toDF("user_id", "max_drawdown", "peak_value")
-      .writeStream.outputMode("update").format("memory")
-      .queryName("dd_out").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val streamed = spark.table("dd_out")
-      .groupBy($"user_id").agg(last($"max_drawdown").as("max_drawdown"),
-        last($"peak_value").as("peak_value"))
-    val batch = SparkEntry.queries("q73_drawdown")(spark, sf)
-    assert(streamed.count() > 0)
-    // identical FP fold → exact equality, no tolerance needed
-    assert(streamed.join(batch,
-      Seq("user_id", "max_drawdown", "peak_value"), "left_anti").count() == 0)
-  }
-
   test("incremental PIT upsert sink converges to the batch q29 result") {
     val tableDir = java.nio.file.Files.createTempDirectory("graft_pit").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pit_ck").toString
@@ -808,12 +791,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming H/L ledger rebuilds batch q219 Corwin-Schultz (s65)") {
-    val q = Streams.dailyHlStream(slicedEventsStream("hl"))
+    val q = Streams.dailyOhlcStream(slicedEventsStream("hl"))
       .writeStream.outputMode("update").format("memory")
       .queryName("hl_out").start()
     try { q.processAllAvailable() } finally { q.stop() }
-    // h is a running max, l a running min: converged = extremes of the
-    // emissions per cell
+    // the (h, l) projection of the OHLC ledger: h is a running max, l a
+    // running min, so converged = extremes of the emissions per cell
     val hl = spark.table("hl_out")
       .groupBy($"user_id", $"day")
       .agg(max($"h").as("h"), min($"l").as("l"))
@@ -850,16 +833,17 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("one streaming close ledger rebuilds BOTH pair-family twins q202 and q208 (s67)") {
-    val q = Streams.dailyCloseStream(slicedEventsStream("close"))
+    val q = Streams.dailyOhlcStream(slicedEventsStream("close"))
       .writeStream.outputMode("update").format("memory")
       .queryName("close_out").start()
     try { q.processAllAvailable() } finally { q.stop() }
-    // lexicographic struct max is monotone: converged = max emission
+    // the close projection of the OHLC ledger: lexicographic struct max
+    // is monotone, so converged = max emission
     val closes = spark.table("close_out")
       .groupBy($"user_id", $"day")
-      .agg(max(struct($"ts", $"event_id", $"close")).as("last"))
+      .agg(max(struct($"c_ts", $"c_eid", $"c")).as("last"))
       .select($"user_id", $"day",
-        graft.functions.Num.decRound(log($"last.close"), 12)
+        graft.functions.Num.decRound(log($"last.c"), 12)
           .cast(org.apache.spark.sql.types.DecimalType(18, 12)).as("x"))
       .localCheckpoint()
     assert(closes.count() > 0)
@@ -1101,7 +1085,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("OBV composes TWO ledgers: s67 closes x s60 volumes rebuild batch q221") {
     val stream = slicedEventsStream("obv")
-    val qc = Streams.dailyCloseStream(stream)
+    val qc = Streams.dailyOhlcStream(stream)
       .writeStream.outputMode("update").format("memory")
       .queryName("obv_closes").start()
     try { qc.processAllAvailable() } finally { qc.stop() }
@@ -1111,9 +1095,9 @@ class StreamingSpec extends SparkTestBase {
     try { qv.processAllAvailable() } finally { qv.stop() }
     val closes = spark.table("obv_closes")
       .groupBy($"user_id", $"day")
-      .agg(max(struct($"ts", $"event_id", $"close")).as("last"))
+      .agg(max(struct($"c_ts", $"c_eid", $"c")).as("last"))
       .select($"user_id", $"day",
-        graft.functions.Num.decRound(log($"last.close"), 12)
+        graft.functions.Num.decRound(log($"last.c"), 12)
           .cast(org.apache.spark.sql.types.DecimalType(18, 12)).as("x"))
       .localCheckpoint()
     val vol = spark.table("obv_vol")
@@ -1928,6 +1912,44 @@ class StreamingSpec extends SparkTestBase {
     val batch = SparkEntry.queries("q160_conflate")(spark, sf)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("replay twins sort each user's micro-batch: a reversed (ts, event_id) feed equals the in-order feed") {
+    // the same tape as ONE micro-batch, written once ascending and once
+    // descending in (ts, event_id): only the replay's per-user sort can
+    // make the order-dependent folds (carried last price/ts, carried
+    // last type) agree
+    val ev = Tables.events(spark, sf)
+    def feed(tag: String, descending: Boolean) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+        .toString
+      val key = Seq($"ts", $"event_id")
+      ev.orderBy((if (descending) key.map(_.desc) else key.map(_.asc)): _*)
+        .coalesce(1).write.parquet(s"$dir/batch")
+      // the file really holds the tape in the requested order
+      val us = spark.read.parquet(s"$dir/batch")
+        .select(unix_micros($"ts")).as[Long].collect().toSeq
+      assert(us.head != us.last)
+      assert(us == (if (descending) us.sorted.reverse else us.sorted))
+      spark.readStream.schema(ev.schema).parquet(s"$dir/batch")
+    }
+    val asc = feed("order_asc", descending = false)
+    val desc = feed("order_desc", descending = true)
+    def drain(out: org.apache.spark.sql.DataFrame, name: String) = {
+      val q = out.writeStream.outputMode("update").format("memory")
+        .queryName(name).start()
+      try { q.processAllAvailable() } finally { q.stop() }
+      spark.table(name)
+    }
+    def same(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame) =
+      a.count() > 0 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    assert(same(
+      drain(Streams.conflateStream(spark, asc).toDF(), "order_confl_asc"),
+      drain(Streams.conflateStream(spark, desc).toDF(), "order_confl_desc")))
+    assert(same(
+      drain(Streams.transitionStream(spark, asc).toDF(), "order_trans_asc"),
+      drain(Streams.transitionStream(spark, desc).toDF(), "order_trans_desc")))
   }
 
   test("streaming OFI increments reduce to the batch q156 result") {
