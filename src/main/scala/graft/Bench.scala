@@ -360,20 +360,26 @@ object Bench {
     // the tail window.
     val fullLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"warm_total":$warmTotal%.3f,"queries_warm":$warmQs,"forced":$forcedJson,"errors":$errs,"n_failed":${results.size - ok.size},"sf":"$sfDir"}"""
     println(fullLine)
-    // The full record also lands in a FILE: the driver keeps only the
-    // final ~2000 chars of stdout, so per-query history must never
-    // depend on the tail window (BENCH_r1..r10 all carried truncated
-    // maps; from r11 the committed results/ file is the archive).
-    val detailPath = "results/bench_full_latest.json"
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("results"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(detailPath), fullLine + "\n")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     // sf pattern disallows a trailing dot (e.g. dir "sf2.final" must not
     // emit the invalid unquoted JSON number `2.`).
     val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
+    // The full record also lands in a FILE: the driver keeps only the
+    // final ~2000 chars of stdout, so per-query history must never
+    // depend on the tail window (BENCH_r1..r10 all carried truncated
+    // maps; from r11 the committed results/ file is the archive). The
+    // file name carries the scale factor, so a run at one sf never
+    // overwrites another's record; bench_full_latest.json is the sf0.1
+    // board's record and only an sf0.1 run writes it.
+    val detailPath = s"results/bench_sf${sfNum}_latest.json"
+    val detailPaths =
+      if (sfNum == "0.1") Seq(detailPath, "results/bench_full_latest.json")
+      else Seq(detailPath)
+    try {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("results"))
+      detailPaths.foreach(p => java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(p), fullLine + "\n"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     // n_failed on the warm line counts BOTH passes: a query that succeeds
     // cold but fails warm must not silently vanish from the summary.
     val nFailed = SparkEntry.queries.size - warmOk.map(_._1).toSet.intersect(ok.map(_._1).toSet).size

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types._
 
 /** Typed loaders for the driver-generated test tables.
@@ -84,6 +84,15 @@ object Tables {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
+
+  /** The trade size: `props`' JSON `k` read as a long. A payload with
+    * no `k`, or a `k` that is not a JSON integer ({"k": 5.5},
+    * {"k": "7"}), gives NULL; every batch query and streaming twin
+    * that reads a size parses it here.
+    */
+  def tradeSize(props: Column): Column =
+    F.from_json(props, StructType(Seq(StructField("k", LongType))))
+      .getField("k")
 
   val documentsSchema = StructType(Seq(
     StructField("doc_id", LongType),

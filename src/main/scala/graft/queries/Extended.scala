@@ -865,25 +865,23 @@ object Extended {
     "SELECT cluster_id, count(*) AS n_members FROM labels GROUP BY cluster_id"
 
   /** q62_json_extract — semi-structured ingestion: typed extraction
-    * from the JSON `props` column with `from_json` (schema-on-read for
-    * the payload — codegen'd Jackson parse, no UDF), aggregated per
+    * from the JSON `props` column with `from_json` ([[Tables.tradeSize]],
+    * schema-on-read for the payload — codegen'd Jackson parse, no UDF), aggregated per
     * type. The everyday "events carry a JSON blob" ETL shape.
     */
   def q62JsonExtract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
-    val propsSchema = StructType(Seq(StructField("k", LongType)))
     Tables.events(spark, dir)
-      .withColumn("p", from_json($"props", propsSchema))
+      .withColumn("k", Tables.tradeSize($"props"))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
-        sum($"p.k").as("sum_k"),
+        sum($"k").as("sum_k"),
         // decimal-space round: avg of bigints is a derived double whose
         // half-boundary rounding diverges between engines; decimal(28,12)
         // pins half-up on both sides (same fix as q24/q49/q51)
-        round(avg($"p.k").cast(org.apache.spark.sql.types.DecimalType(28, 12)), 4)
+        round(avg($"k").cast(org.apache.spark.sql.types.DecimalType(28, 12)), 4)
           .cast("double").as("avg_k"),
-        max($"p.k").as("max_k"))
+        max($"k").as("max_k"))
   }
 
   val q62Sql: String =

@@ -450,13 +450,11 @@ object Microstructure {
     */
   def q170KyleLambda(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wOrd = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(spark, dir)
       .select($"user_id", $"event_id", $"ts", $"value",
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("size"))
+        Tables.tradeSize($"props").as("size"))
       .withColumn("dp", $"value" - lag($"value", 1).over(wOrd))
       .withColumn("raw", signum($"dp"))
       .withColumn("sign",
@@ -581,13 +579,11 @@ object Microstructure {
     */
   def q179Vpin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wOrd = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(spark, dir)
       .select($"user_id", $"event_id", $"ts", $"value",
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("size"))
+        Tables.tradeSize($"props").as("size"))
       .withColumn("raw", signum($"value" - lag($"value", 1).over(wOrd)))
       .withColumn("sign",
         last(when($"raw" =!= 0.0, $"raw"), ignoreNulls = true).over(wRun))
@@ -1014,15 +1010,14 @@ object Microstructure {
     */
   def q203ImplShortfall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
+    import org.apache.spark.sql.types.DecimalType
     val wDay = Window.partitionBy($"user_id", $"day")
       .orderBy($"ts", $"event_id")
     val tape = Tables.events(spark, dir)
       .filter($"value" > 0.0)
       .select($"user_id", date_trunc("day", $"ts").as("day"),
         $"ts", $"event_id", $"event_type", $"value",
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("k"))
+        Tables.tradeSize($"props").as("k"))
       .withColumn("arrival",
         first($"value").over(wDay))
     val m = tape
@@ -1084,11 +1079,12 @@ object Microstructure {
     */
   def q212AdvParticipation(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // its own copy of the LedgerTable.Volume cell: the user-keyed
+    // repartition serves the agg and the window on one exchange, where
+    // Volume.fromTape costs a third stage and 5% more shuffle bytes
     val vol = Tables.events(spark, dir)
       .select($"user_id", date_trunc("day", $"ts").as("day"),
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("k"))
+        Tables.tradeSize($"props").as("k"))
       .filter($"k" > 0L)
       .repartition($"user_id")
       .groupBy($"user_id", $"day").agg(sum($"k").as("vol"))
@@ -1367,10 +1363,12 @@ object Microstructure {
     * absorbed by the 12dp per-pair lattice + 6dp output round.
     */
   def q219CorwinSchultz(spark: SparkSession, dir: String): DataFrame =
-    csSpreadFromDaily(Tables.events(spark, dir)
-      .filter(col("value") > 0.0)
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(max(col("value")).as("h"), min(col("value")).as("l")))
+    csSpreadFromDaily(dailyHl(spark, dir))
+
+  /** The (user_id, day, h, l) projection of [[dailyOhlc]]; column
+    * pruning drops the open/close structs from its aggregate. */
+  private def dailyHl(spark: SparkSession, dir: String): DataFrame =
+    dailyOhlc(spark, dir).select(col("user_id"), col("day"), col("h"), col("l"))
 
   /** q219's estimator tail as a pure function of the (instrument, day)
     * H/L frame — shared verbatim by the batch query and the s65
@@ -1475,22 +1473,10 @@ object Microstructure {
   /** The (instrument, day) OHLC frame: H/L as plain extremes, O/C via
     * LEXICOGRAPHIC struct extremes over (ts, event_id, value) — one
     * aggregation, no window, ties broken by event_id (the q202/s67
-    * total order). This is exactly the s68 streaming OHLC ledger's
-    * shape: every component is monotone under accumulation (struct
-    * min/max, max, min), so the converged ledger equals this frame
-    * under any micro-batch slicing.
+    * total order): the [[graft.sources.LedgerTable.Ohlc]] cell, served.
     */
-  def dailyOhlc(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter($"value" > 0.0)
-      .groupBy($"user_id", date_trunc("day", $"ts").as("day"))
-      .agg(min(struct($"ts", $"event_id", $"value")).as("of"),
-        max(struct($"ts", $"event_id", $"value")).as("cf"),
-        max($"value").as("h"), min($"value").as("l"))
-      .select($"user_id", $"day", $"of.value".as("o"), $"h", $"l",
-        $"cf.value".as("c"))
-  }
+  def dailyOhlc(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.LedgerTable.Ohlc.fromTape(Tables.events(spark, dir))
 
   /** q220_garman_klass — the Garman–Klass (1980) OHLC variance
     * estimator per instrument: σ²_GK = mean(0.5·ln²(H/L) −
@@ -1579,10 +1565,7 @@ object Microstructure {
     * converged sum.
     */
   def q223Parkinson(spark: SparkSession, dir: String): DataFrame =
-    parkFromDailyHl(Tables.events(spark, dir)
-      .filter(col("value") > 0.0)
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(max(col("value")).as("h"), min(col("value")).as("l")))
+    parkFromDailyHl(dailyHl(spark, dir))
 
   /** q223's tail over the (user_id, day, h, l) frame — shared by the
     * batch query and the s65/s68 ledger specs.

@@ -1212,26 +1212,13 @@ object Quant {
     * doubles.
     */
   /** The pair family's shared spine: one row per (instrument, day)
-    * with the 12dp-latticed ln of the LAST event value that day
-    * (ties broken by event_id — a total close order). Both q202 and
-    * q208 are pure functions of this frame, and the s67 streaming
-    * close ledger converges to it exactly (last = max (ts, event_id)
-    * struct, monotone under accumulation).
+    * with the 12dp-latticed ln of the LAST positive print that day
+    * (ties broken by event_id — a total close order): the
+    * [[graft.sources.LedgerTable.Closes]] cell, served. Both q202 and
+    * q208 are pure functions of this frame.
     */
-  def dailyCloses(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val wDay = Window.partitionBy($"user_id", $"day")
-      .orderBy($"ts".desc, $"event_id".desc)
-    Tables.events(spark, dir)
-      .filter($"value" > 0.0)
-      .select($"user_id", date_trunc("day", $"ts").as("day"),
-        $"ts", $"event_id", $"value")
-      .withColumn("rn", row_number().over(wDay))
-      .filter($"rn" === 1)
-      .select($"user_id", $"day",
-        decRound(log($"value"), 12).cast(DecimalType(18, 12)).as("x"))
-  }
+  def dailyCloses(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.LedgerTable.Closes.fromTape(Tables.events(spark, dir))
 
   def q202PairsCointegration(spark: SparkSession, dir: String): DataFrame =
     cointFromCloses(dailyCloses(spark, dir))
@@ -1545,13 +1532,8 @@ object Quant {
     */
   def q209Turnover(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
-    val vol = Tables.events(spark, dir)
-      .select($"user_id", date_trunc("day", $"ts").as("day"),
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("k"))
-      .filter($"k" > 0L)
-      .groupBy($"user_id", $"day").agg(sum($"k").as("v"))
+    import org.apache.spark.sql.types.DecimalType
+    val vol = dailyVolume(spark, dir)
     val days = vol.select($"day").distinct()
       .withColumn("rk", row_number().over(Window.orderBy($"day")).cast("long"))
     val w = vol.join(broadcast(days), "day")
@@ -1626,16 +1608,7 @@ object Quant {
   def q214DecileBacktest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    val wDay = Window.partitionBy($"user_id", $"day")
-      .orderBy($"ts".desc, $"event_id".desc)
-    val closes = Tables.events(spark, dir)
-      .filter($"value" > 0.0)
-      .select($"user_id", date_trunc("day", $"ts").as("day"),
-        $"ts", $"event_id", $"value")
-      .withColumn("rn", row_number().over(wDay))
-      .filter($"rn" === 1)
-      .select($"user_id", $"day",
-        decRound(log($"value"), 12).cast(DecimalType(18, 12)).as("x"))
+    val closes = dailyCloses(spark, dir)
     val wOrd = Window.partitionBy($"user_id").orderBy($"day")
     val wSig = wOrd.rowsBetween(-5, -1)
     val rets = closes
@@ -1735,20 +1708,12 @@ object Quant {
     * lattice to 12dp decimals (exact integer-ratio inputs), so the
     * Σw² reduction is an exact decimal sum in both engines.
     */
-  /** The (instrument, day) integer traded-size frame — the s60
-    * streaming ledger's exact shape, shared by q222 (HHI) and q221
-    * (OBV).
+  /** The (instrument, day) integer traded-size frame — the
+    * [[graft.sources.LedgerTable.Volume]] cell, served; shared by q209
+    * (turnover), q222 (HHI) and q221 (OBV).
     */
-  def dailyVolume(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    Tables.events(spark, dir)
-      .select($"user_id", date_trunc("day", $"ts").as("day"),
-        from_json($"props", StructType(Seq(StructField("k", LongType))))
-          .getField("k").as("k"))
-      .filter($"k" > 0L)
-      .groupBy($"user_id", $"day").agg(sum($"k").as("v"))
-  }
+  def dailyVolume(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.LedgerTable.Volume.fromTape(Tables.events(spark, dir))
 
   def q222Hhi(spark: SparkSession, dir: String): DataFrame =
     hhiFromDailyVol(dailyVolume(spark, dir))

@@ -771,11 +771,10 @@ object SecurityMaster {
   def q147FifoPnl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val propsSchema = StructType(Seq(StructField("k", LongType)))
     val trades = Tables.events(spark, dir)
       .filter($"event_type".isin("click", "purchase"))
       .select($"user_id", $"ts", $"event_id",
-        from_json($"props", propsSchema).getField("k").as("qty"),
+        Tables.tradeSize($"props").as("qty"),
         // (18,6) lattice (not the usual 28,12): qty × price products must
         // stay inside DECIMAL(38) under BOTH engines' promotion rules
         // (DuckDB multiply = p1+p2, which overflows 38 from a (28,12))
@@ -1373,21 +1372,15 @@ object SecurityMaster {
   def q213IndexLevel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    val wDay = Window.partitionBy($"user_id", $"day")
-      .orderBy($"ts".desc, $"event_id".desc)
     // eager cut (the q142/q149 single-materialization discipline, r17):
     // closes feeds THREE consumers (universe, member join, oldBar) and
-    // each re-ran the full tape sort + close-pick window above the
-    // reused exchange (QBench: wall 1.92 s / CPU 2.4 s); the frame is
-    // instruments × days — tiny
-    val closes = (Tables.events(spark, dir)
-      .filter($"value" > 0.0)
-      .select($"user_id", date_trunc("day", $"ts").as("day"),
-        $"ts", $"event_id", $"value")
-      .withColumn("rn", row_number().over(wDay))
-      .filter($"rn" === 1)
+    // each re-ran the full tape close pick above the reused exchange
+    // (QBench: wall 1.92 s / CPU 2.4 s); the frame is instruments ×
+    // days — tiny
+    val closes = graft.sources.LedgerTable.Closes
+      .collapse(Tables.events(spark, dir))
       .select($"user_id", $"day", date_trunc("week", $"day").as("wk"),
-        decRound($"value", 6).cast(DecimalType(18, 6)).as("px")))
+        decRound($"last.close", 6).cast(DecimalType(18, 6)).as("px"))
       .localCheckpoint(true)
     val wRank = Window.partitionBy($"wk").orderBy($"n".desc, $"user_id".asc)
     val universe = closes.groupBy($"wk", $"user_id")

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Incrementally-maintained DAILY LEDGER materializations — the batch
   * counterpart of the s60/s67/s68 streaming ledgers, persisted through
@@ -24,9 +25,10 @@ import org.apache.spark.sql.functions._
   * no-op, so the non-idempotent volume sum is still never
   * double-counted).
   *
-  * The serve adapters emit the EXACT frames the production query
-  * tails consume (`Quant.dailyCloses` / `Quant.dailyVolume` /
-  * `Microstructure.dailyOhlc` shapes), so every ledger-tail query —
+  * The serve adapters emit the frames the production query tails
+  * consume: `Quant.dailyCloses` / `Quant.dailyVolume` /
+  * `Microstructure.dailyOhlc` are `Kind.fromTape` of the same cell
+  * definitions, so every ledger-tail query —
   * q219–q232, q235–q236, q239–q243, q245–q247 — can run off the
   * maintained artifact instead of the raw tape; LedgerTableSpec pins
   * that equivalence end-to-end.
@@ -38,12 +40,22 @@ import org.apache.spark.sql.functions._
   */
 object LedgerTable {
 
+  /** One (instrument, day) ledger cell, defined once: the raw-event
+    * collapse, the cell merge and the served frame. The batch frames
+    * (`Quant.dailyVolume` / `Quant.dailyCloses` /
+    * `Microstructure.dailyOhlc`), the s60/s68 streaming twins and the
+    * maintained ledgers below are all built on it.
+    */
   sealed trait Kind {
     def name: String
     /** Collapse RAW events (Tables.events schema) to delta cells. */
     def collapse(events: DataFrame): DataFrame
     /** Re-reduce a union of cell-state frames to one state per cell. */
     def merge(cells: DataFrame): DataFrame
+    /** Project cell states to the frame the production tails read. */
+    def serve(cells: DataFrame): DataFrame
+    /** The served frame straight off a raw tape. */
+    def fromTape(events: DataFrame): DataFrame = serve(collapse(events))
   }
 
   private def day(c: Column): Column = date_trunc("day", c)
@@ -51,20 +63,18 @@ object LedgerTable {
   /** s60: summed positive integer volume per (instrument, day). */
   case object Volume extends Kind {
     val name = "volume"
-    def collapse(events: DataFrame): DataFrame = {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    def collapse(events: DataFrame): DataFrame =
       events
         .select(col("user_id"), day(col("ts")).as("day"),
-          from_json(col("props"),
-            StructType(Seq(StructField("k", LongType))))
-            .getField("k").as("k"))
+          graft.Tables.tradeSize(col("props")).as("k"))
         .filter(col("k") > 0L)
         .groupBy(col("user_id"), col("day"))
         .agg(sum(col("k")).as("v"))
-    }
     def merge(cells: DataFrame): DataFrame =
       cells.groupBy(col("user_id"), col("day"))
         .agg(sum(col("v")).as("v"))
+    /** (user_id, day, v). */
+    def serve(cells: DataFrame): DataFrame = cells
   }
 
   /** s67: the last positive print per (instrument, day) as a
@@ -81,6 +91,11 @@ object LedgerTable {
     def merge(cells: DataFrame): DataFrame =
       cells.groupBy(col("user_id"), col("day"))
         .agg(max(col("last")).as("last"))
+    /** (user_id, day, x): the 12dp-latticed ln close. */
+    def serve(cells: DataFrame): DataFrame =
+      cells.select(col("user_id"), col("day"),
+        graft.functions.Num.decRound(log(col("last.close")), 12)
+          .cast(DecimalType(18, 12)).as("x"))
   }
 
   /** s68: OHLC per (instrument, day) — open/close as arg-extreme
@@ -101,6 +116,10 @@ object LedgerTable {
       cells.groupBy(col("user_id"), col("day"))
         .agg(min(col("of")).as("of"), max(col("cf")).as("cf"),
           max(col("h")).as("h"), min(col("l")).as("l"))
+    /** (user_id, day, o, h, l, c). */
+    def serve(cells: DataFrame): DataFrame =
+      cells.select(col("user_id"), col("day"),
+        col("of.px").as("o"), col("h"), col("l"), col("cf.px").as("c"))
   }
 }
 
@@ -135,26 +154,16 @@ class LedgerTable(spark: SparkSession, tableDir: String,
   def stateAt(batchId: Long): Option[DataFrame] = vt.snapshotAt(batchId)
 
   /** The `Quant.dailyVolume` frame: (user_id, day, v). */
-  def serveVolume: Option[DataFrame] = {
-    require(kind == LedgerTable.Volume, s"not a volume ledger: ${kind.name}")
-    state
-  }
+  def serveVolume: Option[DataFrame] = served(LedgerTable.Volume)
 
-  /** The `Quant.dailyCloses` spine: (user_id, day, x) with the 12dp
-    * ln-close lattice — byte-identical to the from-tape collapse.
-    */
-  def serveCloses: Option[DataFrame] = {
-    require(kind == LedgerTable.Closes, s"not a closes ledger: ${kind.name}")
-    import org.apache.spark.sql.types.DecimalType
-    state.map(_.select(col("user_id"), col("day"),
-      graft.functions.Num.decRound(log(col("last.close")), 12)
-        .cast(DecimalType(18, 12)).as("x")))
-  }
+  /** The `Quant.dailyCloses` spine: (user_id, day, x). */
+  def serveCloses: Option[DataFrame] = served(LedgerTable.Closes)
 
   /** The `Microstructure.dailyOhlc` frame: (user_id, day, o, h, l, c). */
-  def serveOhlc: Option[DataFrame] = {
-    require(kind == LedgerTable.Ohlc, s"not an OHLC ledger: ${kind.name}")
-    state.map(_.select(col("user_id"), col("day"),
-      col("of.px").as("o"), col("h"), col("l"), col("cf.px").as("c")))
+  def serveOhlc: Option[DataFrame] = served(LedgerTable.Ohlc)
+
+  private def served(want: LedgerTable.Kind): Option[DataFrame] = {
+    require(kind == want, s"not a ${want.name} ledger: ${kind.name}")
+    state.map(kind.serve)
   }
 }

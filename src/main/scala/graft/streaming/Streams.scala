@@ -544,33 +544,42 @@ object Streams {
   def compactGramIndex(spark: SparkSession, indexDir: String,
                        upTo: Long): Unit = {
     import org.apache.spark.sql.types._
-    val schemas = Seq(
-      "grams" -> StructType(Seq(
+    compactReadSets(spark, indexDir, upTo, Seq(
+      ("grams", StructType(Seq(
         StructField("gram", StringType), StructField("id", LongType),
-        StructField("n_grams", IntegerType))),
-      "dfs" -> StructType(Seq(
-        StructField("gram", StringType), StructField("cnt", LongType))))
-    schemas.foreach { case (fam, schema) =>
-      val dirs = gramIndexReadSet(spark, s"$indexDir/$fam", upTo + 1L)
-      if (dirs.nonEmpty) {
-        val merged = spark.read.schema(schema).parquet(dirs: _*)
-        val out =
-          if (fam == "dfs")
-            merged.groupBy(col("gram")).agg(sum(col("cnt")).as("cnt"))
-          else merged
-        // land under a temp name, rename into place, THEN delete the
-        // replaced dirs — readers either see the old set or the new
-        // covering dir, never a partial c<upTo>
-        val famPath = new org.apache.hadoop.fs.Path(s"$indexDir/$fam")
+        StructField("n_grams", IntegerType))), identity[DataFrame] _),
+      ("dfs", StructType(Seq(
+        StructField("gram", StringType), StructField("cnt", LongType))),
+        (df: DataFrame) => df.groupBy(col("gram")).agg(sum(col("cnt")).as("cnt")))))
+  }
+
+  /** Consolidate each family's read set visible to `upTo + 1` (see
+    * [[gramIndexReadSet]]) into `<root>/<family>/c<upTo>`: land the
+    * consolidated frame under a temp name, rename it into place, THEN
+    * delete the replaced dirs — readers see either the old set or the
+    * new covering dir, never a partial `c<upTo>`. A re-run with the
+    * same `upTo` finds that `c<upTo>` as the whole read set and leaves
+    * it alone.
+    */
+  private def compactReadSets(spark: SparkSession, root: String, upTo: Long,
+      families: Seq[(String, org.apache.spark.sql.types.StructType,
+        DataFrame => DataFrame)]): Unit =
+    families.foreach { case (fam, schema, consolidate) =>
+      val famPath = new org.apache.hadoop.fs.Path(s"$root/$fam")
+      val target = new org.apache.hadoop.fs.Path(famPath, s"c$upTo")
+      val dirs = gramIndexReadSet(spark, famPath.toString, upTo + 1L)
+        .map(new org.apache.hadoop.fs.Path(_))
+      if (dirs.nonEmpty && !dirs.exists(_.getName == target.getName)) {
         val fs = famPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val tmp = new org.apache.hadoop.fs.Path(famPath, s"_tmp_c$upTo")
-        out.write.mode("overwrite").parquet(tmp.toString)
-        fs.rename(tmp, new org.apache.hadoop.fs.Path(famPath, s"c$upTo"))
-        dirs.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(d), true))
+        consolidate(spark.read.schema(schema).parquet(dirs.map(_.toString): _*))
+          .write.mode("overwrite").parquet(tmp.toString)
+        if (!fs.rename(tmp, target))
+          throw new java.io.IOException(
+            s"compaction: could not move $tmp to $target")
+        dirs.foreach(fs.delete(_, true))
       }
     }
-  }
 
   private val biLedgerSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("w1",
@@ -730,27 +739,12 @@ object Streams {
     * path, with `upTo` a fully-committed batch id.
     */
   def compactPerplexityLedgers(spark: SparkSession, ledgerDir: String,
-                               upTo: Long): Unit = {
-    Seq(
+                               upTo: Long): Unit =
+    compactReadSets(spark, ledgerDir, upTo, Seq(
       ("bi", biLedgerSchema,
         (df: DataFrame) => df.groupBy(col("w1"), col("w2"))
           .agg(sum(col("cnt")).as("cnt"))),
-      ("voc", vocLedgerSchema, (df: DataFrame) => df.distinct())
-    ).foreach { case (fam, schema, consolidate) =>
-      val dirs = gramIndexReadSet(spark, s"$ledgerDir/$fam", upTo + 1L)
-      if (dirs.nonEmpty) {
-        val out = consolidate(spark.read.schema(schema).parquet(dirs: _*))
-        val famPath = new org.apache.hadoop.fs.Path(s"$ledgerDir/$fam")
-        val fs = famPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val tmp = new org.apache.hadoop.fs.Path(famPath, s"_tmp_c$upTo")
-        out.write.mode("overwrite").parquet(tmp.toString)
-        fs.rename(tmp, new org.apache.hadoop.fs.Path(famPath, s"c$upTo"))
-        dirs.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(d), true))
-      }
-    }
-  }
+      ("voc", vocLedgerSchema, (df: DataFrame) => df.distinct())))
 
   /** Score arbitrary documents under the ledger LM as of `upTo`
     * (exclusive batch-id bound; default = everything landed). This is
@@ -2089,10 +2083,9 @@ object Streams {
     * moments differ from batch covar_pop/var_pop (streaming co-moment
     * updates) only in FP accumulation noise, orders of magnitude
     * below the 6dp round — the differential spec proves the reduced
-    * increments hit batch q170's rounded output exactly. Caller
-    * pre-extracts `size` from the props JSON (the q62/q170
-    * convention). Same in-order-per-key delivery caveat as
-    * [[replayByUser]].
+    * increments hit batch q170's rounded output exactly. `size` is
+    * [[graft.Tables.tradeSize]], the parse batch q170 reads. Same
+    * in-order-per-key delivery caveat as [[replayByUser]].
     */
   def kyleStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Double, Double, Double, Double)] = {
@@ -2100,7 +2093,7 @@ object Streams {
     replayByUser[KyleEvent, (Double, Double),
       (Long, Long, Double, Double, Double, Double)](
       events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("size"))
+          Tables.tradeSize(col("props")).as("size"))
         .as[KyleEvent]) { (user, sorted, restored) =>
       var lastPx = restored.map(_._1)
       var lastSign = restored.map(_._2).filter(_ != 0.0)
@@ -2201,7 +2194,7 @@ object Streams {
     import spark.implicits._
     replayByUser[KyleEvent, (Double, Double, Long), (Long, Long, Long, Long)](
       events.select(col("user_id"), col("ts"), col("value"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("size"))
+          Tables.tradeSize(col("props")).as("size"))
         .as[KyleEvent]) { (user, sorted, restored) =>
       var (lastPxRaw, lastSignRaw, cum) =
         restored.getOrElse((Double.NaN, 0.0, 0L))
@@ -2542,7 +2535,7 @@ object Streams {
       events.filter(col("value") > 0)
         .select(col("user_id"), col("ts"), col("value"), col("event_id"),
           col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("size"))
+          Tables.tradeSize(col("props")).as("size"))
         .as[ShortfallEvent]) { (user, sorted, restored) =>
       // state: (day µs, arrival price in 6dp micro-units)
       var (day, arr6) = restored.getOrElse((Long.MinValue, 0L))
@@ -2687,51 +2680,41 @@ object Streams {
   }
 
   /** s60/s61 — ONE streaming ledger, TWO batch twins: the native
-    * update-mode (instrument, day) traded-size census. Sizes are
-    * integer sums, so each update-mode emission is the cell's corrected
-    * running total (monotone — latest = max) and the converged ledger
-    * equals the batch daily-volume frame EXACTLY under any slicing.
-    * Batch q209 (portfolio turnover) and q212 (ADV participation) are
-    * both pure functions of this frame — the s53 convention taken one
-    * step further: one ledger, the batch tails unchanged on top. State
-    * is one long per open (instrument, day) cell (watermark to close
-    * cells in production).
+    * update-mode (instrument, day) traded-size census, i.e.
+    * [[graft.sources.LedgerTable.Volume]]'s collapse run as a
+    * streaming groupBy. Sizes are integer sums, so each update-mode
+    * emission is the cell's corrected running total (monotone —
+    * latest = max). Batch q209 (portfolio turnover) and q212 (ADV
+    * participation) are both pure functions of this frame — the s53
+    * convention taken one step further: one ledger, the batch tails
+    * unchanged on top. State is one long per open (instrument, day)
+    * cell (watermark to close cells in production).
     */
   def dailyVolStream(events: DataFrame): DataFrame =
-    events
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .filter(col("k") > 0L)
-      .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("k")).as("v"))
+    graft.sources.LedgerTable.Volume.collapse(events)
 
-  /** s68 — the full (instrument, day) OHLC ledger: open/close as
+  /** s68 — the full (instrument, day) OHLC ledger:
+    * [[graft.sources.LedgerTable.Ohlc]]'s collapse run as a streaming
+    * groupBy, with the open/close structs flattened. Open/close are
     * lexicographic extremes of the (ts, event_id, value) struct — ties
     * break on event_id, the same total order as the batch closes
-    * spine — and high/low as plain extremes. All four components are
-    * monotone under accumulation, so the converged ledger (min open
-    * struct, max close struct, max h, min l per cell) equals
-    * [[graft.queries.Microstructure.dailyOhlc]] exactly under any
-    * slicing. Every daily-bar family runs as a shared batch tail on a
-    * projection of it: the OHLC volatility family (q220 Garman–Klass
-    * via gkFromDailyOhlc, q223 Parkinson via parkFromDailyHl), q219
+    * spine — and high/low are plain extremes; all four are monotone
+    * under accumulation, so the latest emission per cell folds with
+    * (min open struct, max close struct, max h, min l). Every
+    * daily-bar family runs as a shared batch tail on a projection of
+    * it: the OHLC volatility family (q220 Garman–Klass via
+    * gkFromDailyOhlc, q223 Parkinson via parkFromDailyHl), q219
     * Corwin–Schultz on (h, l) via csSpreadFromDaily, and the closes
     * family (q202 cointegration, q208 lead-lag, q221 OBV, …) on the
-    * close struct, which converges to [[graft.queries.Quant.dailyCloses]].
-    * State is two structs + two doubles per open cell.
+    * close struct. State is two structs + two doubles per open cell.
     */
   def dailyOhlcStream(events: DataFrame): DataFrame =
-    events
-      .filter(col("value") > 0.0)
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(min(struct(col("ts"), col("event_id"), col("value"))).as("of"),
-        max(struct(col("ts"), col("event_id"), col("value"))).as("cf"),
-        max(col("value")).as("h"), min(col("value")).as("l"))
+    graft.sources.LedgerTable.Ohlc.collapse(events)
       .select(col("user_id"), col("day"),
         col("of.ts").as("o_ts"), col("of.event_id").as("o_eid"),
-        col("of.value").as("o"), col("h"), col("l"),
+        col("of.px").as("o"), col("h"), col("l"),
         col("cf.ts").as("c_ts"), col("cf.event_id").as("c_eid"),
-        col("cf.value").as("c"))
+        col("cf.px").as("c"))
 
   /** s69 — the price-grid digit-census ledger: the ≤10-row
     * (digit, n, n_dollar, n_nickel) count frame is a pure three-sum

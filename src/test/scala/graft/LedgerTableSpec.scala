@@ -64,6 +64,36 @@ class LedgerTableSpec extends SparkTestBase {
     assert(at2.exceptAll(want2).isEmpty && want2.exceptAll(at2).isEmpty)
   }
 
+  test("one close per day: same-µs prints tie-break on the higher event_id, and a zero print is skipped") {
+    // two positive prints at one microsecond (the LOWER event_id has
+    // the HIGHER price, so a value tie-break would pick the wrong one)
+    // and a later zero print; the batch spine, the maintained ledger
+    // and the s68 stream twin must all close at event 11's price
+    val t = java.sql.Timestamp.valueOf("2024-03-05 10:00:00")
+    val later = java.sql.Timestamp.valueOf("2024-03-05 11:00:00")
+    val tape = Seq((10L, t, 7L, "purchase", 3.0, "{}"),
+        (11L, t, 7L, "purchase", 2.0, "{}"),
+        (12L, later, 7L, "purchase", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val dir = tmp("tie")
+    tape.coalesce(1).write.parquet(s"$dir/events.parquet")
+    val want = BigDecimal(math.log(2.0))
+      .setScale(12, BigDecimal.RoundingMode.HALF_UP)
+    def closeX(df: org.apache.spark.sql.DataFrame) =
+      df.select($"x").as[java.math.BigDecimal].collect().map(BigDecimal(_)).toSeq
+    assert(closeX(queries.Quant.dailyCloses(spark, dir)) == Seq(want))
+    val lt = new LedgerTable(spark, tmp("tie_ledger"), LedgerTable.Closes)
+    assert(lt.ingest(1L, Tables.events(spark, dir)))
+    assert(closeX(lt.serveCloses.get) == Seq(want))
+    val q = graft.streaming.Streams.dailyOhlcStream(
+        spark.readStream.schema(tape.schema).parquet(s"$dir/events.parquet"))
+      .writeStream.outputMode("update").format("memory")
+      .queryName("tie_ohlc").start()
+    try { q.processAllAvailable() } finally { q.stop() }
+    assert(spark.table("tie_ohlc").select($"c_eid", $"c").as[(Long, Double)]
+      .collect().toSeq == Seq((11L, 2.0)))
+  }
+
   test("served frames drive the production tails: OBV off maintained s67 x s60, Garman-Klass off maintained s68") {
     val Seq(a, b, c) = slices
     val closes = new LedgerTable(spark, tmp("srv_c"), LedgerTable.Closes)

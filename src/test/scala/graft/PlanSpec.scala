@@ -11,6 +11,11 @@ class PlanSpec extends SparkTestBase {
 
   private def count(p: String, token: String): Int = p.split(token).length - 1
 
+  /** The closes cell (LedgerTable.Closes, a (ts, event_id, close)
+    * struct max) is combined map-side: each map partition sends at
+    * most one candidate row per (user, day) cell across the exchange. */
+  private val closesPartial = "partial_max(struct(ts"
+
   test("as-of joins run on a single exchange (union+window, no range join)") {
     for (q <- Seq("q21_asof_join", "q59_asof_tolerance", "q89_asof_forward")) {
       val p = plan(q)
@@ -413,16 +418,16 @@ class PlanSpec extends SparkTestBase {
       assert(count(p, "Exchange") == 2, s"$q: expected 2 exchanges\n$p")
       assert(count(p, "NestedLoop") == 0, s"$q: nested-loop crept in\n$p")
     }
-    // q221 joins TWO ledgers: closes window + volume agg (both keyed
+    // q221 joins TWO ledgers: closes agg + volume agg (both keyed
     // (user, day)) + one group-sized hash(user) exchange for the
     // OBV windows; at dim scale the join side broadcasts (4th
-    // exchange). The load-bearing pins: the closes row_number is
-    // pre-pruned by WindowGroupLimit (the tape never carries more
-    // than one candidate row per cell to the sort), and no
-    // nested-loop anywhere.
+    // exchange). The load-bearing pins: the closes cell is pre-pruned
+    // by its map-side partial max (the tape never carries more than
+    // one candidate row per cell per map partition to the exchange),
+    // and no nested-loop anywhere.
     val p = plan("q221_obv")
     assert(count(p, "Exchange") <= 4, s"q221: expected <= 4 exchanges\n$p")
-    assert(p.contains("WindowGroupLimit"), p)
+    assert(p.contains(closesPartial), p)
     assert(count(p, "NestedLoop") == 0, p)
   }
 
@@ -462,10 +467,10 @@ class PlanSpec extends SparkTestBase {
     // q239 (Amihud): third two-ledger composition — the q221/q228
     // contract: both collapses + the join riding them (or an AQE
     // broadcast) + the instrument rollup, never a 5th exchange; the
-    // closes row_number stays WindowGroupLimit-pruned.
+    // closes cell stays pre-pruned by its map-side partial max.
     val p239 = plan("q239_amihud_daily")
     assert(count(p239, "Exchange") <= 4, s"q239: expected <= 4 exchanges\n$p239")
-    assert(p239.contains("WindowGroupLimit"), p239)
+    assert(p239.contains(closesPartial), p239)
     assert(count(p239, "NestedLoop") == 0, p239)
   }
 
@@ -521,8 +526,8 @@ class PlanSpec extends SparkTestBase {
       val p = plan(q)
       assert(count(p, "Exchange") == 2, s"$q: expected 2 exchanges\n$p")
       assert(count(p, "NestedLoop") == 0, s"$q: nested-loop crept in\n$p")
-      assert(p.contains("WindowGroupLimit"),
-        s"$q: closes row_number lost its group-limit pruning\n$p")
+      assert(p.contains(closesPartial),
+        s"$q: closes cell lost its map-side partial max\n$p")
     }
     // q250 capture: the day-pooled index frame must BROADCAST back
     // onto the return frame (the q247 discipline) — a shuffled day
@@ -635,7 +640,7 @@ class PlanSpec extends SparkTestBase {
       val p = plan(q)
       assert(count(p, "Exchange") == 2, s"$q: expected 2 exchanges\n$p")
       assert(count(p, "NestedLoop") == 0, s"$q: nested-loop crept in\n$p")
-      assert(p.contains("WindowGroupLimit"), p)
+      assert(p.contains(closesPartial), p)
     }
     // q263 turn of month: the (user, month) rank windows are
     // SATISFIED by hash(user) — a 4th exchange means Spark stopped

@@ -2076,6 +2076,19 @@ class StreamingSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(root.resolve("idx/dfs/b1")))
     val ledger = spark.read.parquet(root.resolve("idx/dfs/c1").toString)
     assert(ledger.count() == ledger.select("gram").distinct().count())
+    // a second compaction up to the same batch leaves the state as it was
+    def listing(fam: String) =
+      new java.io.File(root.resolve(s"idx/$fam").toString).list().toSet
+    val before = Seq("grams", "dfs").map { fam =>
+      (listing(fam), spark.read.parquet(root.resolve(s"idx/$fam/c1").toString)
+        .localCheckpoint())
+    }
+    Streams.compactGramIndex(spark, root.resolve("idx").toString, upTo = 1L)
+    Seq("grams", "dfs").zip(before).foreach { case (fam, (names, rows)) =>
+      assert(listing(fam) == names, fam)
+      val again = spark.read.parquet(root.resolve(s"idx/$fam/c1").toString)
+      assert(again.exceptAll(rows).isEmpty && rows.exceptAll(again).isEmpty, fam)
+    }
     drop(2)
     val q2 = startSink()
     try { q2.processAllAvailable() } finally { q2.stop() }
@@ -2225,6 +2238,48 @@ class StreamingSpec extends SparkTestBase {
     val batch = SparkEntry.queries("q170_kyle_lambda")(spark, sf)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("a non-integer trade size counts as no size in dailyVolStream and kyleStream, as in every batch twin") {
+    // {"k": 5.5} and {"k": "7"} are not JSON integers, so the batch
+    // queries read them as a NULL size; each twin's output must equal
+    // its output on the same tape with those payloads replaced by {}
+    val t0 = 1700000000000000L
+    val tape = (0 until 24).map { i =>
+      val props = i % 6 match {
+        case 1 => """{"k": 5.5}"""
+        case 4 => """{"k": "7"}"""
+        case _ => s"""{"k": ${i + 1}}"""
+      }
+      (i.toLong, t0 + i * 3600000000L, (i % 2).toLong, "purchase",
+        10.0 + (i * 7 % 5), props)
+    }.toDF("event_id", "us", "user_id", "event_type", "value", "props")
+      .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id",
+        $"event_type", $"value", $"props")
+    val clean = tape.withColumn("props",
+      when($"props".contains("5.5") || $"props".contains("\"7\""), lit("{}"))
+        .otherwise($"props"))
+    def twins(events: org.apache.spark.sql.DataFrame, tag: String) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_k_$tag").toString
+      events.coalesce(1).write.mode("overwrite").parquet(s"$dir/a")
+      val stream = spark.readStream.schema(events.schema).parquet(s"$dir/a")
+      val qv = Streams.dailyVolStream(stream)
+        .writeStream.outputMode("update").format("memory")
+        .queryName(s"ksize_vol_$tag").start()
+      val qk = Streams.kyleStream(spark, stream)
+        .toDF("user_id", "n", "sdp", "sq", "sxy", "sq2")
+        .writeStream.outputMode("update").format("memory")
+        .queryName(s"ksize_kyle_$tag").start()
+      try { qv.processAllAvailable(); qk.processAllAvailable() }
+      finally { qv.stop(); qk.stop() }
+      (spark.table(s"ksize_vol_$tag").collect().toSet,
+        spark.table(s"ksize_kyle_$tag").collect().toSet)
+    }
+    val (vol, kyle) = twins(tape, "mixed")
+    val (volClean, kyleClean) = twins(clean, "clean")
+    assert(volClean.nonEmpty && kyleClean.nonEmpty)
+    assert(vol == volClean)
+    assert(kyle == kyleClean)
   }
 
   test("streaming time-weighted spread increments reduce to the batch q173 result") {
@@ -2732,6 +2787,17 @@ class StreamingSpec extends SparkTestBase {
     assert(rescore2.exceptAll(batchQ185).isEmpty &&
       batchQ185.exceptAll(rescore2).isEmpty,
       "compacted ledgers must score identically")
+    // a second compaction up to the same batch leaves the state as it was
+    def listing(fam: String) = new java.io.File(s"$ledgers/$fam").list().toSet
+    val before = Seq("bi", "voc").map { fam =>
+      (listing(fam), spark.read.parquet(s"$ledgers/$fam/c1").localCheckpoint())
+    }
+    Streams.compactPerplexityLedgers(spark, ledgers, upTo = 1L)
+    Seq("bi", "voc").zip(before).foreach { case (fam, (names, rows)) =>
+      assert(listing(fam) == names, fam)
+      val again = spark.read.parquet(s"$ledgers/$fam/c1")
+      assert(again.exceptAll(rows).isEmpty && rows.exceptAll(again).isEmpty, fam)
+    }
   }
 
   test("streaming AR(1) ledger increments reduce to the batch q201 result (s55)") {
