@@ -226,4 +226,18 @@ object Tables {
       graft.operators.Multimodal.containerPayload(
         F.col("doc_id"), F.col("text")))
   }
+
+  /** Deletes a local directory tree (temp artifacts). A failed delete
+    * is logged to stderr, not thrown: it leaves a stray temp file, not
+    * a wrong result.
+    */
+  def deleteTree(root: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val p = java.nio.file.Paths.get(root)
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+          .foreach(f => java.nio.file.Files.deleteIfExists(f))
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[graft] could not delete $root: ${e.getMessage}") }
 }

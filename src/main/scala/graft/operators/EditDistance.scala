@@ -333,6 +333,12 @@ object EditDistance {
     * union only adds candidates); the blocked variant
     * ([[jwPairsWinnowBlocked]]) keeps pure per-(fp, block) df-capping,
     * whose in-block recall guarantee needs no prefix rescue.
+    *
+    * Precondition: `keyCol` → `nameCol` is functional (one name per
+    * key; a repeated identical row repeats its pairs, as in a
+    * self-join). A key with two names links under the union of their
+    * fingerprints and is attached to both names, which matches no
+    * exact plan.
     */
   def jwPairsWinnow(df: DataFrame, keyCol: String, nameCol: String,
                     threshold: Double = 0.92, k: Int = 3, window: Int = 4,
@@ -404,6 +410,12 @@ object EditDistance {
     * Candidate volume is bounded by fingerprint-bucket density (df
     * cap), not block size² — sub-quadratic where the exact plan
     * explodes.
+    *
+    * Precondition: `keyCol` → `nameCol` is functional. A key may sit
+    * under several block tuples: its pairs are linked within each
+    * tuple separately, as [[jwPairsBlocked]] links them (each emission
+    * dedups over the fingerprints of one (key, blocks) row, not of the
+    * key).
     */
   def jwPairsWinnowBlocked(df: DataFrame, keyCol: String, nameCol: String,
                            blockCols: Seq[String],
@@ -436,6 +448,10 @@ object EditDistance {
     * is borderline-sim cross-source pairs whose shared fingerprints
     * are all df-capped, a fixture artifact of the shared per-copy
     * tags. Spec-pinned by the forced-path equality test.
+    *
+    * Precondition for both paths: `keyCol` → `nameCol` is functional;
+    * a key may repeat under several block tuples (see
+    * [[jwPairsWinnowBlocked]]).
     */
   def jwPairs(df: DataFrame, keyCol: String, nameCol: String,
               blockCols: Seq[String], threshold: Double = 0.92,
@@ -606,16 +622,19 @@ object EditDistance {
     // distinct shuffled every candidate EMISSION — a pair sharing m
     // fingerprints crossed the wire m times (measured at sf0.1: 18.5 M
     // emission rows / 147 MB through the dedup exchange for ~6 M unique
-    // pairs). Instead each row learns its key's full fingerprint set
-    // (one vertex-sized window exchange) and a pair is emitted ONLY
-    // from the minimum shared fingerprint — exactly once, no exchange
-    // at all on the pair stream. Two row-local prunes run before the
-    // intersect: key order and the JW length guard (necessary for
-    // jw ≥ t, see [[jwLengthGuard]] — lengths ride the narrow
-    // fingerprint rows), so guard-failing pairs never pay the
-    // intersect or reach the attach joins. The emitted pair SET is
-    // identical to the distinct plan's: min-shared-fp picks one
-    // emission per pair, and the guard only removes pairs the
+    // pairs). Instead each row learns its (key, blocks) row's full
+    // fingerprint set (one vertex-sized window exchange) and a pair is
+    // emitted ONLY from the minimum shared fingerprint — exactly once
+    // per shared block tuple, no exchange at all on the pair stream.
+    // The set is per (key, blocks), not per key: a key under two block
+    // tuples would otherwise pick its minimum from a fingerprint kept
+    // only in the other tuple's bucket, and the pair would be dropped.
+    // Two row-local prunes run before the intersect: key order and the
+    // JW length guard (necessary for jw ≥ t, see [[jwLengthGuard]] —
+    // lengths ride the narrow fingerprint rows), so guard-failing pairs
+    // never pay the intersect or reach the attach joins. The emitted
+    // pair SET is identical to the distinct plan's: min-shared-fp picks
+    // one emission per pair, and the guard only removes pairs the
     // post-attach guard discarded anyway (spec-pinned equality vs the
     // exact tier).
     // The pair stream no longer passes through any exchange after the
@@ -626,7 +645,7 @@ object EditDistance {
     // task (measured: wall 26.0 s ≈ CPU 24.6 s on one core; the
     // blockedPairs small-input/huge-output trap).
     val spread = df.sparkSession.sessionState.conf.numShufflePartitions
-    val wKey = Window.partitionBy(col("__key"))
+    val wKey = Window.partitionBy(col("__key") +: blockCols.map(col): _*)
     val f3 = f2.withColumn("__fps",
         sort_array(collect_set(col("__fp")).over(wKey)))
       .repartition(spread, col("__fp"))

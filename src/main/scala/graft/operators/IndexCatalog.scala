@@ -36,21 +36,15 @@ object IndexCatalog {
   private val roots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Per-process artifact root, removed on exit (best-effort — the
-    * LedgerTable temp-dir convention): served indexes never outlive
-    * the invocation that built them.
+  /** Per-process artifact root, removed on exit (a failed delete is
+    * logged): served indexes never outlive the invocation that built
+    * them.
     */
   private lazy val processRoot: String = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_served_idx").toString
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val p = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+      graft.Tables.deleteTree(dir)))
     dir
   }
 

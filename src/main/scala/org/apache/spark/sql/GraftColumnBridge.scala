@@ -51,3 +51,12 @@ object GraftRegistryBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(id, info, builder)
 }
+
+/** Bridge to the `private[spark]` listener bus: [[drain]] returns once
+  * every event posted so far has reached its listeners, so counters a
+  * listener summed can be read without sleeping.
+  */
+object GraftListenerBus {
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+}

@@ -155,6 +155,32 @@ class EditDistanceSpec extends SparkTestBase {
         s"extra ${win.diff(exact).size} of ${exact.size}")
   }
 
+  test("blocked winnow links keys that sit under two block tuples as the exact blocked plan does") {
+    // Keys 1 and 2 carry the same name under blocks {b1, b2} and
+    // {b2, b3}. Each of rows 3-5 is the single 3-gram of that name
+    // whose hash is the name's smallest fingerprint g, so g's bucket
+    // holds 3 rows in b2 (over maxDf = 2, dropped) and 2 rows in b1
+    // and b3 (kept). A key-wide fingerprint set would make g the
+    // minimum shared fingerprint of (1, 2), a fingerprint they do not
+    // share in b2, and the pair would never be emitted.
+    val name = "acme industrial widget"
+    def fps(s: String) = Seq(s).toDF("s")
+      .select(graft.functions.TextExpressions.winnowFp($"s", 3, 4))
+      .as[Seq[Long]].head()
+    val g = fps(name).min
+    val gram = name.sliding(3).find(fps(_) == Seq(g)).get
+    val rows = Seq((1L, name, "b1"), (1L, name, "b2"), (2L, name, "b2"),
+      (2L, name, "b3"), (3L, gram, "b2"), (4L, gram, "b1"), (5L, gram, "b3"))
+      .toDF("k", "name", "blk")
+    val exact = EditDistance.jwPairsBlocked(rows, "k", "name", Seq("blk"))
+      .as[(Long, Long, Double)].collect().toSet
+    val win = EditDistance.jwPairsWinnowBlocked(rows, "k", "name", Seq("blk"),
+        maxDf = 2)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(exact == Set((1L, 2L, 1.0)))
+    assert(win == exact)
+  }
+
   test("jw guard: small inputs take the exact blocked plan, a hot block flips to winnow") {
     // plan-shape pin for the q189 stats guard. Distinguish paths by
     // the winnow fingerprint generator (explode) only the prefilter
