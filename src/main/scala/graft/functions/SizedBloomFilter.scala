@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-/** A fixed-size Bloom filter as a typed [[Aggregator]], plus the
+/** A Bloom filter of `numBits` bits as a typed [[Aggregator]], plus the
   * matching COLUMN-NATIVE membership test — the runtime-filter
   * discipline for selective star joins at 100 TB: build the filter
   * over the dimension side's join keys (map-side partials OR
-  * together, so the shuffle carries one 128 KB bitmap per partition),
+  * together, so the shuffle carries one bitmap per partition),
   * broadcast the single finished bitmap, and prune the fact side
   * BEFORE its shuffle. A 5%-selective dimension predicate then ships
   * ~5% of the fact table through the exchange instead of all of it —
@@ -27,65 +27,14 @@ import org.apache.spark.sql.functions._
   * (shift/mask/pmod — whole-stage codegen, no UDF on the fact-side
   * hot path).
   *
-  * m = 2²⁰ bits (16384 longs, 128 KB): at 1M inserted keys and k=5
-  * the false-positive rate is ~2.2%; at the ≤100k keys a selective
-  * dimension filter yields it is < 1e-5. Size the constant up if a
-  * deployment's dimension side is larger — the discipline is the
-  * point, the constant is policy.
-  */
-object BloomFilterAgg extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
-  /** Filter width in bits (power of two). */
-  val NumBits: Long = 1L << 20
-  /** Probe count. */
-  val NumHashes: Int = 5
-  private val NumWords: Int = (NumBits / 64L).toInt
-
-  override def zero: Array[Long] = new Array[Long](NumWords)
-
-  /** NULL hashes are skipped (a NULL join key matches nothing in the
-    * real join, so it need not survive the prefilter either).
-    */
-  override def reduce(b: Array[Long], boxed: java.lang.Long): Array[Long] = {
-    if (boxed == null) return b
-    SizedBloomFilter.insert(b, boxed.longValue(), NumBits)
-    b
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < NumWords) { a(i) |= b(i); i += 1 }
-    a
-  }
-
-  override def finish(b: Array[Long]): Array[Long] = b
-
-  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-
-  def udf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(BloomFilterAgg, Encoders.LONG)
-
-  /** Build form: `df.agg(BloomFilterAgg.build(xxhash64($"key")))`. */
-  def build(hash: Column): Column = udf.apply(hash)
-
-  /** Column-native membership test mirroring [[reduce]]'s probe
-    * positions exactly: all k probed bits set ⇒ "might contain".
-    * Pure shift/mask/pmod Column arithmetic — whole-stage codegen'd,
-    * no UDF in the fact-side scan.
-    */
-  def mightContain(bitmap: Column, hash: Column): Column =
-    SizedBloomFilter.mightContain(NumBits, bitmap, hash)
-}
-
-/** [[BloomFilterAgg]] with a caller-chosen width — the runtime-filter
-  * discipline applied where the build side's cardinality is only known
-  * at plan-construction time (e.g. the triangle closing probe builds
-  * over the oriented edge list, whose count the operator has already
-  * measured for free). Probe math is IDENTICAL to [[BloomFilterAgg]]
-  * (xxhash64 seed 42 on both sides, Kirsch–Mitzenmacher k=5 double
-  * hashing), only `numBits` varies — so the membership test stays a
-  * pure codegen'd Column expression and false positives remain the
-  * only error mode (the exact join downstream keeps results EXACT).
+  * Width: fixed-width callers (q273, q285) take [[SizedBloomFilter.MinBits]]
+  * (2²⁰ bits, 128 KB: ~2.2% false positives at 1M keys, < 1e-5 at
+  * the ≤100k keys a selective dimension filter yields); callers that
+  * know the build side's cardinality at plan-construction time (the
+  * triangle closing probe counts its oriented edges for free) size it
+  * with [[SizedBloomFilter.bitsFor]]. Spark 4.1.2's own
+  * `bloom_filter_agg`/`might_contain` do not resolve as functions
+  * (UNRESOLVED_ROUTINE), so they cannot replace this one.
   */
 class SizedBloomFilter(val numBits: Long)
     extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
@@ -95,6 +44,9 @@ class SizedBloomFilter(val numBits: Long)
 
   override def zero: Array[Long] = new Array[Long](numWords)
 
+  /** NULL hashes are skipped (a NULL join key matches nothing in the
+    * real join, so it need not survive the prefilter either).
+    */
   override def reduce(b: Array[Long], boxed: java.lang.Long): Array[Long] = {
     if (boxed == null) return b
     SizedBloomFilter.insert(b, boxed.longValue(), numBits)
@@ -113,19 +65,22 @@ class SizedBloomFilter(val numBits: Long)
 }
 
 object SizedBloomFilter {
-  /** Probe count (shared with [[BloomFilterAgg]]). */
+  /** Probe count. */
   val NumHashes: Int = 5
 
+  /** The fixed 128 KB width, and the floor of [[bitsFor]]. */
+  val MinBits: Long = 1L << 20
+
   /** Width policy: ~16 bits/key (fpp ≈ 0.05% at k=5) rounded up to a
-    * power of two, floored at the [[BloomFilterAgg]] 128 KB default and
-    * capped at 2²⁸ bits (32 MB bitmap — a comfortable broadcast). Past
-    * ~30M keys the capped filter degrades toward pass-through, which
-    * costs pruning, never correctness.
+    * power of two, floored at [[MinBits]] and capped at 2²⁸ bits
+    * (32 MB bitmap — a comfortable broadcast). Past ~30M keys the
+    * capped filter degrades toward pass-through, which costs pruning,
+    * never correctness.
     */
   def bitsFor(nKeys: Long): Long = {
-    val want = math.max(1L << 20, nKeys * 16L)
+    val want = nKeys * 16L
     val cap = 1L << 28
-    var bits = 1L << 20
+    var bits = MinBits
     while (bits < want && bits < cap) bits <<= 1
     bits
   }
@@ -145,7 +100,11 @@ object SizedBloomFilter {
   def build(numBits: Long, hash: Column): Column =
     udaf(new SizedBloomFilter(numBits), Encoders.LONG).apply(hash)
 
-  /** Column-native membership test (see [[BloomFilterAgg.mightContain]]). */
+  /** Column-native membership test mirroring [[insert]]'s probe
+    * positions exactly: all k probed bits set ⇒ "might contain".
+    * Pure shift/mask/pmod Column arithmetic — whole-stage codegen'd,
+    * no UDF in the fact-side scan.
+    */
   def mightContain(numBits: Long, bitmap: Column, hash: Column): Column = {
     val hi = shiftrightunsigned(hash, 32)
     val lo = hash.bitwiseAND(lit(0xffffffffL))

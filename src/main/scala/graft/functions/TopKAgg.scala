@@ -22,6 +22,9 @@ import org.apache.spark.sql.functions.{col, struct, udaf}
   * pairs; NULL metrics must be filtered by the caller (a primitive
   * Double encoder aborts on NULL — same contract as the window plan,
   * where NULLS LAST ordering would differ between engines anyway).
+  * Spark 4.1.2 has no built-in ordered top-k per group to replace it
+  * (`max_by(x, y, k)` fails with WRONG_NUM_ARGS, `collect_top_k` does
+  * not resolve).
   */
 class TopKAgg(k: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {

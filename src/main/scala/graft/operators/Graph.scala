@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics on DataFrames: PageRank and BFS min-hop
   * frontier expansion, the two canonical "loop over a join" shapes a
@@ -78,13 +79,13 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int = 5,
                damping: Double = 0.85,
-               broadcastState: Option[Boolean] = None): DataFrame = {
-    // the edge list is built EXACTLY ONCE: persist first, then the
+               broadcastState: Option[Boolean] = None): DataFrame =
+      withEdgeCache(edges) { cached =>
+    // the edge list is built EXACTLY ONCE: cached first, then the
     // eager deg checkpoint materializes the cache as a side effect, and
     // every iteration joins the cached frame. (An earlier version
     // derived deg from the unpersisted plan and re-ran the whole
     // self-join for the first loop action — 2× the dominant cost.)
-    val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // degree counted on the DST side: identical values on the
     // documented symmetric edge list (in-deg = out-deg), and on a
     // coOrderEdges-shaped input the hash(dst) partitioning satisfies
@@ -136,7 +137,6 @@ object Graph {
       // frame so the edge cache can be released before returning
       state = state.localCheckpoint(eager = i == iterations)
     }
-    cached.unpersist(blocking = false)
     state.select(col("part"), col("pr"))
   }
 
@@ -150,8 +150,8 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame,
               maxHops: Int = 3,
               broadcastState: Option[Boolean] = None,
-              symmetric: Boolean = false): DataFrame = {
-    val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              symmetric: Boolean = false): DataFrame =
+      withEdgeCache(edges) { cached =>
     // visited can only grow to the reachable vertex count, and every
     // edge ROW names at most two vertices, so visited ≤ 2·edgeRows
     // (+ the seed set, which is tiny by contract). An edge-row count
@@ -190,10 +190,22 @@ object Graph {
       visited = visited.union(next.select(col("part"), lit(h).as("hop")))
       frontier = next
     }
-    val out = visited.localCheckpoint(eager = true)
-    cached.unpersist(blocking = false)
-    out
+    visited.localCheckpoint(eager = true)
   }
+
+  /** Run `body` over `edges` persisted at MEMORY_AND_DISK, so a kernel
+    * that scans the edge list several times builds it once. A plan the
+    * caller already cached (the cache manager has an entry for it, which
+    * `storageLevel` looks up) is used as is and stays cached; only a
+    * cache this call made is released when `body` returns, so `body`
+    * must return a materialized frame.
+    */
+  private def withEdgeCache[T](edges: DataFrame)(body: DataFrame => T): T =
+    if (edges.storageLevel != StorageLevel.NONE) body(edges)
+    else {
+      val cached = edges.persist(StorageLevel.MEMORY_AND_DISK)
+      try body(cached) finally cached.unpersist(blocking = false)
+    }
 
   /** Broadcast the vertex-state side of an iteration join, or leave it
     * to hash-partition with the edge list when the state is too large
@@ -384,16 +396,16 @@ object Graph {
     out.toSeq.toDF("round", "n_nodes", "n_edges")
   }
 
-  def triangleStats(edges: DataFrame): DataFrame = {
+  def triangleStats(edges: DataFrame): DataFrame =
+      withEdgeCache(edges) { cached =>
     val spark = edges.sparkSession
     import spark.implicits._
-    // persist + count: the edge list is consumed by four branches (deg,
+    // cache + count: the edge list is consumed by four branches (deg,
     // und, the meta/ne stats) and the count both materializes the cache
     // once and sizes the closing-probe Bloom filter exactly — the
     // pageRank build-exactly-once discipline, with the measured count
     // doing double duty (a conf-tuned filter width would either
     // saturate as the graph grows or over-ship at test scale).
-    val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDirected = cached.count()
     val bloomBits = graft.functions.SizedBloomFilter.bitsFor(
       math.max(1L, nDirected / 2))
@@ -465,13 +477,11 @@ object Graph {
     val ne = und.agg(count(lit(1)).as("n_edges"))
     // materialize the one-row census eagerly (the kCorePeel precedent)
     // so the edge cache can be released before returning
-    val out = meta.crossJoin(ne).crossJoin(tri)
+    meta.crossJoin(ne).crossJoin(tri)
       .select($"n_nodes", $"n_edges", $"n_wedges", $"n_triangles",
         graft.functions.Num.decRound(lit(3.0) * $"n_triangles" /
           nullif($"n_wedges", lit(0L)).cast("double"), 6).as("global_cc"))
       .localCheckpoint(eager = true)
-    cached.unpersist(blocking = false)
-    out
   }
 
   /** Per-edge neighborhood Jaccard similarity — the link-prediction /
@@ -742,15 +752,15 @@ object Graph {
     * each cc is ONE IEEE division of two exact integers latticed 6dp
     * into DECIMAL(18,6); bucket means reduce as exact decimal sums.
     */
-  def localClusteringCensus(edges: DataFrame): DataFrame = {
+  def localClusteringCensus(edges: DataFrame): DataFrame =
+      withEdgeCache(edges) { cached =>
     val spark = edges.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    // same persist + exact-count + Bloom-prefiltered closing probe as
+    // same cache + exact-count + Bloom-prefiltered closing probe as
     // [[triangleStats]] — see the comments there; the only difference
     // is that the closing join is INNER and keeps the wedge center so
     // each triangle explodes into its three member counts
-    val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDirected = cached.count()
     val bloomBits = graft.functions.SizedBloomFilter.bitsFor(
       math.max(1L, nDirected / 2))
@@ -797,7 +807,7 @@ object Graph {
           .cast(DecimalType(18, 6)))
       .withColumn("bucket", length(conv($"deg", 10, 2)).cast("long"))
     // bucket-cardinality result: materialize eagerly, release the cache
-    val out = cc.groupBy($"bucket")
+    cc.groupBy($"bucket")
       .agg(count(lit(1)).as("n_nodes"),
         sum($"deg").as("sum_deg"),
         sum($"t").as("sum_triangles"),
@@ -812,7 +822,5 @@ object Graph {
           $"n_cc_zero".cast("double") / $"n_nodes".cast("double"), 6)
           .as("cc_zero_share"))
       .localCheckpoint(eager = true)
-    cached.unpersist(blocking = false)
-    out
   }
 }

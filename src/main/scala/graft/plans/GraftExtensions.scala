@@ -124,26 +124,17 @@ object GraftExtensions {
       (spark.experimental.extraOptimizations ++ rules).distinct
     // typed Aggregators go through the session UDF registry (they wrap
     // an encoder pair, not a Catalyst Expression builder, so the
-    // injectFunction path above doesn't apply)
-    spark.udf.register("graft_bitmap_distinct",
-      graft.functions.BitmapDistinct.udf)
-    // top-3/top-5 are the SQL-surface spots; other k via the Scala DSL
+    // injectFunction path above doesn't apply). Distinct counts,
+    // heavy hitters and quantile sketches are Spark built-ins
+    // (bitmap_count/bitmap_construct_agg, approx_top_k,
+    // kll_sketch_agg_double); top-3/top-5 are the SQL-surface spots,
+    // other k via the Scala DSL
     spark.udf.register("graft_top3",
       org.apache.spark.sql.functions.udaf(new graft.functions.TopKAgg(3),
         org.apache.spark.sql.Encoders.product[(Double, Long)]))
     spark.udf.register("graft_top5",
       org.apache.spark.sql.functions.udaf(new graft.functions.TopKAgg(5),
         org.apache.spark.sql.Encoders.product[(Double, Long)]))
-    // Misra–Gries heavy hitters at the k=10 SQL spot; other k via DSL
-    spark.udf.register("graft_freq10",
-      org.apache.spark.sql.functions.udaf(new graft.functions.FreqItemsAgg(10),
-        org.apache.spark.sql.Encoders.STRING))
-    // mergeable quantile sketch at the (p50, p90, p99) SQL spot —
-    // boxed-input shell so SQL NULLs are dropped, not coerced to 0.0
-    spark.udf.register("graft_pctl_sketch",
-      org.apache.spark.sql.functions.udaf(
-        graft.functions.QuantileSketch.nullSafe(Seq(0.5, 0.9, 0.99)),
-        org.apache.spark.sql.Encoders.DOUBLE))
     ()
   }
 }

@@ -136,9 +136,12 @@ object RangeJoinBinning extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val confWidth =
-      try conf.getConfString(ConfKey, "0").toLong
-      catch { case _: NumberFormatException => 0L }
+    // lazy: only a candidate join without a hint reads the conf
+    lazy val confWidth = {
+      val raw = conf.getConfString(ConfKey, "0")
+      raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$ConfKey must be an integer bin width, got '$raw'"))
+    }
     def hintOf(p: LogicalPlan): Option[Long] =
       p.collectFirst { case RangeBinHint(w, _) => w }
     val rewritten = plan.transform {

@@ -980,8 +980,9 @@ object Extended {
     * runtime filter: revenue and item counts per order priority for
     * the lineitems of 1996 finalized orders (~5% of the orders
     * table). The qualifying orders' join keys fold into a 128 KB
-    * Bloom bitmap ([[graft.functions.BloomFilterAgg]] — map-side
-    * partials OR together), the single finished bitmap broadcasts,
+    * Bloom bitmap ([[graft.functions.SizedBloomFilter]] at its
+    * 2²⁰-bit `MinBits` — map-side partials OR together), the single
+    * finished bitmap broadcasts,
     * and the fact side is pruned by a pure-Column membership test
     * BEFORE its shuffle — so the sort-merge join's exchange carries
     * ~5% of lineitem instead of all of it. At 100 TB this is the
@@ -1004,7 +1005,7 @@ object Extended {
   def bloomPruneJoin(spark: SparkSession, dir: String,
       useBloom: Boolean): DataFrame = {
     import spark.implicits._
-    import graft.functions.BloomFilterAgg
+    import graft.functions.{SizedBloomFilter => Bloom}
     val ord = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
         $"o_orderdate" < lit("1997-01-01").cast("timestamp") &&
@@ -1015,9 +1016,9 @@ object Extended {
     val pruned =
       if (!useBloom) li
       else {
-        val bloom = ord.agg(BloomFilterAgg.build(xxhash64($"o_orderkey")).as("bf"))
+        val bloom = ord.agg(Bloom.build(Bloom.MinBits, xxhash64($"o_orderkey")).as("bf"))
         li.crossJoin(broadcast(bloom))
-          .filter(BloomFilterAgg.mightContain($"bf", xxhash64($"l_orderkey")))
+          .filter(Bloom.mightContain(Bloom.MinBits, $"bf", xxhash64($"l_orderkey")))
           .drop("bf")
       }
     // hint("merge"): at 100 TB the qualifying-orders side exceeds any

@@ -72,7 +72,8 @@ object GraphOps {
   def q126BfsHops(spark: SparkSession, dir: String): DataFrame = {
     // persist BEFORE deriving seeds: the seed subtree would otherwise
     // re-run the whole co-order self-join as a second uncached scan
-    // (bfsHops persists the same plan — the cache manager dedupes)
+    // (bfsHops finds this cache, reads it and leaves it to the unpersist
+    // below)
     val e = edges(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = e.select(col("src").as("part")).distinct()

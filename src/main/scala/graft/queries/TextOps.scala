@@ -1673,8 +1673,8 @@ object TextOps {
     * through the Bloom runtime filter: the held-out eval set's
     * (doc_id % 97 = 0, the q94 convention) distinct 3-gram shingles
     * fold into a 128 KB Bloom bitmap
-    * ([[graft.functions.BloomFilterAgg]]); the training side's gram
-    * stream is pruned by the broadcast bitmap's column-native getbit
+    * ([[graft.functions.SizedBloomFilter]] at `MinBits`); the training
+    * side's gram stream is pruned by the broadcast bitmap's column-native getbit
     * test BEFORE the exact semi-join, so the confirm join's exchange
     * carries only might-overlap grams (~1–2% here) instead of the
     * whole corpus's gram stream — the q273 pattern moved to the LLM
@@ -1697,7 +1697,7 @@ object TextOps {
       useBloom: Boolean): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    import graft.functions.BloomFilterAgg
+    import graft.functions.{SizedBloomFilter => Bloom}
     val ex = Tables.documents(spark, dir)
       .select($"doc_id", $"source",
         graft.functions.TextExpressions.shingleSet($"text", 3).as("grams"))
@@ -1709,9 +1709,9 @@ object TextOps {
       if (!useBloom) train
       else {
         val bloom = evalGrams
-          .agg(BloomFilterAgg.build(xxhash64($"gram")).as("bf"))
+          .agg(Bloom.build(Bloom.MinBits, xxhash64($"gram")).as("bf"))
         train.crossJoin(broadcast(bloom))
-          .filter(BloomFilterAgg.mightContain($"bf", xxhash64($"gram")))
+          .filter(Bloom.mightContain(Bloom.MinBits, $"bf", xxhash64($"gram")))
           .drop("bf")
       }
     val hits = pruned

@@ -261,19 +261,22 @@ class ExtendedSpec extends SparkTestBase {
   }
 
   test("bloom filter: no false negatives, and the pruned join equals the plain join exactly") {
-    import graft.functions.BloomFilterAgg
-    // no false negatives: every inserted key passes the column-native
-    // membership test (the property the prefilter's exactness rests on)
+    import graft.functions.SizedBloomFilter
+    // the fixed-width tier (q273/q285): no false negatives — every
+    // inserted key passes the column-native membership test (the
+    // property the prefilter's exactness rests on)
+    val bits = SizedBloomFilter.MinBits
+    assert(bits == (1L << 20))
     val keys = (1L to 5000L).toDF("k")
-    val bloom = keys.agg(BloomFilterAgg.build(xxhash64($"k")).as("bf"))
+    val bloom = keys.agg(SizedBloomFilter.build(bits, xxhash64($"k")).as("bf"))
     val misses = keys.crossJoin(broadcast(bloom))
-      .filter(!BloomFilterAgg.mightContain($"bf", xxhash64($"k")))
+      .filter(!SizedBloomFilter.mightContain(bits, $"bf", xxhash64($"k")))
       .count()
     assert(misses == 0, s"$misses inserted keys failed the membership test")
     // false-positive rate stays sane at this fill (5k keys in 2^20 bits)
     val absent = (1000001L to 1010000L).toDF("k")
     val fp = absent.crossJoin(broadcast(bloom))
-      .filter(BloomFilterAgg.mightContain($"bf", xxhash64($"k")))
+      .filter(SizedBloomFilter.mightContain(bits, $"bf", xxhash64($"k")))
       .count()
     assert(fp < 100, s"false-positive rate implausibly high: $fp/10000")
     // the production query: bloom-pruned plan ≡ the same join unpruned
@@ -286,7 +289,7 @@ class ExtendedSpec extends SparkTestBase {
   test("SizedBloomFilter: zero false negatives at every width, sizing policy bounded") {
     import graft.functions.SizedBloomFilter
     // no-false-negatives is the property the wedge prefilter's
-    // exactness rests on — check it at a non-default width
+    // exactness rests on — check it at the floor width and a sized one
     for (bits <- Seq(1L << 20, 1L << 22)) {
       val keys = (1L to 4000L).toDF("k")
       val bloom = keys.agg(SizedBloomFilter.build(bits, xxhash64($"k")).as("bf"))

@@ -64,11 +64,13 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("bitmap distinct aggregator equals count(distinct) from SQL and DSL") {
-    GraftExtensions.install(spark)
     Tables.events(spark, sf).createOrReplaceTempView("ev_bitmap")
     val viaSql = spark.sql(
-      """SELECT event_type, graft_bitmap_distinct(user_id) AS n
-        |FROM ev_bitmap GROUP BY event_type""".stripMargin)
+      """SELECT event_type, sum(n) AS n FROM (
+        |  SELECT event_type, bitmap_bucket_number(user_id) AS bucket,
+        |    bitmap_count(bitmap_construct_agg(bitmap_bit_position(user_id))) AS n
+        |  FROM ev_bitmap GROUP BY 1, 2)
+        |GROUP BY event_type""".stripMargin)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val viaDsl = SparkEntry.queries("q99_bitmap_distinct")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -77,19 +79,13 @@ class ExtensionsSpec extends SparkTestBase {
       .agg(countDistinct(col("user_id")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(viaSql == exact && viaDsl == exact)
-    // domain guard: out-of-range ids must fail loudly, not corrupt
-    import spark.implicits._
-    val e = intercept[Exception] {
-      Seq(-1L).toDF("id")
-        .agg(graft.functions.BitmapDistinct.distinctCount($"id")).collect()
-    }
-    assert(e.getMessage.contains("BitmapDistinct") ||
-      Option(e.getCause).exists(_.getMessage.contains("BitmapDistinct")))
     // NULL ids are skipped, same as count(DISTINCT ...)
+    import spark.implicits._
     val withNulls = Seq(Some(1L), None, Some(2L), Some(1L), None)
       .toDF("id")
-      .agg(graft.functions.BitmapDistinct.distinctCount($"id"))
-      .collect()(0).getLong(0)
+      .groupBy(bitmap_bucket_number($"id"))
+      .agg(bitmap_count(bitmap_construct_agg(bitmap_bit_position($"id"))).as("n"))
+      .agg(sum($"n")).collect()(0).getLong(0)
     assert(withNulls == 2L)
   }
 
@@ -112,14 +108,14 @@ class ExtensionsSpec extends SparkTestBase {
     assert(viaSql == viaWindow && viaSql.nonEmpty)
   }
 
-  test("graft_freq10 from pure SQL keeps every over-threshold event type") {
-    GraftExtensions.install(spark)
+  test("approx_top_k from pure SQL keeps every over-threshold event type") {
     Tables.events(spark, sf).createOrReplaceTempView("ev_freq")
     // 5 event types over any n/11 threshold -> the k=10 summary must
     // hold ALL of them (MG guarantee), with counts never overcounting
     val got = spark.sql(
-      """SELECT t.col._1 AS item, t.col._2 AS cnt FROM (
-        |  SELECT graft_freq10(event_type) AS s FROM ev_freq)
+      """SELECT t.col.item AS item, t.col.count AS cnt FROM (
+        |  SELECT approx_top_k(event_type, 10) AS s FROM ev_freq
+        |  WHERE event_type IS NOT NULL)
         |LATERAL VIEW explode(s) t""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val truth = Tables.events(spark, sf).groupBy(col("event_type")).count()

@@ -84,11 +84,66 @@ class GraphSpec extends SparkTestBase {
     assert(bc == sh, s"$bc vs $sh")
   }
 
-  test("labelPropagation symmetric seed ≡ union seed on a symmetric edge list; union seed still covers src-only vertices") {
-    // two triangles bridged by one edge — communities are non-trivial
+  // two triangles bridged by one edge — communities are non-trivial
+  private lazy val twoTriangles = {
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
-    val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
+    (und ++ und.map(_.swap)).toDF("src", "dst")
+  }
+
+  // the inputs of the broadcast-vs-shuffle tier specs below
+  private def tierInputs = Seq("two triangles" -> twoTriangles,
+    "co-order" -> operators.Graph.coOrderEdges(
+      Tables.lineitem(spark, sf).limit(2000)))
+
+  test("labelPropagation shuffle path (broadcastState=false) matches the broadcast path exactly") {
+    for ((tag, e) <- tierInputs) {
+      def run(bcast: Boolean) = operators.Graph.labelPropagation(e, rounds = 2,
+          broadcastState = Some(bcast), symmetric = true)
+        .as[(Long, Long)].collect().toMap
+      val bc = run(true)
+      assert(bc.nonEmpty && bc == run(false), s"$tag: tiers disagree")
+    }
+  }
+
+  test("connectedComponents shuffle path (broadcastState=false) matches the broadcast path exactly") {
+    for ((tag, e) <- tierInputs) {
+      def run(bcast: Boolean) = operators.Graph.connectedComponents(e,
+        rounds = 10, broadcastState = Some(bcast)).collect().toSeq
+      val bc = run(true)
+      assert(bc.nonEmpty && bc == run(false), s"$tag: tiers disagree")
+    }
+  }
+
+  test("graph kernels keep a caller's persisted edge frame cached and release only their own") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    def edges = operators.Graph.coOrderEdges(Tables.lineitem(spark, sf).limit(2000))
+    val kernels = Seq[(String, DataFrame => Long)](
+      "pageRank" -> (e => operators.Graph.pageRank(e, iterations = 2).count()),
+      "bfsHops" -> (e => operators.Graph.bfsHops(e,
+        e.select($"src".as("part")).limit(1), maxHops = 2).count()),
+      "triangleStats" -> (e => operators.Graph.triangleStats(e).count()),
+      "localClusteringCensus" ->
+        (e => operators.Graph.localClusteringCensus(e).count()))
+    val owned = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      for ((name, run) <- kernels) {
+        assert(run(owned) > 0, name)
+        assert(owned.storageLevel == StorageLevel.MEMORY_AND_DISK,
+          s"$name dropped the caller's cache")
+      }
+    } finally owned.unpersist()
+    // an uncached input: the kernel caches it for its own scans only
+    val bare = edges
+    for ((name, run) <- kernels) {
+      run(bare)
+      assert(bare.storageLevel == StorageLevel.NONE, s"$name left its cache behind")
+    }
+  }
+
+  test("labelPropagation symmetric seed ≡ union seed on a symmetric edge list; union seed still covers src-only vertices") {
+    val sym = twoTriangles
     val base = operators.Graph.labelPropagation(sym, rounds = 2)
       .as[(Long, Long)].collect().toMap
     val fast = operators.Graph.labelPropagation(sym, rounds = 2,

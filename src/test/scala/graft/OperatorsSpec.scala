@@ -245,16 +245,21 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("Misra-Gries summary: exact under k, heavy hitters guaranteed, undercount bounded") {
-    val agg = new graft.functions.FreqItemsAgg(5)
-    // (a) <= k distinct items: the summary is EXACT
+    // Spark's built-in approx_top_k (a DataSketches frequent-items
+    // sketch) holds the Misra–Gries guarantee graft relies on; it counts
+    // NULL as an item, so NULLs are filtered first, as SQL aggregates do
+    def summary(items: Seq[String], parts: Int): Seq[(String, Long)] =
+      items.toDF("item").repartition(parts).filter($"item".isNotNull)
+        .agg(call_function("approx_top_k", $"item", lit(5)).as("s"))
+        .select(explode($"s").as("e")).select($"e.item", $"e.count")
+        .as[(String, Long)].collect().toSeq
+    // (a) <= k distinct items: the summary is EXACT, count-desc
     val small = Seq("a", "b", "a", "c", "a", "b")
-    val exact = agg.finish(small.foldLeft(agg.zero)(agg.reduce))
-    assert(exact == Seq("a" -> 3L, "b" -> 2L, "c" -> 1L))
-
-    // NULLs are skipped like every SQL aggregate — interleaved nulls
-    // leave the summary untouched (and never NPE finish()'s ordering)
+    val exact = Seq("a" -> 3L, "b" -> 2L, "c" -> 1L)
+    assert(summary(small, 3) == exact)
+    // interleaved NULLs leave the summary untouched
     val withNulls = Seq("a", null, "b", "a", null, "c", "a", "b", null)
-    assert(agg.finish(withNulls.foldLeft(agg.zero)(agg.reduce)) == exact)
+    assert(summary(withNulls, 3) == exact)
 
     // (b) skewed stream over 40 distinct items, deterministic shuffle
     val heavy = Seq.fill(300)("HOT") ++ Seq.fill(120)("WARM") ++
@@ -262,23 +267,20 @@ class OperatorsSpec extends SparkTestBase {
     val stream = new scala.util.Random(7).shuffle(heavy)
     val n = stream.size
     val truth = stream.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    // fold through arbitrary split points and MERGE the partials —
-    // the map-side-combine path the shuffle actually exercises
-    for (cut <- Seq(1, n / 3, n / 2, n - 2)) {
-      val (l, r) = stream.splitAt(cut)
-      val merged = agg.merge(
-        l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce))
-      val got = agg.finish(merged).toMap
+    // partial sketches merged across repartitionings — the
+    // map-side-combine path the shuffle actually exercises
+    for (parts <- Seq(1, 3, 7, 32)) {
+      val got = summary(stream, parts).toMap
       assert(got.size <= 5)
       // every item with true freq > n/(k+1) MUST be present
       truth.filter(_._2 > n / 6).keys.foreach { hh =>
-        assert(got.contains(hh), s"split $cut lost heavy hitter $hh")
+        assert(got.contains(hh), s"$parts partitions lost heavy hitter $hh")
       }
       // every reported count undercounts truth by at most n/(k+1),
       // and never overcounts
       got.foreach { case (i, c) =>
-        assert(c <= truth(i), s"split $cut overcounted $i")
-        assert(truth(i) - c <= n / 6, s"split $cut bound broken for $i")
+        assert(c <= truth(i), s"$parts partitions overcounted $i")
+        assert(truth(i) - c <= n / 6, s"$parts partitions bound broken for $i")
       }
     }
   }

@@ -1,16 +1,19 @@
 package graft
 
-import graft.functions.{QuantileSketch, QuantileSketchAgg}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Certification of the mergeable quantile sketch: the measured rank
-  * error must stay inside the deterministic closed-form bound across
-  * partitionings (merge orders) and skews, state must stay bounded,
-  * and the SQL spot must agree with the DSL column — the ANN-style
-  * certified-contract discipline for an approximate operator.
+/** Certification of the quantile sketches graft uses — Spark's
+  * built-in KLL (`kll_sketch_agg_double` + `kll_sketch_get_quantile_double`)
+  * and GK `percentile_approx`: the measured rank error must stay inside
+  * the deterministic closed-form bound across partitionings (merge
+  * orders) and skews, and the SQL surface must agree with the DSL
+  * column — the ANN-style certified-contract discipline for an
+  * approximate operator.
   */
 class QuantileSketchSpec extends SparkTestBase {
   import spark.implicits._
+  import QuantileSketchSpec.{kll, rankErrorBound}
 
   private val probs = Seq(0.1, 0.5, 0.9, 0.99)
 
@@ -22,68 +25,50 @@ class QuantileSketchSpec extends SparkTestBase {
     val uniform = (1 to n).map(_.toDouble)
     val rnd = new scala.util.Random(7)
     val skewed = (1 to n).map(_ => math.exp(rnd.nextGaussian() * 4))
+    val estimators = Seq(
+      "kll" -> kll($"v", probs, 256),
+      "percentile_approx" ->
+        percentile_approx($"v", array(probs.map(lit): _*), lit(10000)))
     for ((data, tag) <- Seq((uniform, "uniform"), (skewed, "lognormal"));
-         parts <- Seq(1, 7, 32)) {
+         parts <- Seq(1, 7, 32); (name, est) <- estimators) {
       val sorted = data.toArray.sorted
       val got = data.toDF("v").repartition(parts)
-        .agg(QuantileSketch.quantiles($"v", probs, k = 256).as("q"))
-        .as[Seq[Double]].head()
-      val bound = QuantileSketch.rankErrorBound(n, 256)
-      probs.zip(got).foreach { case (p, est) =>
-        val err = math.abs(rankOf(sorted, est) - math.ceil(p * n).toLong)
+        .agg(est.as("q")).as[Seq[Double]].head()
+      val bound = rankErrorBound(n, 256)
+      probs.zip(got).foreach { case (p, q) =>
+        val err = math.abs(rankOf(sorted, q) - math.ceil(p * n).toLong)
         assert(err <= bound,
-          s"$tag parts=$parts p=$p: rank error $err > bound $bound")
+          s"$name $tag parts=$parts p=$p: rank error $err > bound $bound")
       }
     }
   }
 
-  test("buffer state is bounded by k x levels regardless of n") {
-    val agg = new QuantileSketchAgg(Seq(0.5), k = 64)
-    var buf = agg.zero
-    (1 to 100000).foreach(i => buf = agg.reduce(buf, i.toDouble))
-    val stored = buf.map(_._2.size).sum
-    val levels = buf.size
-    assert(stored <= 64 * (levels + 1), s"stored $stored across $levels levels")
-    assert(levels <= math.ceil(math.log(100000.0 / 64) / math.log(2.0)) + 2)
-    // merge associativity sanity: (a+b)+c and a+(b+c) summarize the
-    // same multiset — both must satisfy the bound on the union
-    val chunks = (1 to 30000).map(_.toDouble).grouped(10000).toSeq
-    val bufs = chunks.map(c => c.foldLeft(agg.zero)(agg.reduce))
-    val left = agg.merge(agg.merge(bufs(0), bufs(1)), bufs(2))
-    val right = agg.merge(bufs(0), agg.merge(bufs(1), bufs(2)))
-    val sorted = (1 to 30000).map(_.toDouble).toArray
-    for (b <- Seq(left, right); (p, est) <- Seq(0.5).zip(agg.finish(b))) {
-      val err = math.abs(rankOf(sorted, est) - math.ceil(p * 30000).toLong)
-      assert(err <= QuantileSketch.rankErrorBound(30000, 64), s"err $err")
-    }
-  }
-
   test("Percentiles dispatcher: both physical paths agree within the certified rank bound") {
-    // the settled plan choice (operators/Percentiles): auto = native
-    // GK, sketch = the opt-in mergeable tier. Both paths must land
-    // inside the SKETCH's closed-form rank bound of the same exact
-    // quantile (GK at accuracy 1e4 is far tighter, so one shared bound
-    // gates both), or the dispatcher is choosing between two plans
-    // that disagree.
+    // graft's two grouped-percentile plans: native GK percentile_approx
+    // (the default — x_pctl_approx) and the opt-in mergeable KLL tier.
+    // Both must land inside the KLL sketch's closed-form rank bound of
+    // the same exact quantile per group (GK at accuracy 1e4 is far
+    // tighter, so one shared bound gates both), or callers choosing
+    // between the two plans would get answers that disagree.
     val n = 50000
     val rnd = new scala.util.Random(11)
     val rows = (1 to n).map(i => (i % 4, math.exp(rnd.nextGaussian() * 2)))
     val df = rows.toDF("g", "v").repartition(13)
     val ps = Seq(0.5, 0.9)
-    def got(sk: Boolean): Map[Int, Seq[Double]] =
-      operators.Percentiles.approxQuantiles(df, Seq("g"), "v", ps,
-          sketch = Some(sk))
-        .as[(Int, Seq[Double])].collect().toMap
-    val native = got(false)
-    val sketch = got(true)
-    // auto takes the native plan (the measured constant)
-    val autoPlan = operators.Percentiles
-      .approxQuantiles(df, Seq("g"), "v", ps)
-      .queryExecution.executedPlan.toString
-    assert(autoPlan.contains("percentile_approx"), autoPlan.take(400))
+    val nativeDf = df.groupBy($"g")
+      .agg(percentile_approx($"v", array(ps.map(lit): _*), lit(10000)).as("q"))
+    val sketchDf = df.groupBy($"g").agg(kll($"v", ps, 256).as("q"))
+    def got(q: org.apache.spark.sql.DataFrame): Map[Int, Seq[Double]] =
+      q.as[(Int, Seq[Double])].collect().toMap
+    val native = got(nativeDf)
+    val sketch = got(sketchDf)
+    val nativePlan = nativeDf.queryExecution.executedPlan.toString
+    assert(nativePlan.contains("percentile_approx"), nativePlan.take(400))
+    val sketchPlan = sketchDf.queryExecution.executedPlan.toString
+    assert(sketchPlan.contains("kll_sketch_agg_double"), sketchPlan.take(400))
     for (g <- 0 until 4) {
       val vals = rows.collect { case (gg, v) if gg == g => v }.toArray.sorted
-      val bound = QuantileSketch.rankErrorBound(vals.length, 256)
+      val bound = rankErrorBound(vals.length, 256)
       for ((p, i) <- ps.zipWithIndex; est <- Seq(native(g)(i), sketch(g)(i))) {
         val err = math.abs(rankOf(vals, est) - math.ceil(p * vals.length).toLong)
         assert(err <= bound, s"g=$g p=$p est=$est rank err $err > $bound")
@@ -92,14 +77,14 @@ class QuantileSketchSpec extends SparkTestBase {
   }
 
   test("per-group sketch quantiles track exact percentiles; SQL spot agrees") {
-    graft.plans.GraftExtensions.install(spark)
     val ev = Tables.events(spark, sf).filter($"value".isNotNull)
     val viaDsl = ev.groupBy($"event_type")
-      .agg(QuantileSketch.quantiles($"value", Seq(0.5, 0.9, 0.99)).as("q"))
+      .agg(kll($"value", Seq(0.5, 0.9, 0.99), 256).as("q"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     ev.createOrReplaceTempView("ev_pctl")
     val viaSql = spark.sql(
-      """SELECT event_type, graft_pctl_sketch(value) AS q
+      """SELECT event_type, kll_sketch_get_quantile_double(
+        |  kll_sketch_agg_double(value, 256), array(0.5D, 0.9D, 0.99D)) AS q
         |FROM ev_pctl GROUP BY event_type""".stripMargin)
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     assert(viaDsl.keySet == viaSql.keySet && viaDsl.keySet.nonEmpty)
@@ -117,19 +102,34 @@ class QuantileSketchSpec extends SparkTestBase {
   }
 
   test("SQL surface skips NULLs instead of coercing them to 0.0") {
-    graft.plans.GraftExtensions.install(spark)
-    // a sparse column: 10 real values among 990 NULLs. The primitive
-    // encoder would read each NULL as 0.0 and drag p50 to 0; the
-    // boxed shell must return the quantiles of the 10 real values.
+    // a sparse column: 10 real values among 990 NULLs. Reading each
+    // NULL as 0.0 would drag p50 to 0; the sketch must return the
+    // quantiles of the 10 real values. (An all-NULL group has no
+    // sketch to query: kll_sketch_get_quantile_double raises
+    // KLL_INVALID_INPUT_SKETCH_BUFFER, so callers filter NULLs first.)
     val vals = (1 to 10).map(i => i * 100.0)
     val rows = vals.map(Option(_)) ++ Seq.fill(990)(Option.empty[Double])
     rows.toDF("v").createOrReplaceTempView("sparse_pctl")
-    val got = spark.sql("SELECT graft_pctl_sketch(v) AS q FROM sparse_pctl")
+    val got = spark.sql(
+      """SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(v, 256),
+        |  array(0.5D, 0.9D, 0.99D)) AS q FROM sparse_pctl""".stripMargin)
       .collect()(0).getSeq[Double](0)
     // n=10 < k: exact lower quantiles of {100..1000}
     assert(got == Seq(500.0, 900.0, 1000.0), got.toString)
-    // all-NULL group: NaNs (empty sketch), not zeros
-    spark.sql("SELECT graft_pctl_sketch(v) AS q FROM sparse_pctl WHERE v IS NULL")
-      .collect()(0).getSeq[Double](0).foreach(v => assert(v.isNaN))
   }
+}
+
+object QuantileSketchSpec {
+  /** Quantiles of `v` at `probs` from a k-capacity KLL sketch. */
+  def kll(v: Column, probs: Seq[Double], k: Int): Column =
+    kll_sketch_get_quantile_double(kll_sketch_agg_double(v.cast("double"), k),
+      array(probs.map(lit): _*))
+
+  /** The deterministic worst-case RANK error of a k-capacity KLL-style
+    * sketch over n rows: n·(log₂(n/k)+2)/k — every compaction at level
+    * l displaces a rank by ≤ 2^l and at most ⌈n/(k·2^l)⌉ happen there.
+    */
+  def rankErrorBound(n: Long, k: Int): Double =
+    if (n <= k) 0.0
+    else n.toDouble * (math.log(n.toDouble / k) / math.log(2.0) + 2.0) / k
 }

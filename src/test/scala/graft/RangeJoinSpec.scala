@@ -116,6 +116,16 @@ class RangeJoinSpec extends SparkTestBase {
     assert(!off.toString.contains("__graft_bin"))
   }
 
+  test("a malformed bin width conf fails loudly instead of turning the rule off") {
+    val cond = $"x" >= $"lo" && $"x" <= $"hi"
+    spark.conf.set(RangeJoinBinning.ConfKey, "1h")
+    val e = try intercept[IllegalArgumentException] {
+        RangeJoinBinning(points.join(intervals, cond).queryExecution.analyzed)
+      } finally spark.conf.unset(RangeJoinBinning.ConfKey)
+    assert(e.getMessage.contains(RangeJoinBinning.ConfKey) &&
+      e.getMessage.contains("'1h'"), e.getMessage)
+  }
+
   test("withBinWidth hint scopes the rewrite to one join, equi keys allowed") {
     // the plan-embedded trigger: no session conf, an equi key present
     // (the production shape the conf path deliberately skips) — the

@@ -546,21 +546,24 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming bitmap-distinct aggregation converges to batch q99") {
-    // the custom typed Aggregator drops into a streaming groupBy
-    // unchanged: the state store holds one bitmap per group, each
-    // micro-batch ORs into it — exact distinct counts over a stream
-    // without a shuffle-per-(group,id) expansion
+    // the built-in bitmap aggregate drops into a streaming groupBy
+    // unchanged: the state store holds one bitmap per (group, bucket),
+    // each micro-batch ORs into it — exact distinct counts over a
+    // stream without a shuffle-per-(group,id) expansion; the bucket
+    // counts sum per group on read, as q99 does
     val root = java.nio.file.Files.createTempDirectory("graft_s11")
     val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     java.nio.file.Files.copy(new java.io.File(s"$sf/events.parquet").toPath,
       inDir.resolve("events.parquet"))
     val stream = Streams.eventsStream(spark, inDir.toString)
-      .groupBy($"event_type")
-      .agg(graft.functions.BitmapDistinct.distinctCount($"user_id").as("n_users"))
+      .groupBy($"event_type", bitmap_bucket_number($"user_id").as("bucket"))
+      .agg(bitmap_count(bitmap_construct_agg(bitmap_bit_position($"user_id")))
+        .as("n"))
     val q = stream.writeStream.format("memory").queryName("s11_bitmap")
       .outputMode("complete").start()
     try { q.processAllAvailable() } finally { q.stop() }
     val streamed = spark.table("s11_bitmap")
+      .groupBy($"event_type").agg(sum($"n").as("n_users"))
       .as[(String, Long)].collect().toSet
     val batch = SparkEntry.queries("q99_bitmap_distinct")(spark, sf)
       .as[(String, Long)].collect().toSet
@@ -568,24 +571,24 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming Misra-Gries aggregation keeps its guarantee over the stream (s44)") {
-    // FreqItemsAgg drops into a streaming groupBy unchanged: the state
-    // store holds <= k counters per group, each micro-batch folds in
-    // via the mergeable-summaries merge — the MG guarantee (every item
-    // with freq > n/(k+1) present, counts never over) must hold on the
-    // final summary regardless of how the stream was sliced
+    // the built-in approx_top_k drops into a streaming groupBy
+    // unchanged: the state store holds one frequent-items sketch per
+    // group, each micro-batch merges into it — the MG guarantee (every
+    // item with freq > n/(k+1) present, counts never over) must hold on
+    // the final summary regardless of how the stream was sliced
     val root = java.nio.file.Files.createTempDirectory("graft_s44")
     val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     java.nio.file.Files.copy(new java.io.File(s"$sf/events.parquet").toPath,
       inDir.resolve("events.parquet"))
     val stream = Streams.eventsStream(spark, inDir.toString)
       .groupBy($"user_id" % 10)
-      .agg(graft.functions.FreqItems.freqItems($"event_type", 3).as("hh"))
+      .agg(call_function("approx_top_k", $"event_type", lit(3)).as("hh"))
     val q = stream.writeStream.format("memory").queryName("s44_freq")
       .outputMode("complete").start()
     try { q.processAllAvailable() } finally { q.stop() }
     val got = spark.table("s44_freq")
       .select($"(user_id % 10)".as("g"), explode($"hh").as("e"))
-      .select($"g", $"e._1".as("item"), $"e._2".as("cnt"))
+      .select($"g", $"e.item".as("item"), $"e.count".as("cnt"))
       .as[(Long, String, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => r._2 -> r._3).toMap).toMap
     val truth = Tables.events(spark, sf)
@@ -1253,9 +1256,9 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming quantile sketch keeps its rank-error contract over the stream (s59)") {
-    // QuantileSketchAgg drops into a streaming groupBy unchanged (the
-    // s44 mergeable-summaries convention): each micro-batch folds into
-    // the bounded level summary in the state store, and the final
+    // the built-in KLL sketch drops into a streaming groupBy unchanged
+    // (the s44 mergeable-summaries convention): each micro-batch merges
+    // into the bounded sketch in the state store, and the final
     // estimate must satisfy the closed-form rank-error bound no matter
     // how the stream was sliced
     val ev = Tables.events(spark, sf).filter($"value".isNotNull)
@@ -1271,8 +1274,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/batch_*")
       .groupBy($"event_type")
-      .agg(graft.functions.QuantileSketch
-        .quantiles($"value", Seq(0.5, 0.9), k = 64).as("q"))
+      .agg(QuantileSketchSpec.kll($"value", Seq(0.5, 0.9), 64).as("q"))
     val q = stream.writeStream.format("memory").queryName("s59_pctl")
       .outputMode("complete").start()
     try { q.processAllAvailable() } finally { q.stop() }
@@ -1284,7 +1286,7 @@ class StreamingSpec extends SparkTestBase {
     assert(got.nonEmpty && got.keySet == truth.keySet)
     truth.foreach { case (t, sorted) =>
       val n = sorted.length
-      val bound = graft.functions.QuantileSketch.rankErrorBound(n, 64)
+      val bound = QuantileSketchSpec.rankErrorBound(n, 64)
       Seq(0.5, 0.9).zip(got(t)).foreach { case (p, est) =>
         val err = math.abs(sorted.count(_ <= est).toLong -
           math.ceil(p * n).toLong)
