@@ -38,7 +38,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // JVM + session warmup so the alphabetically-first queries don't
     // absorb one-time startup costs: trigger the parquet reader, window,
@@ -56,12 +55,8 @@ object Bench {
     val records =
       try {
         val all = registry(spark, sfDir, tmp)
-        val picked = only.fold(all) { names =>
-          val unknown = names -- all.map(_.name)
-          require(unknown.isEmpty,
-            s"SPARK_GRAFT_ONLY names unknown entries: ${unknown.mkString(",")}")
-          all.filter(e => names(e.name))
-        }
+        val picked = onlyNames(only, all.map(_.name))
+          .fold(all)(names => all.filter(e => names(e.name)))
         measure(spark, picked, planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR"))
       } finally Tables.deleteTree(tmp.toString)
     // sf pattern disallows a trailing dot (e.g. dir "sf2.final" must not
@@ -90,6 +85,18 @@ object Bench {
     println(lastLine(records, sf, detail))
     spark.stop()
   }
+
+  /** SPARK_GRAFT_ONLY's names, or None when unset — shared with
+    * [[Verify]]. A name missing from `known` throws, naming it, so a
+    * typo cannot narrow a run to nothing and pass. */
+  def onlyNames(spec: Option[String], known: Iterable[String]): Option[Set[String]] =
+    spec.map { s =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- known
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown entries: ${unknown.toSeq.sorted.mkString(",")}")
+      names
+    }
 
   /** Warm passes after the cold pass; the warm minimum is the steady-
     * state cost, and the spread says how much of a cross-run delta is

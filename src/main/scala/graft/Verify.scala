@@ -1,11 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev loop: SPARK_GRAFT_ONLY=q62_json_extract,q24_returns narrows the
+    // dump to named queries (unset → full run); an unknown name fails
+    // before the session starts.
+    val only = Bench.onlyNames(sys.env.get("SPARK_GRAFT_ONLY"),
+      SparkEntry.queries.keys)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,14 +21,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q62_json_extract,q24_returns narrows the
-    // dump to named queries (driver never sets it → full run).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected = only.fold(SparkEntry.queries)(names =>
+      SparkEntry.queries.filter { case (n, _) => names(n) })
     // A filtered run writes to a distinct subdir so stale dumps of
     // unselected queries can never be mistaken for current output, and
     // the active filter is logged for the human driving the dev loop.
@@ -44,7 +44,7 @@ object Verify {
       // actually needs.
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$effOut/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

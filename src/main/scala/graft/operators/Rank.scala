@@ -155,7 +155,7 @@ object Rank {
                      totalCol: String = "n_total",
                      twoPass: Option[Boolean] = None,
                      offsetRowCap: Long = DriverOffsetRowCap): DataFrame = {
-    val outCols = (df.columns :+ rankCol :+ totalCol).map(col)
+    val outCols = (df.columns.toSeq :+ rankCol :+ totalCol).map(col)
     if (useNative(df, group, twoPass, offsetRowCap = offsetRowCap)) {
       val w = Window.partitionBy(group.map(col): _*)
         .orderBy(order.map(col): _*)
@@ -196,7 +196,7 @@ object Rank {
                       valueCol: String, out: String = "cum",
                       twoPass: Option[Boolean] = None,
                       offsetRowCap: Long = DriverOffsetRowCap): DataFrame = {
-    val outCols = (df.columns :+ out).map(col)
+    val outCols = (df.columns.toSeq :+ out).map(col)
     if (useNative(df, group, twoPass, offsetRowCap = offsetRowCap)) {
       val w = Window.partitionBy(group.map(col): _*)
         .orderBy(order.map(col): _*)

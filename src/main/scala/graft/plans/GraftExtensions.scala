@@ -38,7 +38,8 @@ object GraftExtensions {
   }
 
   private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+      "", "", "", "", "", "", "")
 
   /** The full SQL function surface (shared by the session-extension
     * path and [[install]]).

@@ -1463,35 +1463,32 @@ object TrainingData {
     * tokens ≤ its with one strict — the skyline operator, here as the
     * "maximally diverse at every length budget" curation shortlist
     * (the 2-D skyline every per-length quality cutoff is a point of).
-    * Computed WITHOUT a self-join: sort each source by token count,
-    * then (a) the running max TTR over STRICTLY-SHORTER docs (a RANGE
-    * frame ending 1 before the current token count) dominates on the
-    * strict-length side, and (b) the per-token-count group max
-    * dominates on the strict-TTR side — two window passes over one
-    * sort, O(n log n) per source vs the self-join's O(n²). TTR
-    * lattices to 6dp BEFORE every comparison so both engines make
-    * identical dominance decisions (the boundary discipline).
+    * One [[skylineFront]] aggregation, no self-join and no sort; the
+    * 6dp TTR micro-units divide back to the double [[decRound]] gives.
     */
-  def q210Skyline(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val d = Tables.documents(spark, dir)
-      .select($"doc_id", $"source", Text.tokens($"text").as("toks"))
-      .select($"doc_id", $"source",
-        size($"toks").cast("long").as("n_tokens"),
-        size(array_distinct($"toks")).cast("long").as("n_types"))
-      .filter($"n_tokens" > 0L)
-      .withColumn("ttr",
-        decRound($"n_types".cast("double") / $"n_tokens".cast("double"), 6))
-    val wLt = Window.partitionBy($"source").orderBy($"n_tokens")
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val wEq = Window.partitionBy($"source", $"n_tokens")
-    val sky = d
-      .withColumn("max_lt", max($"ttr").over(wLt))
-      .withColumn("max_eq", max($"ttr").over(wEq))
-      .filter(($"max_lt".isNull || $"ttr" > $"max_lt") &&
-        $"ttr" === $"max_eq")
-    sky.select($"source", $"doc_id", $"n_tokens", $"n_types", $"ttr")
-  }
+  def q210Skyline(spark: SparkSession, dir: String): DataFrame =
+    skylineFront(Tables.documents(spark, dir))
+      .select(col("source"), col("doc_id"), col("n_tokens"),
+        col("n_types"), (col("ttr6").cast("double") / 1e6).as("ttr"))
+
+  /** The per-source TTR skyline of a documents frame as (source,
+    * doc_id, n_tokens, n_types, ttr6) rows: one
+    * [[graft.functions.SkylineAgg]] per source, exploded. Batch q210
+    * and its streaming twin s58 both run it.
+    */
+  def skylineFront(docs: DataFrame): DataFrame =
+    docs.select(col("source"), col("doc_id"), Text.tokens(col("text")).as("toks"))
+      .select(col("source"), col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        size(array_distinct(col("toks"))).cast("long").as("n_types"))
+      .filter(col("n_tokens") > 0L)
+      .groupBy(col("source"))
+      .agg(graft.functions.SkylineAgg.front(col("n_tokens"), col("n_types"),
+        col("doc_id")).as("front"))
+      .select(col("source"), explode(col("front")).as("e"))
+      .select(col("source"), col("e._4").as("doc_id"),
+        col("e._2").as("n_tokens"), col("e._3").as("n_types"),
+        col("e._1").as("ttr6"))
 
   val q210Sql: String =
     """WITH d AS (

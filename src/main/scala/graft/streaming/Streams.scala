@@ -63,12 +63,6 @@ object Streams {
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
 
-  /** Stateful sessionization: 30-minute inactivity gap, implemented
-    * with flatMapGroupsWithState so the per-user state is just
-    * (start, last, n, sum) — O(users) state, not O(events).
-    * Sessions close either when a gap appears inside the feed or when
-    * the event-time watermark passes last+30min (timeout path).
-    */
   /** µs precision throughout — `Timestamp.getTime` alone is ms-truncated
     * and diverges from the batch sessionizer (q27) on boundary gaps.
     */
@@ -89,6 +83,9 @@ object Streams {
     * it was). Update mode with no timeout: only users with events in
     * the batch are visited, and each emits the rows its fold returns.
     * A twin supplies its event type, state type, fold and emissions.
+    * A fold may stably re-sort its Seq by a within-µs class, which
+    * keeps (µs `ts`, class, `event_id`) order: s27 puts quotes before
+    * trades and s43 views before purchases at one microsecond.
     *
     * In-order-per-key delivery caveat: the sort orders events WITHIN
     * one micro-batch. Across batches the fold sees them in arrival
@@ -1491,57 +1488,32 @@ object Streams {
     }
   }
 
-  /** Per-(flag, month) state for s23: exact decimal running sums of
-    * price and quantity plus the row count. Two decimals + a long per
-    * group — bounded regardless of stream length, and ORDER-INDEPENDENT:
-    * each double joins the sum as its canonical decimal value
-    * (BigDecimal.valueOf), so the accumulated sums are exact in decimal
-    * space no matter how micro-batches slice the feed — the streaming
-    * statement of the batch money-lattice discipline. (Inputs whose
-    * canonical decimal scale exceeds 18 would be clipped by the state
-    * encoder's DecimalType(38,18); money/quantity columns are 2dp.)
-    */
-  case class VwapState(sumP: BigDecimal, sumQ: BigDecimal, n: Long)
-
   /** s23 — streaming VWAP per (l_returnflag, ship month): the
-    * incremental twin of batch q74. Emits the running
-    * (vwap, volume, n) per key each micro-batch in update mode — the
-    * row with the greatest n per key is the current answer and, once
-    * the feed drains, equals batch q74 at the 4dp/2dp rounds (the
-    * streaming sums are exact decimals; the batch double sums drift
-    * below the rounding band — the same cross-engine argument the
-    * DuckDB gate rests on). Input rows may arrive in ANY order within
-    * a key: pure sums need no in-order caveat, unlike the
-    * recurrence-replay twins.
+    * incremental twin of batch q74 on Spark's streaming aggregation.
+    * Each double joins its sum as DECIMAL(38,18), which keeps its
+    * shortest-repr value (money and quantity are 2dp), so the sums are
+    * exact and order-independent under any micro-batch slicing. Update
+    * mode re-emits each touched key's running (n, vwap, volume); the
+    * max-n row per key, once the feed drains, equals batch q74 at the
+    * 4dp/2dp rounds (whose double sums drift only below that band). The
+    * quotient is taken at 12dp HALF_UP on the exact sums before the 4dp
+    * round: Spark's DECIMAL(38,18) division returns DECIMAL(38,6).
     */
   def vwapStream(spark: SparkSession, lineitem: DataFrame)
       : Dataset[(String, Long, Long, Double, Double)] = {
     import spark.implicits._
+    import java.math.RoundingMode.HALF_UP
+    val exact = org.apache.spark.sql.types.DecimalType(38, 18)
     lineitem
-      .select(col("l_returnflag").as("flag"),
-        unix_micros(date_trunc("month", col("l_shipdate"))).as("mo"),
-        col("l_extendedprice").as("price"), col("l_quantity").as("qty"))
-      .as[(String, Long, Double, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[VwapState, (String, Long, Long, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[(String, Long, Double, Double)],
-         state: GroupState[VwapState]) =>
-          var st = state.getOption
-            .getOrElse(VwapState(BigDecimal(0), BigDecimal(0), 0L))
-          rows.foreach { r =>
-            st = VwapState(
-              st.sumP + BigDecimal(java.math.BigDecimal.valueOf(r._3)),
-              st.sumQ + BigDecimal(java.math.BigDecimal.valueOf(r._4)),
-              st.n + 1)
-          }
-          state.update(st)
-          val vwap = st.sumP.bigDecimal
-            .divide(st.sumQ.bigDecimal, 12, java.math.RoundingMode.HALF_UP)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-          val volume = st.sumQ.bigDecimal
-            .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue()
-          Iterator((key._1, key._2, st.n, vwap, volume))
+      .groupBy(col("l_returnflag"),
+        unix_micros(date_trunc("month", col("l_shipdate"))).as("mo"))
+      .agg(sum(col("l_extendedprice").cast(exact)),
+        sum(col("l_quantity").cast(exact)), count(lit(1)))
+      .as[(String, Long, java.math.BigDecimal, java.math.BigDecimal, Long)]
+      .map { case (flag, mo, sumP, sumQ, n) =>
+        (flag, mo, n,
+          sumP.divide(sumQ, 12, HALF_UP).setScale(4, HALF_UP).doubleValue(),
+          sumQ.setScale(2, HALF_UP).doubleValue())
       }
   }
 
@@ -1570,30 +1542,26 @@ object Streams {
       : Dataset[(Long, Long, Long)] = {
     import spark.implicits._
     val weekUs = 604800000000L
-    events
-      .select(col("user_id"),
-        unix_micros(date_trunc("week", col("ts"))).as("wk"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RetState, (Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[RetState]) =>
-          val sorted = rows.map(_._2).toSeq.sorted
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long)]
-          var st = state.getOption.getOrElse(RetState(0L, false, Nil))
-          sorted.foreach { wk =>
-            if (!st.started) st = RetState(wk, true, Nil)
-            val offset = (wk - st.cohort) / weekUs
-            if (!st.seen.contains(offset)) {
-              st = st.copy(seen = st.seen :+ offset)
-              out += ((st.cohort, offset, user))
-            }
-          }
-          state.update(st)
-          out.iterator
+    // ts carries the event's week start, so the replay visits a user's
+    // weeks in order and the first one pins the cohort
+    replayByUser[TypedEvent, RetState, (Long, Long, Long)](
+      events.select(col("user_id"), date_trunc("week", col("ts")).as("ts"),
+          col("event_id"), col("event_type"))
+        .as[TypedEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long)]
+      var st = restored.getOrElse(RetState(0L, false, Nil))
+      sorted.foreach { e =>
+        val wk = micros(e.ts)
+        if (!st.started) st = RetState(wk, true, Nil)
+        val offset = (wk - st.cohort) / weekUs
+        if (!st.seen.contains(offset)) {
+          st = st.copy(seen = st.seen :+ offset)
+          out += ((st.cohort, offset, user))
+        }
       }
+      (Some(st), out.iterator)
+    }
   }
 
   /** Per-instrument state for s25: the current best bid and ask — two
@@ -1709,45 +1677,46 @@ object Streams {
   def tradeSignStream(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Int)] = {
     import spark.implicits._
-    events.filter(col("value") > 0)
-      .select(col("user_id"), col("ts"), col("value"), col("event_id"),
-        (col("event_type") === "purchase").as("is_trade"))
-      .as[(Long, java.sql.Timestamp, Double, Long, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[TradeSignState, (Long, Long, Int)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long,
-         evs: Iterator[(Long, java.sql.Timestamp, Double, Long, Boolean)],
-         state: GroupState[TradeSignState]) =>
-          // quotes sort before trades at the same instant: the batch
-          // as-of sees the post-instant book at the trade's microsecond
-          val sorted = evs.toSeq.sortBy(e => (micros(e._2), e._5, e._4))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-          var st = state.getOption.getOrElse(
-            TradeSignState(0.0, false, 0.0, false, 0.0, false, 0))
-          sorted.foreach { case (_, _, px, eventId, isTrade) =>
-            if (!isTrade) {
-              st = if (eventId % 2 == 0) st.copy(bb = px, hasBb = true)
-                   else st.copy(ba = px, hasBa = true)
-            } else {
-              val dir = if (st.hasPrev && px > st.prevPx) 1
-                        else if (st.hasPrev && px < st.prevPx) -1
-                        else 0
-              val eff = if (dir != 0) dir else st.lastDir
-              val sign =
-                if (st.hasBb && st.hasBa) {
-                  val mid = (st.bb + st.ba) / 2
-                  if (px > mid) 1 else if (px < mid) -1 else eff
-                } else eff
-              out += ((user, eventId, sign))
-              st = st.copy(prevPx = px, hasPrev = true, lastDir = eff)
-            }
+    replayByUser[AttrEvent, TradeSignState, (Long, Long, Int)](
+      events.filter(col("value") > 0)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+        .as[AttrEvent]) { (user, sorted, restored) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+      var st = restored.getOrElse(
+        TradeSignState(0.0, false, 0.0, false, 0.0, false, 0))
+      // quotes sort before trades at the same instant: the batch as-of
+      // sees the post-instant book at the trade's microsecond
+      sorted.sortBy(e => (micros(e.ts), e.event_type == "purchase"))
+        .foreach { e =>
+          val px = e.value
+          if (e.event_type != "purchase") {
+            st = if (e.event_id % 2 == 0) st.copy(bb = px, hasBb = true)
+                 else st.copy(ba = px, hasBa = true)
+          } else {
+            val dir = if (st.hasPrev && px > st.prevPx) 1
+                      else if (st.hasPrev && px < st.prevPx) -1
+                      else 0
+            val eff = if (dir != 0) dir else st.lastDir
+            val sign =
+              if (st.hasBb && st.hasBa) {
+                val mid = (st.bb + st.ba) / 2
+                if (px > mid) 1 else if (px < mid) -1 else eff
+              } else eff
+            out += ((user, e.event_id, sign))
+            st = st.copy(prevPx = px, hasPrev = true, lastDir = eff)
           }
-          state.update(st)
-          out.iterator
-      }
+        }
+      (Some(st), out.iterator)
+    }
   }
 
+  /** Stateful sessionization: 30-minute inactivity gap, implemented
+    * with flatMapGroupsWithState so the per-user state is just
+    * (start, last, n, sum) — O(users) state, not O(events).
+    * Sessions close either when a gap appears inside the feed or when
+    * the event-time watermark passes last+30min (timeout path).
+    */
   def sessionize(spark: SparkSession, events: DataFrame): Dataset[Session] = {
     import spark.implicits._
     val gapUs = 30L * 60 * 1000 * 1000
@@ -2395,8 +2364,8 @@ object Streams {
       .start()
   }
 
-  /** s43 — streaming conversion latency via flatMapGroupsWithState:
-    * the incremental twin of batch q180, and the live activation
+  /** s43 — streaming conversion latency on [[replayByUser]]: the
+    * incremental twin of batch q180, and the live activation
     * monitor (a growth team wants the conversion clock as it closes,
     * not in a nightly cohort job). State per user is (first-view µs
     * or −1, converted flag) — two fields, bounded forever. The
@@ -2416,42 +2385,35 @@ object Streams {
       : Dataset[(Long, java.sql.Timestamp, Double)] = {
     import spark.implicits._
     val dayUs = 86400L * 1000000L
-    events.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"))
-      .as[TypedEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Boolean),
-        (Long, java.sql.Timestamp, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[TypedEvent],
-         state: GroupState[(Long, Boolean)]) =>
-          // views sort BEFORE purchases at the same microsecond: batch
-          // q180 qualifies a purchase by timestamp only (t >= first
-          // view ts), so a purchase tied to the µs of the first view
-          // must see vUs already set regardless of event_id order
-          val sorted = evs.toSeq.sortBy(e =>
-            (micros(e.ts), if (e.event_type == "purchase") 1 else 0,
-              e.event_id))
-          var (vUs, done) = state.getOption.getOrElse((-1L, false))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, java.sql.Timestamp, Double)]
-          sorted.foreach { e =>
-            val t = micros(e.ts)
-            e.event_type match {
-              case "view" if vUs < 0L => vUs = t
-              case "purchase" if vUs >= 0L && !done && t >= vUs =>
-                done = true
-                val dayIdx = Math.floorDiv(vUs, dayUs)
-                // Monday-start week truncation: 1970-01-01 is Thursday
-                val weekStart =
-                  (dayIdx - Math.floorMod(dayIdx + 3L, 7L)) * dayUs
-                out += ((user, tsFromMicros(weekStart), (t - vUs) / 1e6))
-              case _ => ()
-            }
+    replayByUser[TypedEvent, (Long, Boolean),
+      (Long, java.sql.Timestamp, Double)](
+      events.select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+        .as[TypedEvent]) { (user, sorted, restored) =>
+      var (vUs, done) = restored.getOrElse((-1L, false))
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, java.sql.Timestamp, Double)]
+      // views sort BEFORE purchases at the same microsecond: batch q180
+      // qualifies a purchase by timestamp only (t >= first view ts), so
+      // a purchase tied to the µs of the first view must see vUs
+      // already set regardless of event_id order
+      sorted.sortBy(e => (micros(e.ts), e.event_type == "purchase"))
+        .foreach { e =>
+          val t = micros(e.ts)
+          e.event_type match {
+            case "view" if vUs < 0L => vUs = t
+            case "purchase" if vUs >= 0L && !done && t >= vUs =>
+              done = true
+              val dayIdx = Math.floorDiv(vUs, dayUs)
+              // Monday-start week truncation: 1970-01-01 is Thursday
+              val weekStart =
+                (dayIdx - Math.floorMod(dayIdx + 3L, 7L)) * dayUs
+              out += ((user, tsFromMicros(weekStart), (t - vUs) / 1e6))
+            case _ => ()
           }
-          state.update((vUs, done))
-          out.iterator
-      }
+        }
+      (Some((vUs, done)), out.iterator)
+    }
   }
 
   /** s55 — streaming AR(1) regression ledger via
@@ -2729,59 +2691,18 @@ object Streams {
   def digitCensusStream(events: DataFrame): DataFrame =
     graft.queries.Microstructure.digitCounts(events)
 
-  /** s58 — streaming Pareto front via flatMapGroupsWithState: the
-    * incremental twin of batch q210's skyline. State per source is the
-    * CURRENT front — (ttr-micro6, n_tokens, n_types, doc_id) tuples,
-    * bounded by the front's own size (≤ distinct token counts), the
-    * quintessential bounded-state streaming operator: each arriving
-    * document is dropped if dominated, otherwise inserted and the
-    * incumbents it dominates are evicted. Skyline membership is
-    * ORDER-INDEPENDENT, so any micro-batch slicing converges to the
-    * batch front; equal (ttr, tokens) pairs coexist (no strict
-    * dominance), matching batch semantics exactly. TTR lattices to
-    * 6dp integer micro-units — the same boundary lattice batch q210
-    * compares on. Emits the full front each batch (update mode —
-    * consumers read the latest emission per source).
+  /** s58 — streaming Pareto front: batch q210's
+    * [[graft.queries.TrainingData.skylineFront]] run as a streaming
+    * groupBy. State per source is its [[graft.functions.SkylineAgg]]
+    * front; membership is order-independent, so any micro-batch split
+    * converges to the batch front. Each batch emits every touched
+    * source's full front (update mode: read the latest per source).
     */
   def skylineStream(docs: DataFrame)
       : Dataset[(String, Long, Long, Long, Long)] = {
     import docs.sparkSession.implicits._
-    docs
-      .select(col("source"), col("doc_id"),
-        size(graft.functions.Text.tokens(col("text"))).cast("long")
-          .as("n_tokens"),
-        size(array_distinct(graft.functions.Text.tokens(col("text"))))
-          .cast("long").as("n_types"))
-      .filter(col("n_tokens") > 0L)
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[(Long, Long, Long, Long)],
-        (String, Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, docs: Iterator[(String, Long, Long, Long)],
-         state: GroupState[Seq[(Long, Long, Long, Long)]]) =>
-          // front entries: (ttr6 micro-units, n_tokens, n_types, doc_id)
-          var front = state.getOption.getOrElse(Seq.empty)
-          def dominates(a: (Long, Long, Long, Long),
-                        b: (Long, Long, Long, Long)): Boolean =
-            a._1 >= b._1 && a._2 <= b._2 && (a._1 > b._1 || a._2 < b._2)
-          docs.foreach { case (_, docId, nTok, nTyp) =>
-            // 12dp-then-6dp, replicating Num.decRound's cast(28,12)
-            // → round(6) two-step exactly (direct 6dp rounding can
-            // double-round differently on a ...5-at-12dp boundary)
-            val ttr6 = BigDecimal(nTyp.toDouble / nTok.toDouble)
-              .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)
-              .*(BigDecimal(1000000L)).toLongExact
-            val cand = (ttr6, nTok, nTyp, docId)
-            if (!front.exists(inc => dominates(inc, cand)))
-              front = front.filterNot(inc => dominates(cand, inc)) :+ cand
-          }
-          state.update(front)
-          front.iterator.map { case (t6, nTok, nTyp, id) =>
-            (source, id, nTok, nTyp, t6)
-          }
-      }
+    graft.queries.TrainingData.skylineFront(docs)
+      .as[(String, Long, Long, Long, Long)]
   }
 
   case class AttrEvent(user_id: Long, ts: java.sql.Timestamp,

@@ -32,7 +32,7 @@ object FixtureManifest {
       val df = spark.read.parquet(s"$dir/$t.parquet")
       val row = df.select(count(lit(1)).as("n"),
         // sum in DECIMAL so 64-bit wraparound can't alias two corpora
-        sum(xxhash64(struct(df.columns.map(col): _*))
+        sum(xxhash64(struct(df.columns.toSeq.map(col): _*))
           .cast("decimal(30,0)")).as("h")).collect()(0)
       val h = Option(row.getDecimal(1)).map(_.toPlainString).getOrElse("0")
       s"""  "$t": {"rows": ${row.getLong(0)}, "xxhash64_sum": "$h", """ +

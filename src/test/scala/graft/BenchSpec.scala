@@ -57,4 +57,15 @@ class BenchSpec extends SparkTestBase {
     val failed = (0 until last.get("failed").size).map(last.get("failed").get(_).asText)
     assert(failed.nonEmpty && failed == names.take(failed.size))
   }
+
+  test("SPARK_GRAFT_ONLY: an unknown name fails, naming it; known names select") {
+    val known = Seq("q1_pricing_summary", "q74_vwap", "x_topk_agg")
+    val e = intercept[IllegalArgumentException](
+      Bench.onlyNames(Some("q74_vwap, q74_vwapp"), known))
+    assert(e.getMessage.contains("q74_vwapp"), e.getMessage)
+    assert(!e.getMessage.contains("q74_vwap,"), e.getMessage)
+    assert(Bench.onlyNames(Some(" q74_vwap,,x_topk_agg "), known) ==
+      Some(Set("q74_vwap", "x_topk_agg")))
+    assert(Bench.onlyNames(None, known).isEmpty)
+  }
 }

@@ -60,7 +60,7 @@ class E2ESpec extends SparkTestBase {
       when($"doc_id" % 10 === 0, lit("xx")).otherwise($"lang"))
     val diff = operators.Reconcile.snapshotDiff(
         spark.read.schema(Tables.documentsSchema)
-          .parquet(docsDir).select(src.columns.map(col): _*),
+          .parquet(docsDir).select(src.columns.toSeq.map(col): _*),
         corrected, "doc_id", Seq("text", "lang", "source", "n_chars"))
       .groupBy($"diff_class").count()
       .as[(String, Long)].collect().toMap

@@ -1952,6 +1952,17 @@ class StreamingSpec extends SparkTestBase {
     assert(same(
       drain(Streams.transitionStream(spark, asc).toDF(), "order_trans_asc"),
       drain(Streams.transitionStream(spark, desc).toDF(), "order_trans_desc")))
+    // the folds that re-sort by a within-µs class (quote before trade,
+    // view before purchase) and the cohort pin
+    assert(same(
+      drain(Streams.tradeSignStream(spark, asc).toDF(), "order_sign_asc"),
+      drain(Streams.tradeSignStream(spark, desc).toDF(), "order_sign_desc")))
+    assert(same(
+      drain(Streams.conversionStream(spark, asc).toDF(), "order_conv_asc"),
+      drain(Streams.conversionStream(spark, desc).toDF(), "order_conv_desc")))
+    assert(same(
+      drain(Streams.retentionMarksStream(spark, asc).toDF(), "order_ret_asc"),
+      drain(Streams.retentionMarksStream(spark, desc).toDF(), "order_ret_desc")))
   }
 
   test("streaming OFI increments reduce to the batch q156 result") {
@@ -2994,5 +3005,32 @@ class StreamingSpec extends SparkTestBase {
       .select($"user_id", $"latency_s").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got == Set((1L, 0.0)), s"got $got")
+  }
+
+  test("tradeSignStream classifies a trade tied to a quote's microsecond against the post-quote book") {
+    // batch q153's as-of sees the book AFTER every quote at the trade's
+    // own µs; a quote sharing the trade's µs but with a LARGER event_id
+    // must still move the book before the trade is signed
+    val t0 = 1700000000000000L // µs, mid-2023 — inside the ts guard
+    val dir = java.nio.file.Files.createTempDirectory("graft_sign_tie").toString
+    Seq(
+      (1L, t0, 10L, "view", 10.0), // bid (even id)
+      (1L, t0, 11L, "view", 12.0), // ask (odd id): mid 11.0
+      (1L, t0 + 1000000L, 20L, "purchase", 10.5), // trade, id BEFORE quote
+      (1L, t0 + 1000000L, 21L, "view", 10.4)) // ask → mid 10.2
+      .toDF("user_id", "us", "event_id", "event_type", "value")
+      .select($"user_id", timestamp_micros($"us").as("ts"), $"event_id",
+        $"event_type", $"value")
+      .coalesce(1).write.parquet(s"$dir/batch_a")
+    val schema = spark.read.parquet(s"$dir/batch_a").schema
+    val stream = spark.readStream.schema(schema).parquet(s"$dir/batch_*")
+    val q = Streams.tradeSignStream(spark, stream)
+      .toDF("user_id", "event_id", "sign")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("sign_tie_out").start()
+    try { q.processAllAvailable() } finally { q.stop() }
+    val got = spark.table("sign_tie_out").as[(Long, Long, Int)].collect().toSet
+    // 10.5 > post-quote mid 10.2 → buy; the pre-quote mid 11.0 would sell
+    assert(got == Set((1L, 20L, 1)), s"got $got")
   }
 }
