@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
@@ -16,7 +17,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cold pass over every entry, then [[WarmPasses]] warm passes. Each
   * entry's record holds its cold seconds, warm minimum and warm spread
   * (max − min) plus the counters of its warm-minimum run: shuffle write
-  * bytes and records, executor CPU, jobs and stages. An entry that
+  * bytes and records, executor CPU, jobs, stages and Janino compiles
+  * (generated classes Spark's codegen cache did not hold). An entry that
   * throws holds its error instead, and no time. Frames are
   * materialized through the noop sink so every output column is
   * computed — `count()` would let Catalyst prune the projection and
@@ -79,7 +81,7 @@ object Bench {
         println(f"BENCH $n%-34s cold=${t.cold}%7.3f warm_min=${t.warmMin}%7.3f " +
           f"spread=${t.spread}%6.3f shuf=${c.shuffleBytes / 1e6}%9.1f MB " +
           f"recs=${c.shuffleRecords}%10d cpu=${c.cpuNs / 1e9}%7.1f s " +
-          f"jobs=${c.jobs}%4d stages=${c.stages}%4d")
+          f"jobs=${c.jobs}%4d stages=${c.stages}%4d compiles=${c.compiles}%4d")
       case Record(n, Left(m)) => println(s"BENCH $n FAILED: $m")
     }
     println(lastLine(records, sf, detail))
@@ -111,12 +113,14 @@ object Bench {
   final case class Entry(name: String, run: () => Unit,
                          prepare: () => Unit = () => ())
 
-  /** Counters of one run, summed over the stages of its job group. */
+  /** Counters of one run, summed over the stages of its job group;
+    * `compiles` is the run's change in Spark's codegen compile count. */
   final case class Counters(shuffleBytes: Long, shuffleRecords: Long,
-                            cpuNs: Long, jobs: Int, stages: Int) {
+                            cpuNs: Long, jobs: Int, stages: Int,
+                            compiles: Long = 0L) {
     def +(o: Counters): Counters = Counters(shuffleBytes + o.shuffleBytes,
       shuffleRecords + o.shuffleRecords, cpuNs + o.cpuNs, jobs + o.jobs,
-      stages + o.stages)
+      stages + o.stages, compiles + o.compiles)
   }
 
   final case class Timing(cold: Double, warmMin: Double, spread: Double,
@@ -376,6 +380,8 @@ object Bench {
     val counters = new GroupCounters
     val plans = planDir.map(new PlanDump(spark, _))
     val times = entries.map(_.name -> mutable.ArrayBuffer.empty[Double]).toMap
+    val compiles = mutable.Map.empty[String, Long]
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val errors = mutable.Map.empty[String, String]
     sc.addSparkListener(counters)
     plans.foreach(spark.listenerManager.register)
@@ -384,9 +390,10 @@ object Bench {
         try {
           if (pass == 0) { e.prepare(); plans.foreach(_.start()) }
           sc.setJobGroup(s"${e.name}#$pass", e.name)
-          val t0 = System.nanoTime()
+          val (t0, c0) = (System.nanoTime(), compiled)
           try e.run() finally sc.clearJobGroup()
           times(e.name) += (System.nanoTime() - t0) / 1e9
+          compiles(s"${e.name}#$pass") = compiled - c0
           if (pass == 0) plans.foreach(_.write(e.name))
         } catch { case NonFatal(ex) =>
           val msg = Option(ex.getMessage).getOrElse(ex.getClass.getName)
@@ -403,7 +410,8 @@ object Bench {
         val warm = times(e.name).tail
         val best = warm.indexOf(warm.min) + 1
         Timing(times(e.name).head, warm.min, warm.max - warm.min,
-          counters.of(s"${e.name}#$best"))
+          counters.of(s"${e.name}#$best")
+            .copy(compiles = compiles(s"${e.name}#$best")))
       })
     }
   }
@@ -430,7 +438,7 @@ object Bench {
   def detailJson(records: Seq[Record], sf: String, detail: String): String = {
     val entries = records.collect { case Record(n, Right(t)) =>
       val c = t.counters
-      jstr(n) + f""":{"cold_s":${t.cold}%.3f,"warm_min_s":${t.warmMin}%.3f,"spread_s":${t.spread}%.3f,"shuffle_write_bytes":${c.shuffleBytes},"shuffle_write_records":${c.shuffleRecords},"cpu_s":${c.cpuNs / 1e9}%.3f,"jobs":${c.jobs},"stages":${c.stages}}"""
+      jstr(n) + f""":{"cold_s":${t.cold}%.3f,"warm_min_s":${t.warmMin}%.3f,"spread_s":${t.spread}%.3f,"shuffle_write_bytes":${c.shuffleBytes},"shuffle_write_records":${c.shuffleRecords},"cpu_s":${c.cpuNs / 1e9}%.3f,"jobs":${c.jobs},"stages":${c.stages},"compiles":${c.compiles}}"""
     }
     val errors = records.collect { case Record(n, Left(m)) => jstr(n) + ":" + jstr(m) }
     s"""{${summary(records, sf, detail)},"entries":${entries.mkString("{", ",", "}")},"errors":${errors.mkString("{", ",", "}")}}"""

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
 
 /** Single-scan second-moment accumulation for embedding-space audits:
@@ -74,21 +74,20 @@ class GramAgg extends Aggregator[Array[Double], Array[Double], Array[Double]] {
 
   override def finish(b: Array[Double]): Array[Double] = b
 
-  override def bufferEncoder: Encoder[Array[Double]] =
-    ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Array[Double]] =
-    ExpressionEncoder[Array[Double]]()
+  override def bufferEncoder: Encoder[Array[Double]] = Gram.VecEncoder
+  override def outputEncoder: Encoder[Array[Double]] = Gram.VecEncoder
 }
 
 object Gram {
+  // Built once per JVM, as SkylineAgg's encoders are.
+  private[functions] val VecEncoder: Encoder[Array[Double]] =
+    ExpressionEncoder[Array[Double]]()
+  private val agg: UserDefinedFunction = udaf(new GramAgg, VecEncoder)
+
   /** `gram(vec)` — aggregate Column reducing an `array<double>` column
     * to the flat (width, n, Σx, upper-tri Σxxᵀ) moment buffer.
     */
-  def gram(vec: Column): Column = {
-    implicit val enc: Encoder[Array[Double]] =
-      ExpressionEncoder[Array[Double]]()
-    udaf(new GramAgg).apply(vec)
-  }
+  def gram(vec: Column): Column = agg(vec)
 
   /** Parse a reduced moment buffer into (n, mean, full covariance
     * matrix) with C_ij = S_ij/n − μ_i μ_j. Driver-side over the

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.{col, struct, udaf}
 
 /** Bounded-state top-k per group: a typed [[Aggregator]] whose buffer
@@ -60,19 +60,24 @@ class TopKAgg(k: Int)
 
   override def finish(b: Seq[(Double, Long)]): Seq[(Double, Long)] = b
 
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
-  override def outputEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
+  override def bufferEncoder: Encoder[Seq[(Double, Long)]] = TopK.ListEncoder
+  override def outputEncoder: Encoder[Seq[(Double, Long)]] = TopK.ListEncoder
 }
 
 object TopK {
+  // Built once per JVM (a udaf per k), as SkylineAgg's encoders are.
+  private[functions] val ListEncoder: Encoder[Seq[(Double, Long)]] =
+    ExpressionEncoder[Seq[(Double, Long)]]()
+  private val udafs =
+    new java.util.concurrent.ConcurrentHashMap[Int, UserDefinedFunction]()
+
   /** `topK(metric, id, k)` — aggregate Column producing the group's
     * top-k `array<struct<metric, id>>`, best-first. Explode with
     * posexplode for (rank, id, metric) rows.
     */
   def topK(metric: Column, id: Column, k: Int): Column =
     // a product-encoded UDAF takes its tuple fields as SEPARATE args
-    udaf(new TopKAgg(k), Encoders.product[(Double, Long)])
+    udafs.computeIfAbsent(k,
+        k => udaf(new TopKAgg(k), Encoders.product[(Double, Long)]))
       .apply(metric.cast("double"), id.cast("long"))
 }

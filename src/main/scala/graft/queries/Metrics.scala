@@ -306,19 +306,21 @@ object Metrics {
     * look-ahead leakage through boundary-straddling windows — the
     * standard financial-ML split discipline).
     *
-    * The day spine is a distinct-days aggregate (map-side combined,
-    * hundreds of rows at any scale) ranked on the driver-sized frame and
-    * broadcast back — the fact table is never globally sorted, and the
-    * split assignment rides the scan.
+    * Plan: ONE map-side-combined aggregate per day over the events scan
+    * (event count, distinct-user set) is the day spine; a window over
+    * those day rows (hundreds at any scale) gives rank and day count,
+    * and the split rollup sums counts and unions user sets. The fact
+    * table is scanned once and never sorted.
     */
   def q113TimeSplit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Tables.events(spark, dir)
-      .select($"event_id", $"user_id", date_trunc("day", $"ts").as("d"))
-    val days = ev.select($"d").distinct()
-    val nDays = days.agg(count(lit(1)).as("n_days"))
-    val ranked = days.crossJoin(broadcast(nDays))
-      .withColumn("rk", row_number().over(Window.orderBy($"d")))
+    val w = Window.orderBy($"d")
+    Tables.events(spark, dir)
+      .groupBy(date_trunc("day", $"ts").as("d"))
+      .agg(count(lit(1)).as("n"), collect_set($"user_id").as("users"))
+      .withColumn("rk", row_number().over(w))
+      .withColumn("n_days", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .withColumn("n70", expr("(n_days * 70) div 100"))
       .withColumn("n85", expr("(n_days * 85) div 100"))
       .withColumn("split",
@@ -327,13 +329,12 @@ object Metrics {
           .when($"rk" <= $"n85", "val")
           .when($"rk" === $"n85" + 1, "embargo")
           .otherwise("test"))
-      .select($"d", $"split")
-    ev.join(broadcast(ranked), "d")
       .filter($"split" =!= "embargo")
       .groupBy($"split")
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct($"user_id").as("n_users"),
-        countDistinct($"d").as("n_days"),
+      .agg(sum($"n").as("n_events"),
+        size(array_distinct(flatten(collect_list($"users"))))
+          .cast("long").as("n_users"),
+        count(lit(1)).as("n_days"),
         min($"d").as("first_day"), max($"d").as("last_day"))
   }
 

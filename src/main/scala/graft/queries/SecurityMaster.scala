@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{AsOf, Bitemporal}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,31 +27,31 @@ object SecurityMaster {
 
   /** q135_symbology — point-in-time identifier cross-reference: each
     * user's signup stream mints successive symbols (SCD2-style epochs:
-    * symbol i is in effect from its signup until the next), trades
-    * resolve the symbol in effect AT trade time via the as-of join,
-    * and the rollup reports per-symbol trade totals. Same-instant
-    * signups dedupe to the latest record first (q29 shape) so both
-    * engines see a unique epoch per (user, ts). One keyed window for
-    * the dim + the single-exchange as-of plan; the rollup groups on
-    * the same user key, so the fact table shuffles once end to end.
+    * symbol i is in effect from the user's i-th distinct signup
+    * instant until the next), each trade resolves the symbol in effect
+    * AT trade time, and the rollup reports per-symbol trade totals.
+    * Plan: ONE window pass per user ordered by (ts, class, event_id),
+    * signups before trades at one µs (s27's order): a signup opens an
+    * epoch unless the row before it is a signup at the same instant
+    * (same-instant signups are one epoch, the oracle's q29 dedup), so
+    * the running count of openings IS a trade's symbol sequence (0 =
+    * none yet, dropped). The rollup rides the window's user
+    * partitioning: one exchange.
     */
   def q135Symbology(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Tables.events(spark, dir)
-    val wDedup = Window.partitionBy($"user_id", $"ts").orderBy($"event_id".desc)
-    val wSeq = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val xref = ev.filter($"event_type" === "signup")
-      .select($"user_id", $"ts", $"event_id")
-      .withColumn("dup", row_number().over(wDedup)).filter($"dup" === 1)
-      .withColumn("seq", row_number().over(wSeq))
-      .select($"user_id", $"ts".as("eff_from"),
+    val w = Window.partitionBy($"user_id").orderBy($"ts", $"trade", $"event_id")
+    Tables.events(spark, dir)
+      .filter($"event_type".isin("signup", "purchase"))
+      .select($"user_id", $"ts", $"event_id", $"value",
+        ($"event_type" === "purchase").as("trade"))
+      .withColumn("opens", when(!$"trade" &&
+        !(lag(when(!$"trade", $"ts"), 1).over(w) <=> $"ts"), 1).otherwise(0))
+      .withColumn("seq", sum($"opens").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter($"trade" && $"seq" > 0)
+      .groupBy($"user_id",
         concat(lit("SYM-"), $"user_id", lit("-"), $"seq").as("symbol"))
-    val trades = ev.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value")
-    AsOf.join(trades, xref, key = "user_id",
-        leftTs = "ts", rightTs = "eff_from",
-        rightVals = Seq("symbol" -> "symbol"))
-      .groupBy($"user_id", $"symbol")
       // money lattice (q5's sf1.0 lesson): per-symbol totals grow with
       // trade volume, drift with them
       .agg(count(lit(1)).as("n_trades"),
@@ -598,36 +598,47 @@ object SecurityMaster {
       |  WHERE a.user_id = b.user_id AND a.ts >= b.bar_end
       |  ORDER BY a.ts ASC LIMIT 1) a ON true""".stripMargin
 
-  /** Exchange reference dim for the timezone-aware calendar (q144):
+  /** Exchange reference rows for the timezone-aware calendar (q144):
     * securities map to exchanges by id hash; each exchange carries its
     * IANA timezone and a deterministic holiday rule (the day-of-month
-    * its synthetic holiday list marks). Three rows — the broadcast /
-    * local-relation end of every calendar join.
-    */
+    * its synthetic holiday list marks). */
+  private val exchanges = Seq(
+    (0, "XNYS", "America/New_York", 1),
+    (1, "XLON", "Europe/London", 15),
+    (2, "XTKS", "Asia/Tokyo", 8))
+
+  /** The exchange rows as a dim frame (ex_id, exch, tz, hol_dom). */
   def exchangeDim(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq(
-      (0, "XNYS", "America/New_York", 1),
-      (1, "XLON", "Europe/London", 15),
-      (2, "XTKS", "Asia/Tokyo", 8)
-    ).toDF("ex_id", "exch", "tz", "hol_dom")
+    exchanges.toDF("ex_id", "exch", "tz", "hol_dom")
   }
 
-  /** q144_exchange_calendar — the q137 completeness audit keyed to
-    * EXCHANGE-LOCAL time: each security trades on an exchange whose
-    * sessions are local-calendar days, so "weekday" and "holiday" are
-    * decided on the wall clock of the exchange's IANA timezone, not
-    * UTC (a Friday 23:00 UTC trade is Saturday in Tokyo — off
-    * session). The machinery: a 3-row exchange dim (tz + holiday
-    * rule), from_utc_timestamp per event against the dim's tz column,
-    * an explicit per-exchange holiday LIST built over each exchange's
-    * own local-day span (broadcast table, anti-joined — a real
-    * holiday file drops in without touching the plan), and the same
-    * spine/present/missing audit as q137 per exchange. The fact scan
-    * shuffles once (the per-exchange aggregate); every calendar frame
-    * is model-sized and broadcast. Oracle: DuckDB
-    * timezone(tz, timezone('UTC', ts)) — the AT TIME ZONE two-step.
-    */
+  /** One row per exchange from ONE events scan: events counted per
+    * (exchange, local day), folded to the total, the per-day counts
+    * (`n_by_day`) and the local-day span (`days`). Exchange attributes
+    * are literal lookups on ex_id: no dim joins the fact side. */
+  private def q144Exchanges(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    def attr[T: scala.reflect.runtime.universe.TypeTag](
+        f: ((Int, String, String, Int)) => T): Column =
+      typedLit(exchanges.map(e => e._1 -> f(e)).toMap).getItem($"ex_id")
+    Tables.events(spark, dir)
+      .select(pmod($"user_id", lit(3)).cast("int").as("ex_id"), $"ts")
+      .groupBy($"ex_id",
+        date_trunc("day", from_utc_timestamp($"ts", attr(_._3))).as("local_day"))
+      .agg(count(lit(1)).as("n"))
+      .groupBy($"ex_id")
+      .agg(min($"local_day").as("mn"), max($"local_day").as("mx"),
+        sum($"n").as("n_events"),
+        map_from_entries(collect_list(struct($"local_day", $"n"))).as("n_by_day"))
+      .select(attr(_._2).as("exch"), attr(_._4).as("hol_dom"), $"n_events",
+        $"n_by_day", sequence($"mn", $"mx", expr("interval 1 day")).as("days"))
+  }
+
+  /** The rule-derived holiday days of each exchange's span. */
+  private def ruleHolidays(days: Column, holDom: Column): Column =
+    filter(days, d => dayofmonth(d) === holDom)
+
   /** The synthetic rule-derived holiday list as a REAL file would
     * carry it — one (exch, local_day) row per exchange holiday. This
     * is exactly the frame [[q144ExchangeCalendar]]'s `holidayFile`
@@ -637,71 +648,48 @@ object SecurityMaster {
     */
   def q144HolidayList(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ex = exchangeDim(spark)
-    q144SpanDays(spark, dir)
-      .join(broadcast(ex.select($"ex_id", $"exch", $"hol_dom")), "ex_id")
-      .filter(dayofmonth($"local_day") === $"hol_dom")
-      .select($"exch", $"local_day")
+    q144Exchanges(spark, dir)
+      .select($"exch", explode(ruleHolidays($"days", $"hol_dom")).as("local_day"))
   }
 
-  private def q144Tagged(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .select($"user_id", $"ts")
-      .withColumn("ex_id", pmod($"user_id", lit(3)).cast("int"))
-      .join(broadcast(exchangeDim(spark)), "ex_id")
-      .withColumn("local_day",
-        date_trunc("day", from_utc_timestamp($"ts", $"tz")))
-  }
-
-  // per-exchange local-day span -> candidate days (tiny: 3 x span)
-  private def q144SpanDays(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    q144Tagged(spark, dir).groupBy($"ex_id")
-      .agg(min($"local_day").as("mn"), max($"local_day").as("mx"))
-      .select($"ex_id",
-        explode(sequence($"mn", $"mx", expr("interval 1 day"))).as("local_day"))
-  }
-
-  /** @param holidayFile an externally loaded (exch, local_day) holiday
+  /** q144_exchange_calendar — the q137 completeness audit keyed to
+    * EXCHANGE-LOCAL time: each security trades on an exchange whose
+    * sessions are local-calendar days, so "weekday" and "holiday" are
+    * decided on the wall clock of the exchange's IANA timezone, not
+    * UTC (a Friday 23:00 UTC trade is Saturday in Tokyo — off
+    * session). Plan: [[q144Exchanges]]'s one scan and per-(exchange,
+    * day) counts; per exchange row, the holiday LIST (the rule's days or
+    * a holiday file's, one array column either way), the sessions (span
+    * weekdays minus holidays) and n_on / n_present / n_expected as
+    * session lookups in the per-day counts. Oracle: DuckDB
+    * timezone(tz, timezone('UTC', ts)) — the AT TIME ZONE two-step.
+    *
+    * @param holidayFile an externally loaded (exch, local_day) holiday
     *                    calendar (e.g. [[graft.sources.Ingest.holidayCsv]]);
     *                    None derives the synthetic day-of-month rule.
-    *                    Either way the list is a model-sized broadcast
-    *                    anti-join — the plan does not change.
     */
   def q144ExchangeCalendar(spark: SparkSession, dir: String,
                            holidayFile: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val ex = exchangeDim(spark)
-    val tagged = q144Tagged(spark, dir)
-    val spanDays = q144SpanDays(spark, dir)
-    // the holiday LIST: one row per (exchange, holiday local day)
-    val holidays = holidayFile match {
-      case Some(h) => h
-        .join(broadcast(ex.select($"ex_id", $"exch")), "exch")
-        .select($"ex_id", $"local_day")
-      case None => spanDays
-        .join(broadcast(ex.select($"ex_id", $"hol_dom")), "ex_id")
-        .filter(dayofmonth($"local_day") === $"hol_dom")
-        .select($"ex_id", $"local_day")
+    val ex = q144Exchanges(spark, dir)
+    val withHolidays = holidayFile match {
+      case Some(h) => ex.join(
+        broadcast(h.groupBy($"exch").agg(collect_set($"local_day").as("hol"))),
+        Seq("exch"), "left")
+      case None => ex.withColumn("hol", ruleHolidays($"days", $"hol_dom"))
     }
-    val sessions = spanDays
-      .filter(dayofweek($"local_day").between(2, 6))
-      .join(broadcast(holidays), Seq("ex_id", "local_day"), "left_anti")
-    // classify every event against the session set of ITS exchange
-    val classified = tagged
-      .join(broadcast(sessions.withColumn("on", lit(1))),
-        Seq("ex_id", "local_day"), "left")
-      .withColumn("on_session", coalesce($"on", lit(0)))
-    val evAgg = classified.groupBy($"ex_id", $"exch")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"on_session").as("n_on"),
-        (count(lit(1)) - sum($"on_session")).as("n_off"),
-        countDistinct(when($"on_session" === 1, $"local_day")).as("n_present"))
-    val nExp = sessions.groupBy($"ex_id").agg(count(lit(1)).as("n_expected"))
-    evAgg.join(broadcast(nExp), "ex_id")
-      .select($"exch", $"n_events", $"n_on", $"n_off", $"n_expected",
-        $"n_present", ($"n_expected" - $"n_present").as("n_missing"))
+    // per-day counts of the sessions that saw events
+    val present = filter(
+      transform($"sess", d => $"n_by_day"(d)), n => n.isNotNull)
+    withHolidays
+      .withColumn("sess", filter($"days", d => dayofweek(d).between(2, 6) &&
+        !coalesce(array_contains($"hol", d), lit(false))))
+      .select($"exch", $"n_events",
+        aggregate(present, lit(0L), _ + _).as("n_on"),
+        size($"sess").cast("long").as("n_expected"),
+        size(present).cast("long").as("n_present"))
+      .select($"exch", $"n_events", $"n_on", ($"n_events" - $"n_on").as("n_off"),
+        $"n_expected", $"n_present", ($"n_expected" - $"n_present").as("n_missing"))
   }
 
   val q144Sql: String =
@@ -1153,61 +1141,47 @@ object SecurityMaster {
     * price change vs the previous trade; a zero-tick carries the last
     * non-zero direction) when the midpoint is absent or hit exactly —
     * the classic Lee–Ready composition of quote-rule + tick-rule.
+    * Plan: ONE window pass per user ordered by (ts, class, event_id),
+    * quotes before trades at one µs (s27's order), so a trade row's
+    * running last bid/ask is the book as of its instant; the tick rule
+    * runs on frames of the same order (one sort, one exchange).
     */
   def q153TradeSigns(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Tables.events(spark, dir).filter($"value" > 0)
-    // BBO state series from the quote tape (q151 recurrence), deduped
-    // to the post-instant state per (user, ts) so the as-of right side
-    // meets the distinct-(key, rts) contract
-    val wQ = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDedup = Window.partitionBy($"user_id", $"ts")
-      .orderBy($"event_id".desc)
-    val bbo = ev.filter($"event_type" =!= "purchase")
-      .select($"user_id", $"ts", $"event_id",
-        when($"event_id" % 2 === 0, $"value").as("bid_px"),
-        when($"event_id" % 2 =!= 0, $"value").as("ask_px"))
-      .withColumn("bb", last($"bid_px", ignoreNulls = true).over(wQ))
-      .withColumn("ba", last($"ask_px", ignoreNulls = true).over(wQ))
-      .withColumn("__rn", row_number().over(wDedup))
-      .filter($"__rn" === 1)
-      .select($"user_id", $"ts", $"bb", $"ba")
-    val trades = ev.filter($"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"ts", $"value".as("px"))
-    val withMid = AsOf.join(trades, bbo, key = "user_id",
-        leftTs = "ts", rightTs = "ts",
-        rightVals = Seq("bb" -> "bb", "ba" -> "ba"), inner = false)
-      .withColumn("mid",
-        when($"bb".isNotNull && $"ba".isNotNull, ($"bb" + $"ba") / 2))
-    // tick rule: direction of the price change vs the previous trade,
-    // zero-ticks carrying the last non-zero direction forward
-    val wT = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLag = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    withMid
-      .withColumn("__prev", lag($"px", 1).over(wLag))
+    val w = Window.partitionBy($"user_id").orderBy($"ts", $"trade", $"event_id")
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val quote = !$"trade"
+    Tables.events(spark, dir)
+      .filter($"value" > 0 && $"event_type".isNotNull)
+      .select($"event_id", $"user_id", $"ts", $"value",
+        ($"event_type" === "purchase").as("trade"))
+      .withColumn("px", when($"trade", $"value"))
+      .withColumn("bb", last(when(quote && $"event_id" % 2 === 0, $"value"),
+        ignoreNulls = true).over(upTo))
+      .withColumn("ba", last(when(quote && $"event_id" % 2 =!= 0, $"value"),
+        ignoreNulls = true).over(upTo))
+      .withColumn("__prev", last($"px", ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("__dir",
         when($"px" > $"__prev", 1).when($"px" < $"__prev", -1))
-      .withColumn("__eff", last($"__dir", ignoreNulls = true).over(wT))
-      .withColumn("sign",
+      .withColumn("__eff", last($"__dir", ignoreNulls = true).over(upTo))
+      .filter($"trade")
+      .withColumn("mid",
+        when($"bb".isNotNull && $"ba".isNotNull, ($"bb" + $"ba") / 2))
+      .select($"event_id", $"user_id", $"ts", $"px", $"mid",
         when($"mid".isNotNull && $"px" > $"mid", 1)
           .when($"mid".isNotNull && $"px" < $"mid", -1)
-          .otherwise(coalesce($"__eff", lit(0))))
-      .select($"event_id", $"user_id", $"ts", $"px", $"mid", $"sign")
+          .otherwise(coalesce($"__eff", lit(0))).as("sign"))
   }
 
   /** q153_trade_sign — Lee–Ready buyer/seller-initiated classification
     * rolled up per instrument: buy/sell/unclassified counts and the
     * signed notional (order-flow imbalance), the microstructure
     * aggregate a consolidated tape publishes from exactly this
-    * composition. Plan: one keyed window pass for the BBO recurrence
-    * (q151), ONE keyed union-window as-of (user_id is the
-    * high-cardinality key — precisely where [[AsOf.join]]'s shape is
-    * right and the broadcast-interval as-of would be wrong), two more
-    * frames on the trade sequence for the tick rule, then a hash
-    * rollup. Signed notional is latticed to DECIMAL(28,12) per trade
-    * before summing, so the imbalance is order-independent exact.
+    * composition. The rollup rides [[q153TradeSigns]]'s user
+    * partitioning (one exchange). Signed notional is latticed to
+    * DECIMAL(28,12) per trade before summing, so the imbalance is
+    * order-independent exact.
     */
   def q153TradeSign(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

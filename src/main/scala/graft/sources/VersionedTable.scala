@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The ONE transactional table surface behind every versioned-snapshot
   * sink (the s5 PIT upsert, s16 SCD2 dim, s36/s37 materialized views
@@ -46,6 +47,16 @@ class VersionedTable(ss: SparkSession, tableDir: String,
   private val dirPath = new org.apache.hadoop.fs.Path(tableDir)
   private def fs = dirPath.getFileSystem(hconf)
 
+  /** The written schema of each retained version this instance
+    * committed: reads pass it and skip parquet's schema-inference job
+    * (a reopened table infers it). */
+  @volatile private var schemas = Map.empty[Long, StructType]
+
+  private def read(v: Long): DataFrame = {
+    val path = s"$tableDir/v$v"
+    schemas.get(v).fold(ss.read.parquet(path))(ss.read.schema(_).parquet(path))
+  }
+
   /** The live version id, or None before the first commit. */
   def currentVersion: Option[Long] = {
     val ptr = new org.apache.hadoop.fs.Path(s"$tableDir/CURRENT")
@@ -60,7 +71,7 @@ class VersionedTable(ss: SparkSession, tableDir: String,
 
   /** The live snapshot, or None before the first commit. */
   def current: Option[DataFrame] =
-    currentVersion.map(v => ss.read.parquet(s"$tableDir/v$v"))
+    currentVersion.map(read)
 
   /** Retained version ids, ascending — the servable time-travel set. */
   def versions: Seq[Long] =
@@ -78,7 +89,7 @@ class VersionedTable(ss: SparkSession, tableDir: String,
   def snapshotAt(batchId: Long): Option[DataFrame] =
     currentVersion.flatMap { live =>
       versions.filter(v => v <= batchId && v <= live).lastOption
-        .map(v => ss.read.parquet(s"$tableDir/v$v"))
+        .map(read)
     }
 
   /** Publish the result of `merge(currentSnapshot)` as `v<batchId>`
@@ -90,8 +101,8 @@ class VersionedTable(ss: SparkSession, tableDir: String,
       : Boolean = {
     if (currentVersion.exists(_ >= batchId)) return false
     val version = s"v$batchId"
-    merge(current).write.mode("overwrite")
-      .parquet(s"$tableDir/$version")
+    val written = merge(current)
+    written.write.mode("overwrite").parquet(s"$tableDir/$version")
     val tmp = new org.apache.hadoop.fs.Path(s"$tableDir/CURRENT.tmp")
     val out = fs.create(tmp, true)
     try out.write(version.getBytes("UTF-8")) finally out.close()
@@ -115,6 +126,8 @@ class VersionedTable(ss: SparkSession, tableDir: String,
           throw new java.io.IOException(s"failed to prune stale version $p")
       }
     }
+    schemas = schemas.filter { case (v, _) => keep(v) } +
+      (batchId -> written.schema)
     true
   }
 

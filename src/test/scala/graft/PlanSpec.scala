@@ -24,6 +24,18 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("q144 and q113 read events once; q153 and q135 run on one exchange") {
+    for (q <- Seq("q144_exchange_calendar", "q113_time_split")) {
+      val p = plan(q)
+      val scans = p.split("\n").count(l => l.contains("FileScan") && l.contains("events.parquet"))
+      assert(scans == 1, s"$q: expected 1 events FileScan, got $scans\n$p")
+    }
+    for (q <- Seq("q153_trade_sign", "q135_symbology")) {
+      val p = plan(q)
+      assert(count(p, "Exchange") == 1, s"$q: expected 1 exchange\n$p")
+    }
+  }
+
   test("selective filters reach the parquet scan") {
     val p = plan("q2_filter_pushdown")
     assert(p.contains("PushedFilters: [IsNotNull"), p)

@@ -42,6 +42,46 @@ class SecurityMasterSpec extends SparkTestBase {
       got.toString)
   }
 
+  test("q135 same-instant signups mint one epoch; a trade at that instant sees it, one before the first signup is dropped") {
+    // signups 5 and 6 share day 1 (one epoch), signup 7 opens epoch 2;
+    // trade 1 prints at day 1's instant with a LOWER event_id than
+    // the signups: signups sort first at one µs, so it resolves SYM-1-1
+    val rows = Seq(
+      (5L, d(day0 + 1), 1L, "signup", 0.0),
+      (6L, d(day0 + 1), 1L, "signup", 0.0),
+      (7L, d(day0 + 3), 1L, "signup", 0.0),
+      (2L, d(day0), 1L, "purchase", 5.0),
+      (1L, d(day0 + 1), 1L, "purchase", 10.0),
+      (3L, d(day0 + 2), 1L, "purchase", 20.0),
+      (4L, d(day0 + 4), 1L, "purchase", 40.0))
+    val got = SparkEntry.queries("q135_symbology")(spark, writeEvents(rows))
+      .as[(Long, String, Long, Double)].collect()
+      .map(r => r._2 -> ((r._3, r._4))).toMap
+    assert(got == Map("SYM-1-1" -> ((2L, 30.0)), "SYM-1-2" -> ((1L, 40.0))),
+      got.toString)
+  }
+
+  test("q153 signs: a quote at the trade's µs counts, a one-sided book falls back to the tick test, a zero tick carries") {
+    // even event_id quotes are bids, odd are asks (q151 convention)
+    val rows = Seq(
+      (2L, d(day0, 1), 1L, "view", 10.0),      // bid 10
+      (1L, d(day0, 2), 1L, "purchase", 9.0),   // bid-only book, no prior trade: 0
+      (4L, d(day0, 3), 1L, "purchase", 9.5),   // bid-only book, uptick: +1
+      (6L, d(day0, 4), 1L, "purchase", 9.5),   // zero tick carries +1
+      (9L, d(day0, 5), 1L, "click", 11.0),     // ask 11 at the trade's µs
+      (8L, d(day0, 5), 1L, "purchase", 10.2))  // mid 10.5 > px: -1 (tick says +1)
+    val dir = writeEvents(rows)
+    val got = queries.SecurityMaster.q153TradeSigns(spark, dir)
+      .select($"event_id", $"mid", $"sign")
+      .as[(Long, Option[Double], Int)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got == Map(1L -> ((None, 0)), 4L -> ((None, 1)), 6L -> ((None, 1)),
+      8L -> ((Some(10.5), -1))), got.toString)
+    val roll = SparkEntry.queries("q153_trade_sign")(spark, dir)
+      .as[(Long, Long, Long, Long, Long, Double)].collect()
+    assert(roll.toSeq == Seq((1L, 4L, 2L, 1L, 1L, 8.8)), roll.toSeq)
+  }
+
   test("q136 adjusts closes before an action by its factor and leaves later bars raw") {
     // bars on day 1 and day 3; a 2x action (value 1000 -> factor 2)
     // lands midday on day 2: day 1's close doubles, day 3's does not

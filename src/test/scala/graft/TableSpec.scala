@@ -96,6 +96,45 @@ class TableSpec extends SparkTestBase {
       Set(1L, 2L))
   }
 
+  test("current after commit reads with the written schema: no Spark job, the inferred schema, and reopened reads still work") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions._
+    val dir = tmp()
+    val t = new VersionedTable(spark, dir, keepVersions = 3)
+    // non-nullable primitives and nested types: the read schema must be
+    // the all-nullable one the parquet reader infers
+    val v0 = Seq((1L, "a", Seq(1.0, 2.0), Map("k" -> 1)), (2L, "b", Nil, Map.empty[String, Int]))
+      .toDF("id", "tag", "xs", "m")
+      .withColumn("s", struct($"id".as("i"), $"xs".as("ys")))
+    assert(t.merge(0L, v0, Seq("id")))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val cur = try t.current.get finally {
+      org.apache.spark.sql.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"current started ${jobs.get} job(s)")
+    val inferred = spark.read.parquet(s"$dir/v0").schema
+    assert(cur.schema == inferred, s"${cur.schema} vs $inferred")
+    val rows = cur.collect().toSet
+    assert(rows.map(_.getLong(0)) == Set(1L, 2L))
+    // a second version merges over the schema-carrying read
+    assert(t.merge(1L, v0.filter($"id" === 2L).withColumn("tag", lit("B")), Seq("id")))
+    assert(t.current.get.select($"id", $"tag").as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "B")))
+    assert(t.snapshotAt(0L).get.collect().toSet == rows)
+    // a reopened table knows no schema and infers it; its reads agree
+    val reopened = new VersionedTable(spark, dir, keepVersions = 3)
+    assert(reopened.snapshotAt(0L).get.collect().toSet == rows)
+    assert(reopened.current.get.schema == t.current.get.schema)
+    assert(reopened.current.get.collect().toSet == t.current.get.collect().toSet)
+  }
+
   test("merge rejects keys missing from the delta") {
     val t = new VersionedTable(spark, tmp())
     val e = intercept[IllegalArgumentException] {

@@ -7,7 +7,8 @@ For every entry in both records it prints:
   - the warm-minimum wall delta, marked `noise` when it lies inside the
     larger of the two entries' warm spreads, else `faster` / `slower`;
   - the exact delta of every counter (shuffle write bytes and records,
-    jobs, stages); executor CPU is a time, so it is shown, not judged.
+    jobs, stages, and Janino compiles where both records carry them);
+    executor CPU is a time, so it is shown, not judged.
 By default only entries with a counter change or a wall change beyond
 noise are listed; --all lists every entry. A summary follows: verdict
 counts, the warm totals against the spread totals, the summed counter
@@ -23,6 +24,9 @@ import json
 import sys
 
 COUNTERS = ("shuffle_write_bytes", "shuffle_write_records", "jobs", "stages")
+# Counted only where both records have it: records written before Bench
+# counted codegen compiles lack the field.
+OPTIONAL = ("compiles",)
 
 
 def load(path):
@@ -54,7 +58,7 @@ def main(argv):
     show_all = "--all" in argv
     (tot_a, a, err_a), (tot_b, b, err_b) = load(args[0]), load(args[1])
     verdicts = {"faster": 0, "slower": 0, "noise": 0}
-    sums = dict.fromkeys(COUNTERS, 0)
+    sums = dict.fromkeys(COUNTERS + OPTIONAL, 0)
     counted = 0
     for name in sorted(set(a) & set(b)):
         x, y = a[name], b[name]
@@ -65,7 +69,7 @@ def main(argv):
         deltas = []
         if all(c in x and c in y for c in COUNTERS):
             counted += 1
-            for c in COUNTERS:
+            for c in COUNTERS + tuple(o for o in OPTIONAL if o in x and o in y):
                 sums[c] += y[c] - x[c]
                 if y[c] != x[c]:
                     deltas.append(f"{c} {y[c] - x[c]:+d} ({x[c]} -> {y[c]})")
@@ -89,7 +93,7 @@ def main(argv):
                   f"{spreads[0]} -> {spreads[1]}")
     if counted:
         print(f"counter deltas summed over {counted} entries: "
-              + ", ".join(f"{c} {sums[c]:+d}" for c in COUNTERS))
+              + ", ".join(f"{c} {sums[c]:+d}" for c in COUNTERS + OPTIONAL))
     for label, names in (("only in base", set(a) - set(b) - set(err_b)),
                          ("only in change", set(b) - set(a) - set(err_a)),
                          ("failed in base", set(err_a)),
