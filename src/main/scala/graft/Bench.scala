@@ -236,8 +236,6 @@ object Bench {
         broadcastState = Some(false))),
       frame("x_namematch_segment")(EditDistance.pairs(part, "p_partkey",
         "p_name", "p_brand", maxDist = 3, segment = Some(true))),
-      frame("x_fx_window")(graft.queries.SecurityMaster.q148FxNormalize(
-        spark, sfDir, dimBroadcast = Some(false))),
       frame("x_topk_agg")(liTop.groupBy(col("l_partkey"))
         .agg(graft.functions.TopK.topK(col("l_extendedprice"),
           col("lid"), 3).as("top"))),
@@ -245,16 +243,6 @@ object Bench {
           org.apache.spark.sql.expressions.Window.partitionBy(col("l_partkey"))
             .orderBy(col("l_extendedprice").desc, col("lid"))))
         .filter(col("rnk") <= 3)),
-      // q21's exact task through the custom merge exec vs its
-      // union+window plan (the q21 number) — the pair pricing the
-      // option-(c) operator every round
-      frame("x_asof_exec")(AsOf.execJoin(
-        ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        ev.filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts"), col("value")),
-        key = "user_id", leftTs = "ts", rightTs = "ts",
-        rightVals = Seq("ts" -> "ref_ts", "value" -> "ref_value"))),
       // the sub-quadratic name-linkage tier vs q189's exact blocked
       // plan (the ×10 scale sweep showed the blocked tier's pair
       // volume is quadratic in catalog size by contract)

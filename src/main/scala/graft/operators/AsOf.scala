@@ -32,6 +32,17 @@ import org.apache.spark.sql.functions._
   * here). Prefer deduplicating to point-in-time-latest first (q29
   * shape) if the feed carries same-instant revisions with a meaningful
   * winner, and always when right values are non-orderable (maps).
+  *
+  * One plan per shape: [[join]] for keyed as-of, [[broadcastJoin]] for
+  * a tiny keyless dim. Two other plans were built, priced every round
+  * and deleted because no workload needed them (warm seconds):
+  *  - a custom streaming-merge exec (logical node + strategy + exec,
+  *    each side sorted in its own exchange) on q21's task: 0.209 vs
+  *    q21's 0.285 at sf0.1 on 4 cores, but 0.541 vs 0.528 at sf1
+  *    (r15) — its small-input lead did not hold with data;
+  *  - a keyed broadcast-interval variant for low-cardinality keys
+  *    (q148's 4 currencies): 0.687 vs 0.507 for the keyed window plan
+  *    at sf0.1 on 32 cores (r17), and 2.666 vs 1.159 at sf1 (r15).
   */
 object AsOf {
 
@@ -120,94 +131,6 @@ object AsOf {
       rightVals.map { case (_, o) => col("__match").getField(o).as(o) }).toIndexedSeq: _*)
   }
 
-  /** [[join]] through the CUSTOM physical operator
-    * ([[graft.plans.AsOfJoinExec]] — logical node + strategy +
-    * streaming merge exec) instead of the composed union+window plan.
-    * Same signature, same semantics, spec-proven identical output
-    * (AsOfPropertySpec differentials: both directions × tolerance ×
-    * inner/outer, plus same-µs duplicate refs). Each side sorts in its
-    * own exchange and the merge streams with O(1) state — no union
-    * blow-up, no per-row struct packing, no window frame machinery.
-    * Priced against the composed plan by the bench (x_asof_exec); the
-    * composed plan stays the default entry point until the numbers
-    * argue otherwise. Keys and timestamps must be non-null here (the
-    * window plan would instead group null keys into one partition).
-    */
-  /** Inputs at or below this combined ESTIMATED size take the composed
-    * union+window plan in [[autoJoin]]. The bench prices both plans
-    * every round: at sf0.1 the custom exec is ~25% ahead on the same
-    * shape but both are sub-second — inside one host-spread band, so
-    * the cheaper-to-maintain composed plan keeps the small-input
-    * default. Past this threshold the exec's advantages compound (each
-    * side sorts in its OWN exchange — no union of mismatched schemas,
-    * no per-row struct packing, O(1) merge state vs window frame
-    * machinery), which is when the dispatch flips.
-    */
-  val ExecByteThreshold: Long = 256L * 1024 * 1024
-
-  /** Cost-based as-of: picks [[join]] (composed union+window) or
-    * [[execJoin]] (custom streaming-merge exec) from optimized-plan
-    * statistics — the same driver-side, no-job plan choice Spark's
-    * broadcast-vs-shuffle decision and Rank's native-vs-two-pass
-    * guard make. Both paths are differentially spec-proven identical
-    * (AsOfPropertySpec), so the dispatch is a pure physical decision —
-    * with ONE contract caveat the caller must attest: the exec
-    * requires NON-NULL keys and timestamps, and the two plans
-    * genuinely differ on null keys (the window plan's partitionBy
-    * groups null keys together and can match null to null; SQL equi
-    * semantics — and the exec — never match null). `keysNonNull` is
-    * therefore explicit, not defaulted: pass true only when the key
-    * and ts columns are null-free (every tape in this engine), else
-    * false pins the composed plan regardless of size.
-    */
-  def autoJoin(left: DataFrame, right: DataFrame, key: String,
-               leftTs: String, rightTs: String,
-               rightVals: Seq[(String, String)],
-               keysNonNull: Boolean,
-               inner: Boolean = true,
-               toleranceSec: Option[Long] = None,
-               direction: String = "backward",
-               execByteThreshold: Long = ExecByteThreshold): DataFrame = {
-    val bytes =
-      left.queryExecution.optimizedPlan.stats.sizeInBytes +
-        right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (keysNonNull && bytes > execByteThreshold)
-      execJoin(left, right, key, leftTs, rightTs, rightVals, inner,
-        toleranceSec, direction)
-    else
-      join(left, right, key, leftTs, rightTs, rightVals, inner,
-        toleranceSec, direction)
-  }
-
-  def execJoin(left: DataFrame, right: DataFrame, key: String,
-               leftTs: String, rightTs: String,
-               rightVals: Seq[(String, String)],
-               inner: Boolean = true,
-               toleranceSec: Option[Long] = None,
-               direction: String = "backward"): DataFrame = {
-    require(direction == "backward" || direction == "forward",
-      s"direction must be backward|forward, got $direction")
-    val spark = left.sparkSession
-    org.apache.spark.sql.GraftPlanBridge.ensureStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
-    // fresh exprIds on the right via aliases — a self-as-of (trades vs
-    // quotes derived from one table) must not present one attribute id
-    // from both children
-    val r = right.select(col(key).as("__rk") +: col(rightTs).as("__rt") +:
-      rightVals.map { case (in, out) => col(in).as(out) }: _*)
-    val lPlan = org.apache.spark.sql.GraftPlanBridge.analyzed(left)
-    val rPlan = org.apache.spark.sql.GraftPlanBridge.analyzed(r)
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             n: String) = p.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"column $n not found"))
-    val node = graft.plans.AsOfJoinNode(lPlan, rPlan,
-      attr(lPlan, key), attr(lPlan, leftTs),
-      attr(rPlan, "__rk"), attr(rPlan, "__rt"),
-      toleranceSec.map(_ * 1000000L), forward = direction == "forward",
-      inner = inner)
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
-  }
-
   /** As-of join against a SMALL GLOBAL reference (no key): calendars,
     * published adjustment factors, index fixings — dims of at most a
     * few thousand rows matched by billions of query rows.
@@ -222,65 +145,43 @@ object AsOf {
     * embarrassingly parallel, cost |L|·|R| comparisons with |R| tiny
     * and in cache.
     *
-    * `right` must have distinct `rightTs` values — per key when `key`
-    * is set — (equal timestamps would make intervals overlap and
-    * duplicate matches) — dedupe to point-in-time-latest (q29 shape)
-    * first if the feed revises.
-    *
-    * `key`: optional equality key (e.g. currency, exchange). The dim
-    * is intervalized PER KEY and the key equality rides in the same
-    * broadcast range join. This is the right plan precisely when the
-    * key is LOW-cardinality (a handful of currencies): the keyed
-    * window as-of ([[join]]) would put each key's entire fact
-    * partition in one task, while here the fact side still never
-    * shuffles and never sorts.
+    * `right` must have distinct `rightTs` values (equal timestamps
+    * would make intervals overlap and duplicate matches) — dedupe to
+    * point-in-time-latest (q29 shape) first if the feed revises.
     *
     * The tiny-dim contract is ENFORCED, not assumed: the dim's
     * estimated size is checked against [[BroadcastDimByteLimit]]
     * (same stats-derived plan choice as Rank / EditDistance /
     * Graph.broadcastState) and an oversized dim falls back to the
-    * keyed union-window as-of — a perf degradation (low-cardinality
-    * keys serialize per-key partitions), never a driver/executor OOM.
-    * A caller that KNOWS the dim is model-sized (or wants the
-    * fallback priced, as the bench does) can pin the choice with
-    * `dimBroadcast`.
+    * window as-of — a perf degradation, never a driver/executor OOM.
+    * A caller that KNOWS the dim is model-sized can pin the choice
+    * with `dimBroadcast`.
     */
   def broadcastJoin(left: DataFrame, right: DataFrame,
                     leftTs: String, rightTs: String,
                     rightVals: Seq[(String, String)],
                     inner: Boolean = true,
-                    key: Option[String] = None,
                     dimBroadcast: Option[Boolean] = None): DataFrame = {
     if (!dimBroadcast.getOrElse(
         right.queryExecution.optimizedPlan.stats.sizeInBytes <=
           BroadcastDimByteLimit))
-      return windowFallback(left, right, leftTs, rightTs, rightVals,
-        inner, key)
+      return windowFallback(left, right, leftTs, rightTs, rightVals, inner)
     require(!left.columns.contains("__eff") && !left.columns.contains("__next"),
       "__eff/__next are reserved column names on the left side")
-    require(key.isEmpty || !left.columns.contains("__k"),
-      "__k is a reserved column name on the left side when key is set")
     rightVals.foreach { case (_, out) =>
       require(!left.columns.contains(out),
         s"output column '$out' already exists on the left side")
-      require(out != "__eff" && out != "__next" && out != "__k",
-        "__eff/__next/__k are reserved")
+      require(out != "__eff" && out != "__next", "__eff/__next are reserved")
     }
     // Single-partition window over the dim is fine: the dim is tiny by
     // contract (that's what makes the broadcast legal in the first
-    // place). With a key, the window partitions by it — same contract.
-    val w =
-      if (key.isDefined) Window.partitionBy(col("__k")).orderBy(col("__eff"))
-      else Window.orderBy(col("__eff"))
-    val iv = right.select(
-        (key.map(k => col(k).as("__k")).toSeq ++
-          (col(rightTs).as("__eff") +:
-            rightVals.map { case (in, out) => col(in).as(out) })): _*)
-      .withColumn("__next", lead(col("__eff"), 1).over(w))
+    // place).
+    val iv = right.select(col(rightTs).as("__eff") +:
+        rightVals.map { case (in, out) => col(in).as(out) }: _*)
+      .withColumn("__next", lead(col("__eff"), 1).over(Window.orderBy(col("__eff"))))
     val range = col(leftTs) >= col("__eff") &&
       (col("__next").isNull || col(leftTs) < col("__next"))
-    val cond = key.map(k => col(k) === col("__k") && range).getOrElse(range)
-    left.join(broadcast(iv), cond, if (inner) "inner" else "left_outer")
+    left.join(broadcast(iv), range, if (inner) "inner" else "left_outer")
       .select((left.columns.map(col) ++
         rightVals.map { case (_, o) => col(o) }).toIndexedSeq: _*)
   }
@@ -293,28 +194,22 @@ object AsOf {
     */
   val BroadcastDimByteLimit: Long = 64L * 1024 * 1024
 
-  /** The safe plan for a dim too big to broadcast: the keyed
-    * union-window as-of ([[join]]). With no key the union spreads on a
-    * constant — a single sorted partition, the honest cost of an
-    * as-of against a keyless dim that outgrew broadcast (there is no
-    * equality key to shuffle on; if this path is hot, pre-collapse the
-    * dim onto a bounded time grid instead). Outputs are identical to
-    * the broadcast plan under its distinct-(key, rightTs) contract —
-    * spec-proven, and priced by the bench's forced x_fx_window entry.
+  /** The safe plan for a dim too big to broadcast: the window as-of
+    * ([[join]]) on a constant key — a single sorted partition, the
+    * honest cost of an as-of against a keyless dim that outgrew
+    * broadcast (there is no equality key to shuffle on; if this path
+    * is hot, pre-collapse the dim onto a bounded time grid instead).
+    * Outputs are identical to the broadcast plan under its
+    * distinct-rightTs contract (spec-proven).
     */
   def windowFallback(left: DataFrame, right: DataFrame,
                      leftTs: String, rightTs: String,
                      rightVals: Seq[(String, String)],
-                     inner: Boolean = true,
-                     key: Option[String] = None): DataFrame =
-    key match {
-      case Some(k) => join(left, right, k, leftTs, rightTs, rightVals, inner)
-      case None =>
-        require(!left.columns.contains("__gk"),
-          "__gk is a reserved column name on the left side")
-        join(left.withColumn("__gk", lit(1)),
-            right.withColumn("__gk", lit(1)),
-            "__gk", leftTs, rightTs, rightVals, inner)
-          .drop("__gk")
-    }
+                     inner: Boolean = true): DataFrame = {
+    require(!left.columns.contains("__gk"),
+      "__gk is a reserved column name on the left side")
+    join(left.withColumn("__gk", lit(1)), right.withColumn("__gk", lit(1)),
+        "__gk", leftTs, rightTs, rightVals, inner)
+      .drop("__gk")
+  }
 }

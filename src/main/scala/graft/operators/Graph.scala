@@ -244,9 +244,7 @@ object Graph {
   /** The AQE-off sibling of `spark`, in sync with it. The sibling copies
     * every parent conf a session may set at first use (static and core
     * confs reject the set and stay shared through the SparkContext);
-    * each call then re-syncs [[layoutSyncedConfs]] and carries over any
-    * planner strategy the parent gained since (e.g. from
-    * `GraftPlanBridge.ensureStrategy`), idempotently.
+    * each call then re-syncs [[layoutSyncedConfs]].
     */
   private[graft] def layoutSession(
       spark: org.apache.spark.sql.SparkSession)
@@ -264,8 +262,6 @@ object Graph {
       }
     }
     layoutSyncedConfs.foreach(k => ns.conf.set(k, spark.conf.get(k)))
-    spark.experimental.extraStrategies
-      .foreach(org.apache.spark.sql.GraftPlanBridge.ensureStrategy(ns, _))
     ns
   }
 

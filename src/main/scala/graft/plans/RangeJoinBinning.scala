@@ -122,9 +122,9 @@ object RangeJoinBinning extends Rule[LogicalPlan] {
 
   /** Attach a [[RangeBinHint]] to the INTERVAL side of an upcoming
     * join and make sure the rule is installed on the frame's session
-    * (the AsOf `ensureStrategy` convention — works on sessions built
-    * without the extension config). The hint scopes to the nearest
-    * enclosing inner join of the wrapped frame.
+    * (idempotently — works on sessions built without the extension
+    * config). The hint scopes to the nearest enclosing inner join of
+    * the wrapped frame.
     */
   def withBinWidth(df: DataFrame, width: Long): DataFrame = {
     require(width > 0, s"bin width must be positive, got $width")

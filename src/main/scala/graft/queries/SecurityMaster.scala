@@ -866,24 +866,23 @@ object SecurityMaster {
     * four local currencies (user_id-derived), a per-currency rate feed
     * (signup events, deduped to point-in-time-latest per instant, the
     * q29 shape), each trade converted at the rate in effect AT trade
-    * time, rolled up per (currency, day). The as-of key here is
-    * LOW-cardinality (4 currencies) — exactly where the keyed window
-    * as-of would serialize each currency's entire fact partition into
-    * one task — so the resolve runs as [[AsOf.broadcastJoin]] with its
-    * new per-key intervalization: the rate dim broadcasts, the fact
-    * side never shuffles until the final (ccy, day) rollup. The rate
-    * dim here is FACT-DERIVED (grows with events), so the broadcast is
-    * legal only under the operator's stats guard: past
-    * [[AsOf.BroadcastDimByteLimit]] the operator itself degrades to
-    * the keyed window as-of (slower, never OOM) — the fallback is
-    * spec-proven identical and priced by the bench's x_fx_window
-    * forced entry via `dimBroadcast`. Per-row
-    * USD conversion is one IEEE double divide (bit-identical across
-    * engines); the division results are latticed to DECIMAL(28,12)
-    * before summing, so the rollup is order-independent exact.
+    * time, rolled up per (currency, day). The resolve is the keyed
+    * window as-of ([[AsOf.join]] on `ccy`). The as-of key is
+    * low-cardinality (4 currencies), which once argued for a keyed
+    * broadcast-interval plan that keeps the fact side unshuffled; it
+    * lost to this plan on every board (warm seconds, broadcast vs
+    * window: 0.687 vs 0.507 at sf0.1 on 32 cores (r17), 2.666 vs 1.159
+    * at sf1 (r15)) and was deleted. At sf0.1 on 4 cores the old
+    * broadcast plan, with its fact side spread for compute, ran 1.109 s
+    * warm in 6 jobs and 2.35 s executor CPU; this plan runs 0.540 s in
+    * 3 jobs and 0.38 s CPU, shuffling 22% more bytes because the fact
+    * side now moves; at a ScaleUp sf1 on 4 cores, 6.2–6.8 s and 18 s
+    * CPU became 1.3–1.5 s and 2 s CPU. Per-row USD conversion is one
+    * IEEE double divide (bit-identical across engines); the division
+    * results are latticed to DECIMAL(28,12) before summing, so the
+    * rollup is order-independent exact.
     */
-  def q148FxNormalize(spark: SparkSession, dir: String,
-                      dimBroadcast: Option[Boolean] = None): DataFrame = {
+  def q148FxNormalize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val ev = Tables.events(spark, dir)
@@ -893,18 +892,10 @@ object SecurityMaster {
     val rates = ev.filter($"event_type" === "signup" && $"value" > 0)
       .groupBy($"ccy", $"ts")
       .agg(max_by($"value", $"event_id").as("rate"))
-    // spread the streamed side: the broadcast as-of probe is
-    // compute-dense here (each trade range-scans its currency's whole
-    // rate curve — only 4 keys), and the purchase slice arrives as one
-    // parquet split, serializing that compute into a single task
-    // (see Ann.spreadForCompute — no-op once the slice has a split
-    // per core)
-    val trades = graft.operators.Ann.spreadForCompute(
-      ev.filter($"event_type" === "purchase")
-        .select($"event_id", $"ccy", $"ts", $"value".as("amount")))
-    AsOf.broadcastJoin(trades, rates, leftTs = "ts", rightTs = "ts",
-        rightVals = Seq("rate" -> "rate"), inner = true, key = Some("ccy"),
-        dimBroadcast = dimBroadcast)
+    val trades = ev.filter($"event_type" === "purchase")
+      .select($"event_id", $"ccy", $"ts", $"value".as("amount"))
+    AsOf.join(trades, rates, key = "ccy", leftTs = "ts", rightTs = "ts",
+        rightVals = Seq("rate" -> "rate"), inner = true)
       .groupBy($"ccy", date_trunc("day", $"ts").as("day"))
       .agg(count(lit(1)).as("n_trades"),
         decRound(sum(($"amount" / $"rate").cast(DecimalType(28, 12))), 4)

@@ -14,17 +14,11 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** Bridge to the `private[sql]` session FunctionRegistry, so graft can
-  * register its native expressions as SQL functions on an ALREADY
-  * RUNNING session (the extension path in graft.plans.GraftExtensions
-  * covers session construction; this covers notebooks/REPLs that got
-  * their session handed to them).
-  */
-/** Bridge to `private[sql]` Dataset/plan plumbing for the custom
-  * AsOfJoinNode: build a DataFrame from a hand-assembled logical plan,
-  * read a frame's analyzed plan, and install an extra planner strategy
-  * on a live session (the extension-config path in GraftExtensions
-  * covers session construction).
+/** Bridge to `private[sql]` Dataset/plan plumbing: read a frame's
+  * analyzed plan and build a DataFrame from a logical plan on a given
+  * session. `Graph.checkpointKeepLayout` re-binds a plan to its AQE-off
+  * sibling session and back; `RangeJoinBinning.withBinWidth` wraps a
+  * frame's plan in its bin-width hint node.
   */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession,
@@ -33,15 +27,14 @@ object GraftPlanBridge {
 
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
-  def ensureStrategy(spark: SparkSession,
-                     s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(s))
-      exp.extraStrategies = exp.extraStrategies :+ s
-  }
 }
 
+/** Bridge to the `private[sql]` session FunctionRegistry, so graft can
+  * register its native expressions as SQL functions on an ALREADY
+  * RUNNING session (the extension path in graft.plans.GraftExtensions
+  * covers session construction; this covers notebooks/REPLs that got
+  * their session handed to them).
+  */
 object GraftRegistryBridge {
   def registerFunction(
       spark: SparkSession,

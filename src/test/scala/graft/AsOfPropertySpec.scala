@@ -140,152 +140,34 @@ class AsOfPropertySpec extends SparkTestBase {
     assert(smallPlan.contains("__eff"), s"small dim lost broadcast:\n$smallPlan")
   }
 
-  test("keyed broadcastJoin matches the keyed window as-of over 20 random cases") {
-    // the r7 `key` extension: per-key intervalization must be
-    // indistinguishable from AsOf.join on the same key — including
-    // keys present on only one side and duplicate left timestamps
+  test("as-of join drops left-only keys when inner, keeps them null when outer") {
+    // keys k0..k3 on both sides, k4 on the left only; duplicate left
+    // timestamps collide freely
     for (seed <- 0 until 10; inner <- Seq(true, false)) {
       val rnd = new scala.util.Random(seed + 9000)
       val left = (0 until 60).map { i =>
         (s"k${rnd.nextInt(5)}", ts(rnd.nextInt(1000).toLong), i.toLong)
       }
-      // unique (key, rts) by contract
       val right = (for (k <- 0 until 4) yield
         rnd.shuffle((0 until 1000).toList).take(8)
           .map(t => (s"k$k", ts(t.toLong), rnd.nextInt(100).toDouble))
         ).flatten
-      val viaBroadcast = AsOf.broadcastJoin(
-          left.toDF("k", "ts", "row_id"), right.toDF("k", "rts", "v"),
-          "ts", "rts", Seq("v" -> "v"), inner = inner, key = Some("k"))
-        .select($"row_id", $"v").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-        .toMap
-      val viaWindow = AsOf.join(
+      val got = AsOf.join(
           left.toDF("k", "ts", "row_id"), right.toDF("k", "rts", "v"),
           key = "k", leftTs = "ts", rightTs = "rts",
           rightVals = Seq("v" -> "v"), inner = inner)
         .select($"row_id", $"v").collect()
         .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         .toMap
-      assert(viaBroadcast == viaWindow,
-        s"seed=$seed inner=$inner:\n bc=$viaBroadcast\n win=$viaWindow")
-      // the keyed oversized-dim fallback routes through the same keyed
-      // window as-of — pin the forced path and prove it too
-      val viaForcedFallback = AsOf.broadcastJoin(
-          left.toDF("k", "ts", "row_id"), right.toDF("k", "rts", "v"),
-          "ts", "rts", Seq("v" -> "v"), inner = inner, key = Some("k"),
-          dimBroadcast = Some(false))
-        .select($"row_id", $"v").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-        .toMap
-      assert(viaForcedFallback == viaWindow,
-        s"seed=$seed inner=$inner: forced fallback != window")
-      // k4 rows exist on the left only: inner drops them, outer keeps
+      val expected = left.map { case (k, lts, id) =>
+        val m = right.filter { case (rk, rts, _) => rk == k && !rts.after(lts) }
+        (id, if (m.isEmpty) None else Some(m.maxBy(_._2.getTime)._3))
+      }.filter { case (_, best) => !inner || best.isDefined }.toMap
+      assert(got == expected, s"seed=$seed inner=$inner:\n got=$got\n exp=$expected")
       val k4 = left.filter(_._1 == "k4").map(_._3).toSet
-      if (inner) assert(k4.forall(!viaBroadcast.contains(_)))
-      else assert(k4.forall(id => viaBroadcast.get(id).contains(None)))
+      assert(k4.nonEmpty, s"seed=$seed: no left-only key drawn")
+      if (inner) assert(k4.forall(!got.contains(_)))
+      else assert(k4.forall(id => got.get(id).contains(None)))
     }
-  }
-
-  test("custom AsOfJoinExec equals the union+window plan across all regimes") {
-    // the option-(c) operator must be output-identical to the composed
-    // plan it prices against — every (direction, tolerance, inner)
-    // combination over the same seeded random cases
-    for (seed <- 0 until 6; inner <- Seq(true, false);
-         tol <- Seq(None, Some(50L), Some(0L));
-         direction <- Seq("backward", "forward")) {
-      val rnd = new scala.util.Random(seed)
-      val nKeys = 1 + rnd.nextInt(4)
-      val left = (0 until 30).map { i =>
-        (rnd.nextInt(nKeys).toLong, ts(rnd.nextInt(1000).toLong), i.toLong)
-      }
-      val right = rnd.shuffle((0 until 1000).toList).take(25).map { t =>
-        (rnd.nextInt(nKeys).toLong, ts(t.toLong),
-          if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(100).toDouble))
-      }.groupBy(r => (r._1, r._2)).map(_._2.head).toSeq
-      val lDf = left.toDF("k", "ts", "row_id")
-      val rDf = right.toDF("k", "rts", "v")
-      def collectMap(df: org.apache.spark.sql.DataFrame) =
-        df.select($"row_id", $"v").collect()
-          .map(r => (r.getLong(0),
-            if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-      val viaExec = collectMap(AsOf.execJoin(lDf, rDf, "k", "ts", "rts",
-        Seq("v" -> "v"), inner = inner, toleranceSec = tol,
-        direction = direction))
-      val viaWindow = collectMap(AsOf.join(lDf, rDf, "k", "ts", "rts",
-        Seq("v" -> "v"), inner = inner, toleranceSec = tol,
-        direction = direction))
-      assert(viaExec == viaWindow,
-        s"seed=$seed inner=$inner tol=$tol dir=$direction:\n" +
-          s" exec=$viaExec\n win=$viaWindow")
-    }
-  }
-
-  test("custom AsOfJoinExec resolves same-instant duplicate refs to the greatest values") {
-    // two refs at the SAME (key, ts): both plans must pick the max
-    // value tuple, both directions — the tie rule lives in the exec's
-    // required child ordering, so this is the case that would break
-    // first if that ordering regressed
-    val lDf = Seq((1L, ts(100), 0L), (1L, ts(50), 1L)).toDF("k", "ts", "row_id")
-    val rDf = Seq((1L, ts(100), 10.0), (1L, ts(100), 99.0), (1L, ts(30), 5.0))
-      .toDF("k", "rts", "v")
-    for (direction <- Seq("backward", "forward")) {
-      val exec = AsOf.execJoin(lDf, rDf, "k", "ts", "rts", Seq("v" -> "v"),
-        direction = direction).select($"row_id", $"v")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val win = AsOf.join(lDf, rDf, "k", "ts", "rts", Seq("v" -> "v"),
-        direction = direction).select($"row_id", $"v")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(exec == win, s"$direction: exec=$exec win=$win")
-      assert(exec(0L) == 99.0, s"$direction tie must pick the greatest value")
-    }
-  }
-
-  test("custom AsOfJoinExec handles the self-as-of q21 shape on real events") {
-    // trades and quotes derive from ONE table: the execJoin alias
-    // projection must keep the children's attribute ids disjoint
-    val ev = Tables.events(spark, sf)
-    val trades = ev.filter($"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"ts")
-    val quotes = ev.filter($"event_type" === "view")
-      .select($"user_id", $"ts", $"value")
-    val exec = AsOf.execJoin(trades, quotes, "user_id", "ts", "ts",
-      Seq("value" -> "quote"), inner = true)
-      .select($"event_id", $"quote").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val win = AsOf.join(trades, quotes, "user_id", "ts", "ts",
-      Seq("value" -> "quote"), inner = true)
-      .select($"event_id", $"quote").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(exec == win && exec.nonEmpty)
-  }
-
-  test("autoJoin dispatches by statistics and honors the null-key attestation") {
-    val ev = Tables.events(spark, sf)
-    val trades = ev.filter($"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"ts", $"value")
-    val quotes = ev.filter($"event_type" === "signup")
-      .select($"user_id", $"ts", $"value")
-    def planOf(threshold: Long, nonNull: Boolean) =
-      AsOf.autoJoin(trades, quotes, "user_id", "ts", "ts",
-        Seq("value" -> "quote"), keysNonNull = nonNull,
-        execByteThreshold = threshold)
-    // big-by-stats + attested non-null -> the custom exec plans
-    val execPlan = planOf(0L, nonNull = true)
-    assert(execPlan.queryExecution.executedPlan.toString
-      .contains("AsOfJoin"), "expected the custom exec above threshold")
-    // small-by-stats keeps the composed plan; so does a null-unsafe key
-    for (p <- Seq(planOf(Long.MaxValue, nonNull = true),
-        planOf(0L, nonNull = false))) {
-      assert(!p.queryExecution.executedPlan.toString.contains("AsOfJoin"),
-        "expected the composed union+window plan")
-    }
-    // and both dispatch branches return the same rows
-    val a = execPlan.select($"event_id", $"quote").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = planOf(Long.MaxValue, nonNull = true)
-      .select($"event_id", $"quote").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a == b && a.nonEmpty)
   }
 }

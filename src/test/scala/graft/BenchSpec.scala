@@ -46,7 +46,7 @@ class BenchSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("bench_spec")
     val names = try Bench.registry(spark, sf, tmp).map(_.name)
       finally Tables.deleteTree(tmp.toString)
-    assert(names.size == SparkEntry.queries.size + 24)
+    assert(names.size == SparkEntry.queries.size + 22)
     assert(names.distinct.size == names.size)
     val records = names.map(Bench.Record(_, Left("failed")))
     val line = Bench.lastLine(records, "0.1", "results/bench_sf0.1_latest.json")

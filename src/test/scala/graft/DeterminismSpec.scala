@@ -39,4 +39,36 @@ class DeterminismSpec extends SparkTestBase {
       assert(bad.isEmpty, s"layout-dependent queries:\n${bad.mkString("\n")}")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  /** Every registered query that resolves through [[operators.AsOf]]:
+    * the keyed window plan (`join`) or the keyless broadcast-interval
+    * plan (`broadcastJoin`, q98).
+    */
+  private val asOfQueries = Seq("q21_asof_join", "q59_asof_tolerance",
+    "q89_asof_forward", "q98_factor_adjust", "q136_corp_actions",
+    "q143_golden_master", "q145_factor_decomposition", "q148_fx_normalize",
+    "q155_markout")
+
+  test("as-of queries agree across default, AQE off and no auto-broadcast") {
+    asOfQueries.foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.analyzed.toString
+      assert(plan.contains("__rv") || plan.contains("__eff"), s"$name: no as-of in plan")
+    }
+    def under(k: String, v: String, name: String) = {
+      val prev = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try canon(name)
+      finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val bad = asOfQueries.flatMap { name =>
+      val base = canon(name)
+      Seq("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1").flatMap { case (k, v) =>
+        val c = under(k, v, name)
+        if (c == base) None
+        else Some(s"$name with $k=$v: ${base._1} rows vs ${c._1} rows")
+      }
+    }
+    assert(bad.isEmpty, s"setting-dependent as-of queries:\n${bad.mkString("\n")}")
+  }
 }

@@ -29,16 +29,22 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("as-of resolves same-instant reference duplicates to the max value, both directions") {
-    val l = Seq((1L, ts("2024-01-01 10:00:00"), "x")).toDF("k", "ts", "tag")
+    // "x" sits on the tied instant; "y" reaches it across a gap going
+    // forward and an older single ref going backward
+    val l = Seq((1L, ts("2024-01-01 10:00:00"), "x"),
+      (1L, ts("2024-01-01 09:00:00"), "y")).toDF("k", "ts", "tag")
     val r = Seq(
       (1L, ts("2024-01-01 10:00:00"), 5.0),
       (1L, ts("2024-01-01 10:00:00"), 9.0), // same instant: greatest struct wins
-      (1L, ts("2024-01-01 10:00:00"), 7.0)
+      (1L, ts("2024-01-01 10:00:00"), 7.0),
+      (1L, ts("2024-01-01 08:00:00"), 3.0)
     ).toDF("k", "rts", "v")
-    for (dir <- Seq("backward", "forward")) {
+    for ((dir, expected) <- Seq("backward" -> Map("x" -> 9.0, "y" -> 3.0),
+        "forward" -> Map("x" -> 9.0, "y" -> 9.0))) {
       val out = AsOf.join(l, r, "k", "ts", "rts", Seq("v" -> "v"),
-        inner = true, direction = dir).select("v").as[Double].collect()
-      assert(out.toSeq == Seq(9.0), s"direction=$dir got ${out.toSeq}")
+        inner = true, direction = dir).select("tag", "v").as[(String, Double)]
+        .collect().toMap
+      assert(out == expected, s"direction=$dir got $out")
     }
   }
 

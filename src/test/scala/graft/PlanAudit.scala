@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Regenerates PLANS.md: formatted physical plans for headline queries,
-  * the evidence behind SURVEY §5's scale claims. Run with
-  * `sbt "Test/runMain graft.PlanAudit"` after plan-shape changes.
+/** Regenerates the generated block of PLANS.md in the working
+  * directory: formatted physical plans for headline queries, the
+  * evidence behind SURVEY §5's scale claims. Run with
+  * `sbt "Test/runMain graft.PlanAudit"` after plan-shape changes. The
+  * block runs from the top of the file to [[EndMarker]]; the
+  * hand-written notes after the marker are kept as they are.
   */
 object PlanAudit {
   val picks: Seq[(String, String)] = Seq(
@@ -18,12 +21,15 @@ object PlanAudit {
     "q117_cross_corr" -> "fact aggregates once; the pair self-join broadcasts the tiny daily frame",
     "q129_abc_class" -> "decimal-exact cumulative classification over the reduced key frame",
     "q147_fifo_pnl" -> "FIFO lot matching = user-keyed cumsum windows + one equi-join with a range residual",
-    "q148_fx_normalize" -> "keyed broadcast-interval as-of: the fact side never shuffles before the (ccy, day) rollup",
+    "q148_fx_normalize" -> "low-cardinality keyed as-of = the same union + ONE ccy exchange + window; the (ccy, day) rollup reuses it",
     "q155_markout" -> "3 markout horizons ride ONE union+window tape exchange",
     "q158_source_kl" -> "closed-form KL remainder: token-keyed join + 3 broadcast scalars, no source x vocab cross product",
     "q170_kyle_lambda" -> "tick regression: diff, sign carry, and co-moment rollup on ONE tape exchange",
     "q175_triangle_census" -> "degree-oriented wedge join: triangles without a hub-degree blow-up",
   )
+
+  /** Last line of the generated block. */
+  val EndMarker = "<!-- end of PlanAudit output; hand-written notes below are kept on regeneration -->"
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -47,9 +53,17 @@ object PlanAudit {
         org.apache.spark.sql.execution.FormattedMode).trim)
       sb.append("\n```\n")
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"[audit] wrote PLANS.md (${picks.size} plans)")
+    val out = java.nio.file.Paths.get("PLANS.md")
+    // keep what follows the marker; refuse a file without one rather
+    // than overwrite its notes
+    val notes = if (!java.nio.file.Files.exists(out)) "\n" else {
+      val text = java.nio.file.Files.readString(out)
+      val at = text.indexOf(EndMarker)
+      require(at >= 0, s"$out has no end marker ($EndMarker); not overwriting it")
+      text.substring(at + EndMarker.length)
+    }
+    java.nio.file.Files.writeString(out, sb.toString + "\n" + EndMarker + notes)
+    println(s"[audit] wrote the generated block of ${out.toAbsolutePath} (${picks.size} plans)")
     spark.stop()
   }
 }

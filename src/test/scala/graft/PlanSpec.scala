@@ -22,6 +22,10 @@ class PlanSpec extends SparkTestBase {
       assert(count(p, "Exchange") == 1, s"$q: expected 1 exchange\n$p")
       assert(count(p, "NestedLoop") == 0, s"$q: nested-loop join crept in")
     }
+    // q148's low-cardinality currency key takes the same keyed window
+    // plan; its rate dedup adds the second exchange
+    val q148 = plan("q148_fx_normalize")
+    assert(count(q148, "NestedLoop") == 0, s"q148: nested-loop join crept in\n$q148")
   }
 
   test("q144 and q113 read events once; q153 and q135 run on one exchange") {
